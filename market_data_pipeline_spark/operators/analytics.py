@@ -1084,11 +1084,15 @@ def new_vs_repeat_revenue(orders: DataFrame) -> DataFrame:
     date, NULL months skipped by MIN exactly like the old min(date)
     aggregate), then the month rollup sums the group sums — long
     arithmetic throughout, so totals are bit-identical to the per-row
-    fold. Returns (month, n_orders, n_new_customer_orders,
-    new_customer_revenue, new_revenue_share)."""
+    fold. Orders with a NULL custkey are dropped before the window, as
+    the old inner join (and the oracle's) dropped them; the window would
+    otherwise pool them into one pseudo-customer. Returns (month,
+    n_orders, n_new_customer_orders, new_customer_revenue,
+    new_revenue_share)."""
     mo = F.date_format("o_orderdate", "yyyy-MM")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    per_cm = orders.groupBy(F.col("o_custkey"), mo.alias("month")).agg(
+    keyed = orders.filter(F.col("o_custkey").isNotNull())
+    per_cm = keyed.groupBy(F.col("o_custkey"), mo.alias("month")).agg(
         F.count(F.lit(1)).cast("long").alias("_n"),
         F.sum(cents).alias("_c"),
     )

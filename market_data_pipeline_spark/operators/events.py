@@ -290,10 +290,12 @@ def retention_cohorts(
     as a MIN window over the user partition, then one count-distinct
     shuffle on (cohort, offset). The
     week offset is exact integer arithmetic on Monday-truncated dates, so
-    the result hash-matches any engine with ISO date_trunc.
+    the result hash-matches any engine with ISO date_trunc. NULL users
+    are dropped before the window, as the old inner join (and the
+    oracle's) dropped them.
     Returns (cohort_week, week_offset, n_users).
     """
-    weeks = events.select(
+    weeks = events.filter(F.col(user_col).isNotNull()).select(
         F.col(user_col),
         F.date_trunc("week", F.col(ts_col)).cast("date").alias("week"),
     ).distinct()

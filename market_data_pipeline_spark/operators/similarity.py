@@ -775,13 +775,16 @@ def kmeans_lloyd_exact(
     ``knn_ivf(..., centroids=...)`` unchanged.
     """
     spark = embeddings.sparkSession
-    schema = f"{id_col} long, {vec_col} array<double>"
+    # vec_col is a column NAME: quoted (backticks doubled) wherever it is
+    # parsed — as a column reference, in the schema, in the SQL text
+    vc = "`" + vec_col.replace("`", "``") + "`"
+    schema = f"{id_col} long, {vc} array<double>"
     draw = F.md5(F.concat(F.lit(f"{seed}-"), F.col(id_col).cast("string")))
     src = embeddings.filter(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
+        F.col(vc).isNotNull() & (F.size(F.col(vc)) > 0)
     ).select(
         F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(vec_col),
+        F.transform(F.col(vc), lambda x: x.cast("double")).alias(vec_col),
     )
     if sample_hex is not None and sample_hex < 16:
         hexdigits = [format(i, "x") for i in range(sample_hex)]
@@ -823,7 +826,6 @@ def kmeans_lloyd_exact(
         exploded = sample  # unpersisted in the finally
         d9 = _sql_dlit(1e9)
         zero = "CAST(0 AS DECIMAL(38,0))"
-        vc = f"`{vec_col}`"
         for _ in range(max_iter):
             scored_sql = ",".join(
                 "named_struct('sq',aggregate("
@@ -856,12 +858,12 @@ def kmeans_lloyd_exact(
             # requiredChildOutput as a computed attribute: once per
             # input row.
             assigned = sample.select(
-                F.expr(best_sql).alias("_cid"), F.col(vec_col)
+                F.expr(best_sql).alias("_cid"), F.col(vc)
             )
             per_dim = (
                 assigned.select(
                     "_cid",
-                    F.posexplode(F.col(vec_col)).alias("_dim", "_v"),
+                    F.posexplode(F.col(vc)).alias("_dim", "_v"),
                 )
                 .groupBy("_cid", "_dim")
                 .agg(

@@ -41,10 +41,7 @@ from market_data_pipeline_spark.operators import (
 )
 from market_data_pipeline_spark.operators.analytics import fp_sum
 from market_data_pipeline_spark.operators.setops import union_relaxed
-from market_data_pipeline_spark.sources.catalog import (
-    ensure_session_defaults,
-    load_table,
-)
+from market_data_pipeline_spark.sources.catalog import load_table, staged_frame
 
 # Scratch roots created by the pipeline composites, removed at
 # interpreter exit: each invocation needs a FRESH empty master dir (the
@@ -88,60 +85,47 @@ def price_frame(
     — at 100 TB that is the difference between scanning the table and
     scanning the few row groups holding those keys.
 
-    The FULL-universe frame (symbols=None) is memoized per (session,
-    sf_dir) behind a lazy localCheckpoint — the returns_frame pattern
-    (r9, measured 2x) extended to its upstream (r10): ~54 registry
-    queries derive from this exact stage, and re-running the lineitem
-    scan + (symbol, day) aggregation per query is recompute, not
-    measurement. This is the "stage the derived fact once" shape; on a
-    cluster the same role is played by materializing the price fact as
-    a table (storage/table.py). Symbol-FILTERED calls bypass the cache
-    on purpose: at 100 TB you want the pushed-down key scan, not a
-    materialization of the whole universe — but their PLAN (which embeds
-    the pushed-down IN-list) is memoized per (session, sf_dir, symbols)
-    since r12: dozens of ts/a queries rebuild byte-identical filtered
+    The FULL-universe frame (symbols=None) is staged behind a lazy
+    localCheckpoint — the returns_frame pattern (r9, measured 2x)
+    extended to its upstream (r10): ~54 registry queries derive from
+    this exact stage, and re-running the lineitem scan + (symbol, day)
+    aggregation per query is recompute, not measurement. This is the
+    "stage the derived fact once" shape; on a cluster the same role is
+    played by materializing the price fact as a table
+    (storage/table.py). Symbol-FILTERED calls are not checkpointed on
+    purpose: at 100 TB you want the pushed-down key scan, not a
+    materialization of the whole universe — but their PLAN (which
+    embeds the pushed-down IN-list) is memoized per symbols list since
+    r12: dozens of ts/a queries rebuild byte-identical filtered
     aggregations, ~0.1s of py4j/analysis each, and a shared lazy plan
-    object re-executes the same pushed scan every time (no data cached)."""
-    # re-pin session defaults even on a cache HIT: the hit path skips
-    # load_table, but the CALLER's downstream tz-aware expressions still
-    # resolve against the session zone at analysis time (latent until a
-    # batch ordering populated the cache before the session-contract
-    # tests flipped the zone — r11)
-    ensure_session_defaults(spark)
-    if symbols is not None:
-        _purge_dead_sessions(_PRICE_PLAN_CACHE)
-        pkey = (spark, sf_dir, tuple(symbols))
-        plan = _PRICE_PLAN_CACHE.pop(pkey, None)
-        if plan is None:
-            plan = _price_agg(spark, sf_dir, symbols)
-        _PRICE_PLAN_CACHE[pkey] = plan
-        _bound_cache(_PRICE_PLAN_CACHE, max_entries=16)
-        return plan
-    _purge_dead_sessions(_PRICE_CACHE)
-    key = (spark, sf_dir)
-    # pop-and-reinsert: a hit refreshes LRU recency (dict order)
-    frame = _PRICE_CACHE.pop(key, None)
-    if frame is None:
-        frame = _price_agg(spark, sf_dir, None).localCheckpoint(eager=False)
-    _PRICE_CACHE[key] = frame
-    _bound_cache(_PRICE_CACHE)
-    return frame
+    object re-executes the same pushed scan every time (no data cached).
 
-
-def _price_agg(
-    spark: SparkSession, sf_dir: str, symbols: list[str] | None
-) -> DataFrame:
-    """The raw declarative price aggregation — what price_frame stages.
-    Kept separate so the plan-quality tests can assert the UNCACHED
-    shape (key pushdown reaching the parquet footer, 4-column pruning)
-    independently of the session cache."""
+    Both memos go through :func:`staged_frame` with the current
+    lineitem relation as input, so a rewritten lineitem is re-staged on
+    the next call; nothing needs clearing."""
     li = load_table(spark, sf_dir, "lineitem")
+    if symbols is not None:
+        return staged_frame(
+            spark, sf_dir, "price_symbols", (li,),
+            lambda li: _price_agg(li, symbols), args=tuple(symbols),
+        )
+    return staged_frame(
+        spark, sf_dir, "price", (li,), lambda li: _price_agg(li, None),
+        checkpoint=True,
+    )
+
+
+def _price_agg(li: DataFrame, symbols: list[str] | None) -> DataFrame:
+    """The raw declarative price aggregation over ``lineitem`` — what
+    price_frame stages. Kept separate so the plan-quality tests can
+    assert the UNCACHED shape (key pushdown reaching the parquet footer,
+    4-column pruning) independently of the memo."""
     if symbols is not None:
         li = li.filter(F.col("l_partkey").isin([int(s) for s in symbols]))
     else:
         # full-universe staging only (guide §2.5 input under-split): the
         # single-row-group testdata scans as ONE task, serializing the
-        # (symbol, day) decimal partial agg that the session cache
+        # (symbol, day) decimal partial agg that price_frame
         # materializes; one hash exchange spreads it (measured 2.67 ->
         # 1.15 s interleaved at sf0.1) and no-ops on multi-partition
         # inputs. The FILTERED path keeps the bare pushed-key scan —
@@ -160,81 +144,6 @@ def _price_agg(
         .cast("double")
         .alias("amount"),
     )
-
-
-_PRICE_CACHE: dict = {}
-# (session, sf_dir, symbols-tuple) -> lazy filtered-price PLAN (r12).
-# Holds no checkpoint/data — eviction or clearing only costs a rebuild.
-_PRICE_PLAN_CACHE: dict = {}
-
-
-_FRAME_CACHE_MAX_DIRS = 4  # sf_dirs kept PER SESSION per cache; LRU eviction
-
-# Eviction releases only the PYTHON REFERENCE — deliberately. Dropping
-# the dict entry releases the last strong ref to the checkpointed frame;
-# Spark's ContextCleaner then unpersists the weak-reachable RDD blocks
-# on the next driver GC (<= 15s away under the session default). A
-# forced unpersist here would be either a no-op (queryExecution().toRdd()
-# on a checkpointed Dataset returns a DERIVED wrapper, not the persisted
-# internal RDD — r11 review) or unsafe (the internal RDD may still back
-# an unmaterialized dependent frame, e.g. a cached returns_frame built
-# on an evicted price_frame; reference-tracked cleanup can never free
-# blocks something still points at).
-
-
-def _purge_dead_sessions(cache: dict) -> None:
-    """Evict cache entries keyed by a stopped SparkSession — a process
-    that creates several sessions over its lifetime (test harnesses,
-    in-process driver restarts) must not accumulate checkpointed frames
-    of dead sessions (r10 review). Runs BEFORE the cache lookup: a dead
-    entry must never be served, and purging after the lookup turned a
-    stopped-session call into a bare KeyError (r11 review). Cheap: the
-    caches hold a handful of keys."""
-    for key in list(cache):
-        sess = key[0]
-        try:
-            dead = sess.sparkContext._jsc is None
-        except Exception:
-            dead = True
-        if dead:
-            del cache[key]
-
-
-def _bound_cache(cache: dict, max_entries: int | None = None) -> None:
-    """Bound live entries to ``max_entries`` (default
-    ``_FRAME_CACHE_MAX_DIRS``) PER SESSION, evicting least-recently-used
-    first (hits refresh recency by re-inserting the key) — one
-    long-lived session touching many directories (sweep clones,
-    tmp_path tests) must not accumulate a checkpoint per directory (r10
-    advice), and one session's churn must not evict another live
-    session's hot frame (r11 review). Runs AFTER insertion so the bound
-    holds at return. Plan-only caches (no checkpoint blocks behind the
-    entries) pass a higher cap — an evicted plan only costs a rebuild,
-    but the r12 plan memos exist precisely to avoid those rebuilds."""
-    cap = _FRAME_CACHE_MAX_DIRS if max_entries is None else max_entries
-    per_sess: dict = {}
-    for key in cache:
-        per_sess.setdefault(id(key[0]), []).append(key)
-    for keys in per_sess.values():
-        for key in keys[: max(0, len(keys) - cap)]:
-            del cache[key]
-
-
-def clear_frame_caches() -> None:
-    """Drop the memoized derived-frame checkpoints (price_frame,
-    returns_frame). The caches assume the source tables under a given
-    (session, sf_dir) are IMMUTABLE — true for the driver gate, bench,
-    and sweeps (each adversarial clone gets its own directory), false
-    for property tests that rewrite a tmp_path table between hypothesis
-    examples. Any test that rewrites a table it already queried must
-    call this (found the hard way in r10: a stale staged price frame
-    served example 1's lineitem to example 2). Dropping the references
-    is the whole release — see the eviction note above _purge_dead_sessions."""
-    _PRICE_CACHE.clear()
-    _RETURNS_CACHE.clear()
-    _TS_SERIES_CACHE.clear()
-    _MASTER_CACHE.clear()
-    _PRICE_PLAN_CACHE.clear()
 
 
 # r13 VERDICT #8: a query's CLOSING global sort is presentation order
@@ -275,32 +184,30 @@ def materialize_then_sort(df, *keys):
     return df.localCheckpoint(eager=False).orderBy(*keys)
 
 
-_RETURNS_CACHE: dict = {}
-
-
 def returns_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized per-symbol 1-day-return frame: ``price_frame`` (non-null
+    """Staged per-symbol 1-day-return frame: ``price_frame`` (non-null
     closes) plus ``ret`` = close/prev_close - 1 over the per-series lag
-    window, lazily localCheckpoint-ed and cached per (session, sf_dir).
+    window, behind a lazy localCheckpoint.
 
     a12 / ts25 / ts26 are all full-universe passes over this exact
-    stage; without the cache each re-runs the lineitem scan, the price
+    stage; without the memo each re-runs the lineitem scan, the price
     aggregation, and (for a12/ts26) the same lag window. The checkpoint
     materializes once on first action and later queries read its blocks
-    (the ``_symbol_totals``-reuse pattern r9 measured at 2x)."""
-    ensure_session_defaults(spark)  # cache-hit path skips load_table
-    _purge_dead_sessions(_RETURNS_CACHE)
-    key = (spark, sf_dir)
-    frame = _RETURNS_CACHE.pop(key, None)  # hit refreshes LRU recency
-    if frame is None:
-        p = price_frame(spark, sf_dir).filter(F.col("close_price").isNotNull())
+    (the ``_symbol_totals``-reuse pattern r9 measured at 2x). Its input
+    is the staged price frame itself, so a lineitem rewrite, which
+    re-stages that frame, re-stages this one too."""
+
+    def build(price: DataFrame) -> DataFrame:
+        p = price.filter(F.col("close_price").isNotNull())
         w = Window.partitionBy("symbol").orderBy("trade_date")
-        frame = p.withColumn(
+        return p.withColumn(
             "ret", F.col("close_price") / F.lag("close_price").over(w) - 1
-        ).localCheckpoint(eager=False)
-    _RETURNS_CACHE[key] = frame
-    _bound_cache(_RETURNS_CACHE)
-    return frame
+        )
+
+    return staged_frame(
+        spark, sf_dir, "returns", (price_frame(spark, sf_dir),), build,
+        checkpoint=True,
+    )
 
 
 def index_returns_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,35 +243,23 @@ price AS (
 )"""
 
 
-_MASTER_CACHE: dict = {}
-
-
 def master_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symbol dimension derived from part, with deterministic
     listing/delisting attributes mirroring stock_master
     (reference: src/clickhouse/stock_master.py:18-30; invariant
     is_active=0 <=> delisting_date set, FIXTURES.md A1).
 
-    The PLAN is memoized per (session, sf_dir) — 20 registry queries
-    (x2 bench reps) rebuild this byte-identical dim projection; the memo
-    holds the lazy plan only (no checkpoint, no data): execution and
-    column pruning behave exactly as a fresh build (r12, guide §1.2)."""
-    ensure_session_defaults(spark)
-    _purge_dead_sessions(_MASTER_CACHE)
-    ckey = (spark, sf_dir)
-    hit = _MASTER_CACHE.pop(ckey, None)
-    if hit is not None:
-        _MASTER_CACHE[ckey] = hit
-        return hit
+    The PLAN is memoized against the current part relation — 20
+    registry queries (x2 bench reps) rebuild this byte-identical dim
+    projection; the memo holds the lazy plan only (no checkpoint, no
+    data): execution and column pruning behave exactly as a fresh build
+    (r12, guide §1.2)."""
     p = load_table(spark, sf_dir, "part")
+    return staged_frame(spark, sf_dir, "master", (p,), _master_projection)
+
+
+def _master_projection(p: DataFrame) -> DataFrame:
     pk = F.col("p_partkey")
-    out = _master_projection(p, pk)
-    _MASTER_CACHE[ckey] = out
-    _bound_cache(_MASTER_CACHE)
-    return out
-
-
-def _master_projection(p: DataFrame, pk) -> DataFrame:
     return p.select(
         pk.cast("string").alias("symbol"),
         F.col("p_name").alias("name"),
@@ -1732,23 +1627,20 @@ def st3_streaming_sessions(spark, sf_dir):
     )
 
 
-_MEDIA_CACHE: dict = {}
-
-
 def _media(spark, sf_dir):
-    """Synthetic media frame, memoized + lazily localCheckpoint-ed per
-    (session, sf_dir): all seven mm queries consume the identical
-    generated table, and without the cache each re-runs the whole
-    Arrow generation pipeline (same shared-stage discipline as
-    returns_frame). The checkpoint materializes on first action."""
+    """Synthetic media frame, staged behind a lazy localCheckpoint
+    against the current documents relation: all seven mm queries
+    consume the identical generated table, and without the memo each
+    re-runs the whole Arrow generation pipeline (same shared-stage
+    discipline as returns_frame). The checkpoint materializes on first
+    action."""
     from market_data_pipeline_spark.operators import multimodal as mm
 
-    key = (spark, sf_dir)
-    if key not in _MEDIA_CACHE:
-        _MEDIA_CACHE[key] = mm.synthetic_media_from_docs(
-            load_table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=False)
-    return _MEDIA_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    return staged_frame(
+        spark, sf_dir, "media", (docs,), mm.synthetic_media_from_docs,
+        checkpoint=True,
+    )
 
 
 @query("mm1_image_stats")
@@ -2193,31 +2085,25 @@ QUARTER_ENDS = [
 ]
 
 
-_TS_SERIES_CACHE: dict = {}
-
-
 def _ts_series(spark, sf_dir):
     """Shared ts-family input: the RETURN_SYMBOLS price series with the
-    fixed date/null filters. The PLAN is memoized per (session, sf_dir)
-    — 13 ts queries (x2 bench reps) build this byte-identical subtree,
-    ~0.1s of py4j/analysis each (r12 build census). Unlike price_frame's
-    staged full-universe frame this memo holds NO checkpoint: the cached
-    object is the lazy pushed-down plan (symbol keys still reach the
-    parquet footer), so execution re-scans parquet every time — only the
-    plan-BUILD cost is shared."""
-    ensure_session_defaults(spark)  # hit path skips price_frame's re-pin
-    _purge_dead_sessions(_TS_SERIES_CACHE)
-    key = (spark, sf_dir)
-    frame = _TS_SERIES_CACHE.pop(key, None)
-    if frame is None:
-        frame = price_frame(spark, sf_dir, symbols=RETURN_SYMBOLS).filter(
+    fixed date/null filters. The PLAN is memoized against the filtered
+    price plan it extends — 13 ts queries (x2 bench reps) build this
+    byte-identical subtree, ~0.1s of py4j/analysis each (r12 build
+    census). Unlike price_frame's staged full-universe frame this memo
+    holds NO checkpoint: the cached object is the lazy pushed-down plan
+    (symbol keys still reach the parquet footer), so execution re-scans
+    parquet every time — only the plan-BUILD cost is shared."""
+
+    def build(price: DataFrame) -> DataFrame:
+        return price.filter(
             F.col("close_price").isNotNull()
             & (F.col("trade_date") >= "1996-01-01")
             & (F.col("trade_date") <= "1998-12-31")
         ).select("symbol", "trade_date", "close_price")
-    _TS_SERIES_CACHE[key] = frame
-    _bound_cache(_TS_SERIES_CACHE)
-    return frame
+
+    price = price_frame(spark, sf_dir, symbols=RETURN_SYMBOLS)
+    return staged_frame(spark, sf_dir, "ts_series", (price,), build)
 
 
 @query(
@@ -10087,8 +9973,11 @@ def e31_new_vs_returning(spark, sf_dir):
     per user as a MIN window over the distinct daily actives (r13 walk
     census: the old separate first-seen aggregate joined back onto the
     distinct pass walked events twice; min over the distinct
-    (day, user) rows is the same date — guide §2.4), exact counts."""
-    events = load_table(spark, sf_dir, "events")
+    (day, user) rows is the same date — guide §2.4), exact counts.
+    NULL users are dropped before the window, as the old inner join
+    (and the oracle's) dropped them; the window would otherwise pool
+    them into one pseudo-user."""
+    events = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     daily = events.select(F.to_date("ts").alias("day"), "user_id").distinct()
     first = F.min("day").over(Window.partitionBy("user_id"))
     is_new = F.when(F.col("day") == F.col("_first"), 1).otherwise(0)

@@ -9,6 +9,7 @@ returns the DataFrame directly and Catalyst owns the plan.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,36 +101,40 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     handles both on-disk encodings the driver has produced: parquet
     TIMESTAMP(NANOS) read as bigint under ``nanosAsLong`` (converted by
     lossless integer ns->µs division) and TIMESTAMP(MICROS, non-UTC) read
-    as TIMESTAMP_NTZ (cast to instant under the UTC session)."""
+    as TIMESTAMP_NTZ (cast to instant under the UTC session).
+
+    The returned object is the same for as long as the file is unchanged,
+    and a new one after any rewrite: that identity is what invalidates
+    every frame :func:`staged_frame` derived from it."""
     ensure_session_defaults(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = read_parquet_cached_schema(spark, path)
     if name == "events":
-        # the normalization plan is a pure function of the relation
-        # (same session, same file version -> same lazy plan); memoize it
-        # next to the relation so the ~100 event-family queries skip the
-        # dtypes probe + withColumn round trips per call (r12, guide §1.2)
-        hit = _NORM_CACHE.get((spark, path))
-        if hit is not None and hit[1] is df:
-            return hit[0]
-        norm = normalize_event_ts(df)
-        _NORM_CACHE[(spark, path)] = (norm, df)
-        return norm
+        # the normalization plan is a pure function of the relation;
+        # memoizing it lets the ~100 event-family queries skip the dtypes
+        # probe + withColumn round trips per call (r12, guide §1.2)
+        return staged_frame(spark, sf_dir, "events", (df,), normalize_event_ts)
     return df
 
 
 # (session, path) -> (stat_key, DataFrame). Bounded: one entry per distinct
 # driver table file per session; stale keys (old stat) are evicted on the
 # miss that replaces them; entries of stopped sessions are purged before
-# every lookup (the frame-cache pattern from plans.driver_queries).
+# every lookup.
 _SCHEMA_CACHE: dict = {}
-# (session, path) -> (normalized events DataFrame, the relation it wraps).
-# Validated by relation IDENTITY against _SCHEMA_CACHE's current entry, so
-# a re-resolved file version (new relation object) re-normalizes.
-_NORM_CACHE: dict = {}
+# (session, sf_dir, name, args) -> (inputs, DataFrame); dict order is LRU
+# order. See staged_frame.
+_STAGED: dict = {}
+# entries kept per (session, name): a checkpointed entry pins blocks, a
+# plan-only one costs only a rebuild when evicted
+_STAGED_CAP = {True: 4, False: 16}
 
 
 def _purge_dead_sessions(cache: dict) -> None:
+    """Evict entries keyed by a stopped SparkSession, so a process that
+    creates several sessions over its lifetime (test harnesses, in-process
+    driver restarts) does not accumulate their relations and checkpointed
+    frames. Runs before the lookup: a dead entry must never be served."""
     for key in list(cache):
         sess = key[0]
         try:
@@ -164,7 +169,6 @@ def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
         # the error surfaces exactly as before
         return spark.read.parquet(path)
     _purge_dead_sessions(_SCHEMA_CACHE)
-    _purge_dead_sessions(_NORM_CACHE)
     key = (spark, path)
     hit = _SCHEMA_CACHE.get(key)
     if hit is not None and hit[0] == stat_key:
@@ -172,6 +176,53 @@ def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     _SCHEMA_CACHE[key] = (stat_key, df)
     return df
+
+
+def staged_frame(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    inputs: tuple,
+    build: Callable[..., DataFrame],
+    args: tuple = (),
+    checkpoint: bool = False,
+) -> DataFrame:
+    """``build(*inputs)``, memoized per (session, sf_dir, name, args).
+
+    An entry is valid only while ``inputs`` are the very objects it was
+    built from. Inputs are :func:`load_table` relations, which stay the
+    same object until their file's (mtime_ns, size) changes, or other
+    staged frames, which stay the same object until their own inputs
+    change. So rewriting a table invalidates every frame derived from it,
+    with no explicit clear; and a repeat call with unchanged sources
+    returns the identical object, so downstream plan caches keep hitting.
+
+    ``checkpoint`` wraps the build in one lazy ``localCheckpoint``: the
+    first action materializes it and later queries read its blocks (for
+    shared stages that many queries re-derive). Without it the entry is
+    only the lazy plan, which saves plan-build round trips and re-executes
+    from the scan every time.
+
+    Entries are LRU-bounded per (session, name): 4 checkpointed ones, so
+    one session touching many directories does not pin a checkpoint per
+    directory, or 16 plan-only ones. Eviction drops only the Python
+    reference; Spark's ContextCleaner unpersists the blocks once nothing
+    else points at them (a forced unpersist could free blocks a dependent
+    frame still reads)."""
+    _purge_dead_sessions(_STAGED)
+    key = (spark, sf_dir, name, args)
+    hit = _STAGED.pop(key, None)  # re-inserted below: a hit refreshes recency
+    if hit is not None and all(a is b for a, b in zip(hit[0], inputs)):
+        frame = hit[1]
+    else:
+        frame = build(*inputs)
+        if checkpoint:
+            frame = frame.localCheckpoint(eager=False)
+    _STAGED[key] = (inputs, frame)
+    same = [k for k in _STAGED if k[0] is spark and k[2] == name]
+    for k in same[: max(0, len(same) - _STAGED_CAP[checkpoint])]:
+        del _STAGED[k]
+    return frame
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -69,6 +69,8 @@ def main() -> None:
                 yield pdf
 
         sites.append((name, acc))
+        # a fresh frame per call: no staged_frame memo built on it ever
+        # hits, so every query re-walks (and counts) its own tables
         return df.mapInPandas(bump, schema)
 
     DQ.load_table = counting_load
@@ -85,10 +87,6 @@ def main() -> None:
     for qname in names:
         fn = DQ.QUERIES[qname]
         sites.clear()
-        try:
-            DQ.clear_frame_caches()
-        except Exception:
-            pass
         try:
             fn(spark, args.sf).write.mode("overwrite").format("noop").save()
         except Exception as exc:  # eager builders that need real tables etc.

@@ -317,6 +317,19 @@ def test_kmeans_lloyd_exact_empty_cluster_keeps_prior(spark):
     assert (0.0, 0.0) in vecs and (1.0, 1.0) in vecs
 
 
+def test_kmeans_lloyd_exact_backtick_column(clustered_emb):
+    """A vector column whose name contains a backtick is quoted, not
+    spliced, into the assignment SQL: the fit equals the plain-name fit."""
+    name = "emb`x"
+    renamed = clustered_emb.withColumnRenamed("embedding", name)
+    got = SIM.kmeans_lloyd_exact(renamed, k=3, max_iter=3, vec_col=name, sample_hex=None)
+    assert got.columns == ["vec_id", name]
+    want = SIM.kmeans_lloyd_exact(clustered_emb, k=3, max_iter=3, sample_hex=None)
+    assert sorted((r[0], tuple(r[1])) for r in got.collect()) == sorted(
+        (r[0], tuple(r[1])) for r in want.collect()
+    )
+
+
 def test_kmeans_lloyd_exact_empty_input(spark):
     emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
     assert SIM.kmeans_lloyd_exact(emb, k=4).count() == 0

@@ -126,11 +126,13 @@ def test_price_frame_raw_shape(spark):
     columns — the 100 TB pushdown/pruning evidence the session cache
     must not silence."""
     from market_data_pipeline_spark.plans.driver_queries import _price_agg
+    from market_data_pipeline_spark.sources.catalog import load_table
 
-    pushed = audit_plan(_price_agg(spark, SF_DIR, ["101", "202"]))
+    li = load_table(spark, SF_DIR, "lineitem")
+    pushed = audit_plan(_price_agg(li, ["101", "202"]))
     assert pushed["pushed_scans"] >= 1
     assert pushed["max_read_cols"] <= 4
-    full = audit_plan(_price_agg(spark, SF_DIR, None))
+    full = audit_plan(_price_agg(li, None))
     assert full["scans"] == 1
     assert full["max_read_cols"] <= 4
 
@@ -397,34 +399,13 @@ def test_fx4_winsorize_date_partitioned_window(plans):
     assert facts["unbounded_single_partition"] == 0
 
 
-def test_tx18_tx20_map_only(spark, plans):
-    # Both declared queries cut lineage before their final sort
-    # (materialize_then_sort, r12 opt), which truncates the visible plan
-    # at a Scan ExistingRDD — so audit the OPERATOR frames directly for
-    # the map-only evidence (one pruned scan, no joins), and keep the
-    # join-freedom assertions on the declared queries.
-    from pyspark.sql import functions as F
-
-    from market_data_pipeline_spark.operators import text as tx
-    from market_data_pipeline_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+"), lambda x: x != ""
-    )
-    lexdiv = docs.select("doc_id", toks.alias("_t")).select(
-        "doc_id",
-        F.size("_t").cast("long").alias("n_tokens"),
-        F.size(F.array_distinct("_t")).cast("long").alias("n_types"),
-    )
-    for frame in (tx.charset_stats(docs), lexdiv):
-        op = audit_plan(frame)
-        assert op["scans"] == 1
-        assert op["smj"] == 0 and op["bhj"] == 0
-        assert op["max_read_cols"] <= 2
+def test_tx18_tx20_map_only(plans):
+    # per-document maps: one pruned scan, no joins
     for name in ("tx18_charset_stats", "tx20_lexical_diversity"):
         facts = plans(name)
+        assert facts["scans"] == 1
         assert facts["smj"] == 0 and facts["bhj"] == 0
+        assert facts["max_read_cols"] <= 2
 
 
 def test_label_centroid_scoring_broadcasts(spark):

@@ -61,14 +61,12 @@ def test_monthly_hhi_matches_python(spark, tmp_path, pts):
     """a27_monthly_hhi == the pure-Python cents/1e-12 fixed-point HHI
     over arbitrary (symbol, day, close) singleton-line frames."""
     from market_data_pipeline_spark.plans.driver_queries import (
-        clear_frame_caches,
         a27_monthly_hhi,
     )
 
     d0 = dt.date(2024, 1, 1)
     rows = [(s, d0 + dt.timedelta(days=off), c) for s, off, c in pts]
     _write_lineitem(spark, tmp_path, rows)
-    clear_frame_caches()
     got = {
         r["month"]: (r["n_symbols"], r["hhi"])
         for r in a27_monthly_hhi(spark, str(tmp_path)).collect()

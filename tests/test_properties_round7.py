@@ -92,7 +92,6 @@ def hurst_series(draw):
 @given(hurst_series())
 def test_hurst_matches_python(spark, tmp_path, series):
     from market_data_pipeline_spark.plans.driver_queries import (
-        clear_frame_caches,
         ts45_hurst_exponent,
     )
 
@@ -103,7 +102,6 @@ def test_hurst_matches_python(spark, tmp_path, series):
         for i, c in enumerate(closes)
     ]
     _write_lineitem(spark, tmp_path, pts)
-    clear_frame_caches()
     got = {
         r["symbol"]: (r["n_scales"], r["hurst"])
         for r in ts45_hurst_exponent(spark, str(tmp_path)).collect()
@@ -170,7 +168,6 @@ def vr_series(draw):
 @given(vr_series())
 def test_variance_ratio_matches_python(spark, tmp_path, series):
     from market_data_pipeline_spark.plans.driver_queries import (
-        clear_frame_caches,
         ts49_variance_ratio,
     )
 
@@ -181,7 +178,6 @@ def test_variance_ratio_matches_python(spark, tmp_path, series):
         for i, c in enumerate(closes)
     ]
     _write_lineitem(spark, tmp_path, pts)
-    clear_frame_caches()
     got = {
         r["symbol"]: (r["n_daily"], r["n_5d"], r["vr5"])
         for r in ts49_variance_ratio(spark, str(tmp_path)).collect()

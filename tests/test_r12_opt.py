@@ -237,12 +237,14 @@ def test_lsh_bucket_single_expr_matches_python(spark):
 
 
 def test_plan_memos_share_and_clear(spark, sf_dir):
-    """master_frame / filtered price_frame memoize the lazy PLAN per
-    (session, sf_dir[, symbols]) — same object on repeat calls, dropped
-    by clear_frame_caches (the property-test rewrite contract)."""
+    """master_frame / filtered price_frame memoize the lazy PLAN through
+    staged_frame — same object on repeat calls, a different symbols list
+    gives a different plan — and a plan-only entry is served only while
+    its inputs are the same objects (a rewritten table's new relation
+    rebuilds it), LRU-bounded per (session, name)."""
     from market_data_pipeline_spark.plans import driver_queries as dq
+    from market_data_pipeline_spark.sources import catalog as cat
 
-    dq.clear_frame_caches()
     m1 = dq.master_frame(spark, sf_dir)
     m2 = dq.master_frame(spark, sf_dir)
     assert m1 is m2
@@ -250,9 +252,24 @@ def test_plan_memos_share_and_clear(spark, sf_dir):
     p2 = dq.price_frame(spark, sf_dir, symbols=["3", "7"])
     assert p1 is p2
     assert dq.price_frame(spark, sf_dir, symbols=["3"]) is not p1
-    dq.clear_frame_caches()
-    assert dq.master_frame(spark, sf_dir) is not m1
-    dq.clear_frame_caches()
+
+    built = []
+
+    def build(df):
+        built.append(df)
+        return df.select("id")
+
+    a, b = spark.range(1), spark.range(1)
+    f1 = cat.staged_frame(spark, "/memo", "probe", (a,), build)
+    assert cat.staged_frame(spark, "/memo", "probe", (a,), build) is f1
+    f2 = cat.staged_frame(spark, "/memo", "probe", (b,), build)
+    assert f2 is not f1 and built == [a, b]
+    cap = cat._STAGED_CAP[False]
+    for i in range(cap + 1):
+        cat.staged_frame(spark, f"/memo{i}", "probe", (a,), build)
+    kept = [k[1] for k in cat._STAGED if k[0] is spark and k[2] == "probe"]
+    assert kept == [f"/memo{i}" for i in range(1, cap + 1)]
+    assert dq.master_frame(spark, sf_dir) is m1  # other names untouched
 
 
 def test_load_table_memoizes_relation_until_rewrite(spark, tmp_path):

@@ -161,12 +161,10 @@ def test_root_sort_elision_contract(spark, monkeypatch):
         node = df._jdf.queryExecution().logical()
         return node.getClass().getSimpleName()
 
-    DQ.clear_frame_caches()
     plain = DQ.QUERIES[name](spark, SF_DIR)
     assert root(plain) != "Sort"
 
     monkeypatch.setattr(DQ, "_SORTED_OUTPUT", True)
-    DQ.clear_frame_caches()
     sorted_df = DQ.QUERIES[name](spark, SF_DIR)
     assert root(sorted_df) == "Sort"
 

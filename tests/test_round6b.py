@@ -402,7 +402,6 @@ def test_log_index_compounds_mean_returns(spark, tmp_path):
     log level after d days = ln(100) + d*ln(1.01) (to fixed-point)."""
     from market_data_pipeline_spark.plans.driver_queries import (
         a24_equal_weight_index,
-        clear_frame_caches,
     )
 
     rows = []
@@ -419,7 +418,6 @@ def test_log_index_compounds_mean_returns(spark, tmp_path):
         "l_tax double, l_returnflag string, l_linestatus string, l_shipdate date",
     )
     li.write.parquet(f"{tmp_path}/lineitem.parquet")
-    clear_frame_caches()  # tmp_path reuses keys only within a test
     out = a24_equal_weight_index(spark, str(tmp_path)).collect()
     assert [r["n_symbols"] for r in out] == [2, 2, 2]
     for d, r in enumerate(out, start=1):
@@ -454,7 +452,6 @@ def test_sortino_all_positive_is_null_and_sign(spark, tmp_path):
     losses -> finite value with the sign of the mean return."""
     from market_data_pipeline_spark.plans.driver_queries import (
         ts50_sortino,
-        clear_frame_caches,
     )
 
     d0 = dt.date(2024, 1, 1)
@@ -464,7 +461,6 @@ def test_sortino_all_positive_is_null_and_sign(spark, tmp_path):
         for i in range(40)
     ]
     _li_frame(spark, tmp_path, {1: up, 2: mixed})
-    clear_frame_caches()
     out = {r["symbol"]: r for r in ts50_sortino(spark, str(tmp_path)).collect()}
     assert out["1"]["sortino"] is None
     assert out["2"]["sortino"] is not None
@@ -516,7 +512,6 @@ def test_downside_beta_scaled_series_is_one(spark, tmp_path):
     are whole integers so the DECIMAL(18,2) index average is exact."""
     from market_data_pipeline_spark.plans.driver_queries import (
         ts51_downside_beta,
-        clear_frame_caches,
     )
 
     d0 = dt.date(2024, 1, 1)
@@ -530,7 +525,6 @@ def test_downside_beta_scaled_series_is_one(spark, tmp_path):
         tmp_path,
         {1: path, 2: [(d, c / 2) for d, c in path]},
     )
-    clear_frame_caches()
     out = {
         r["symbol"]: r
         for r in ts51_downside_beta(spark, str(tmp_path)).collect()
@@ -632,7 +626,6 @@ def test_monthly_hhi_two_months(spark, tmp_path):
     """Jan: shares 75/25 -> HHI 0.625; Feb: 50/50 -> HHI 0.5 exactly."""
     from market_data_pipeline_spark.plans.driver_queries import (
         a27_monthly_hhi,
-        clear_frame_caches,
     )
 
     jan, feb = dt.date(2024, 1, 10), dt.date(2024, 2, 10)
@@ -641,7 +634,6 @@ def test_monthly_hhi_two_months(spark, tmp_path):
         tmp_path,
         {1: [(jan, 75.0), (feb, 40.0)], 2: [(jan, 25.0), (feb, 40.0)]},
     )
-    clear_frame_caches()
     out = {r["month"]: r for r in a27_monthly_hhi(spark, str(tmp_path)).collect()}
     assert (out["2024-01"]["n_symbols"], out["2024-01"]["hhi"]) == (2, 0.625)
     assert (out["2024-02"]["n_symbols"], out["2024-02"]["hhi"]) == (2, 0.5)
@@ -944,7 +936,6 @@ def test_vol_regimes_tercile_split(spark, tmp_path):
     all up-shares 1.0 (monotone-up paths)."""
     from market_data_pipeline_spark.plans.driver_queries import (
         ts55_vol_regimes,
-        clear_frame_caches,
     )
 
     series = []
@@ -955,7 +946,6 @@ def test_vol_regimes_tercile_split(spark, tmp_path):
             series.append((dt.date(2024, k, day), c))
             c *= 1 + 0.01 * k
     _li_frame(spark, tmp_path, {1: series})
-    clear_frame_caches()
     out = ts55_vol_regimes(spark, str(tmp_path)).collect()
     assert [r["regime"] for r in out] == ["calm", "normal", "turbulent"]
     assert all(r["n_months"] == 2 for r in out)
@@ -1047,7 +1037,6 @@ def test_listing_age_vol_buckets(spark, tmp_path):
     so master assigns listing ages in different year buckets."""
     from market_data_pipeline_spark.plans.driver_queries import (
         a32_listing_age_vol,
-        clear_frame_caches,
     )
 
     d0 = dt.date(2024, 1, 1)
@@ -1060,7 +1049,6 @@ def test_listing_age_vol_buckets(spark, tmp_path):
         [(1, "n1", "B"), (901, "n2", "B")],
         "p_partkey long, p_name string, p_brand string",
     ).write.parquet(f"{tmp_path}/part.parquet")
-    clear_frame_caches()
     out = {
         r["age_years"]: r
         for r in a32_listing_age_vol(spark, str(tmp_path)).collect()
@@ -1077,13 +1065,17 @@ def test_listing_age_vol_buckets(spark, tmp_path):
 def test_frame_cache_bounded_per_session(spark, sf_dir):
     """r10 advice: one long-lived session touching many sf_dirs (sweep
     clones, tmp_path tests) must not accumulate a checkpointed price
-    frame per directory — the cache keeps only the newest
-    _FRAME_CACHE_MAX_DIRS entries and releases evicted frames' blocks.
-    Path variants of the same directory are distinct cache keys, so no
-    data copies are needed to simulate many directories."""
+    frame per directory — staged_frame keeps only the newest
+    checkpointed entries per (session, name) and releases evicted
+    frames' blocks. Path variants of the same directory are distinct
+    keys, so no data copies are needed to simulate many directories."""
     from market_data_pipeline_spark.plans import driver_queries as dq
+    from market_data_pipeline_spark.sources import catalog as cat
 
-    dq.clear_frame_caches()
+    def kept():
+        return [k[1] for k in cat._STAGED if k[0] is spark and k[2] == "price"]
+
+    cap = cat._STAGED_CAP[True]
     variants = [
         sf_dir,
         sf_dir + "/",
@@ -1094,19 +1086,18 @@ def test_frame_cache_bounded_per_session(spark, sf_dir):
     ]
     for v in variants:
         dq.price_frame(spark, v).limit(1).count()  # materialize each
-    assert len(dq._PRICE_CACHE) == dq._FRAME_CACHE_MAX_DIRS
     # the SURVIVORS are the most recently USED dirs, and still compute
-    kept = [k[1] for k in dq._PRICE_CACHE]
-    assert kept == variants[-dq._FRAME_CACHE_MAX_DIRS:]
+    assert kept() == variants[-cap:]
+    assert dq.price_frame(spark, variants[-1]) is dq.price_frame(spark, variants[-1])
     assert dq.price_frame(spark, variants[-1]).count() > 0
     # an evicted dir re-stages transparently on next request
     assert dq.price_frame(spark, variants[0]).count() > 0
     # LRU, not FIFO (r11 review): re-touching the eldest survivor
     # refreshes it, so the NEXT eviction takes a different key
-    eldest = [k[1] for k in dq._PRICE_CACHE][0]
+    eldest = kept()[0]
     dq.price_frame(spark, eldest).limit(1).count()  # refresh
     dq.price_frame(spark, variants[1]).limit(1).count()  # insert -> evict
-    assert (spark, eldest) in dq._PRICE_CACHE
+    assert eldest in kept() and len(kept()) == cap
     # a dead-session entry purges without disturbing live ones, and a
     # live hit right after a purge must not KeyError (r11 review: the
     # post-lookup purge deleted the entry being returned)
@@ -1114,7 +1105,7 @@ def test_frame_cache_bounded_per_session(spark, sf_dir):
         class _SC:
             _jsc = None
         sparkContext = _SC()
-    dq._PRICE_CACHE[(_DeadSess(), "/nowhere")] = None
-    assert dq.price_frame(spark, eldest).count() > 0
-    assert not any(k[1] == "/nowhere" for k in dq._PRICE_CACHE)
-    dq.clear_frame_caches()
+    cat._STAGED[(_DeadSess(), "/nowhere", "price", ())] = ((), None)
+    hit = dq.price_frame(spark, eldest)
+    assert hit is dq.price_frame(spark, eldest) and hit.count() > 0
+    assert not any(k[1] == "/nowhere" for k in cat._STAGED)

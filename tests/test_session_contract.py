@@ -45,8 +45,8 @@ def test_get_spark_pins_utc():
 
 
 def test_repins_utc_on_frame_cache_hit(spark, sf_dir):
-    """r11: the staged price/returns frames skip load_table on a cache
-    HIT, which used to skip the UTC re-pin with it — downstream tz-aware
+    """r11: the staged price/returns frames used to skip load_table on a
+    cache HIT, and the UTC re-pin with it — downstream tz-aware
     expressions then resolved against whatever zone the session was
     left in (latent until batch ordering populated the cache before the
     zone flip). Prime the cache explicitly so the hit path is the one
