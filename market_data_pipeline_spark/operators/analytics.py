@@ -78,7 +78,7 @@ def get_stock_data(
 
 def market_summary(price: DataFrame, master: DataFrame, trade_date: str) -> DataFrame:
     """Per-market stats for one day: count / avg close / sum volume / sum
-    amount, ordered by total amount desc.
+    amount (rows in no defined order).
 
     (reference: src/clickhouse/client.py:104-121 — A1 + J1.)
     """
@@ -92,7 +92,6 @@ def market_summary(price: DataFrame, master: DataFrame, trade_date: str) -> Data
             F.sum("volume").alias("total_volume"),
             exact_sum(F.col("amount")).alias("total_amount"),
         )
-        .orderBy(F.desc("total_amount"))
     )
 
 
@@ -158,7 +157,6 @@ def calculate_returns(
             "symbol", "trade_date", "close_price",
             "daily_return", "cumulative_return",
         )
-        .orderBy("symbol", "trade_date")
     )
 
 
@@ -213,7 +211,6 @@ def correlation_matrix(
             F.count(F.lit(1)).alias("n_days"),
         )
         .filter(F.col("n_days") >= 3)
-        .orderBy("symbol_a", "symbol_b")
     )
 
 
@@ -243,7 +240,6 @@ def backtest_universe(
     return (
         eligible.join(qualifying, "symbol", "left_semi")
         .select("symbol", "name", "market")
-        .orderBy("symbol")
     )
 
 
@@ -265,10 +261,7 @@ def latest_prices(price: DataFrame, master: DataFrame) -> DataFrame:
         F.max_by("volume", "trade_date").alias("volume"),
         F.max_by("amount", "trade_date").alias("amount"),
     )
-    return (
-        latest.join(F.broadcast(master.select("symbol", "name", "market")), "symbol")
-        .orderBy("symbol")
-    )
+    return latest.join(F.broadcast(master.select("symbol", "name", "market")), "symbol")
 
 
 def daily_market_summary(price: DataFrame) -> DataFrame:
@@ -285,7 +278,6 @@ def daily_market_summary(price: DataFrame) -> DataFrame:
             F.sum("volume").alias("total_volume"),
             exact_sum(F.col("amount")).alias("total_amount"),
         )
-        .orderBy("trade_date")
     )
 
 
@@ -301,7 +293,6 @@ def stock_count_stats(master: DataFrame) -> DataFrame:
             F.count(F.when(F.col("is_active") == 0, 1)).alias("delisted_count"),
             F.count("*").alias("total_count"),
         )
-        .orderBy("market")
     )
 
 
@@ -318,7 +309,6 @@ def delisted_report(master: DataFrame) -> DataFrame:
             F.min("delisting_date").alias("earliest_delisting"),
             F.max("delisting_date").alias("latest_delisting"),
         )
-        .orderBy(F.desc("delisted_count"), "market")
     )
 
 
@@ -342,7 +332,7 @@ def get_all_symbols(master: DataFrame, active_only: bool = True) -> DataFrame:
     df = master
     if active_only:
         df = df.filter(F.col("is_active") == 1)
-    return df.select("symbol").distinct().orderBy("symbol")
+    return df.select("symbol").distinct()
 
 
 def global_ntile(
@@ -512,7 +502,6 @@ def missing_dates_stats(price: DataFrame) -> DataFrame:
         .withColumn(
             "span_days", F.datediff(F.col("last_date"), F.col("first_date")) + 1
         )
-        .orderBy("symbol")
     )
 
 

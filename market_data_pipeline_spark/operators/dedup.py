@@ -177,7 +177,7 @@ def containment_pairs(
     cap); each undirected pair then emits its two directions and the
     threshold filters — no second pass over the text.
     Returns (doc_id, other_id, common, containment) — containment of
-    doc_id's shingles inside other_id — ordered by (doc_id, other_id).
+    doc_id's shingles inside other_id — in no defined order.
     """
     from market_data_pipeline_spark.operators.util import pairs_within_groups
 
@@ -234,7 +234,6 @@ def containment_pairs(
             F.col("_d.containment").alias("containment"),
         )
         .filter(F.col("containment") >= threshold)
-        .orderBy(id_col, "other_id")
     )
 
 

@@ -42,7 +42,6 @@ def tumbling_window(
             F.min(value_col).alias("min_value"),
             F.max(value_col).alias("max_value"),
         )
-        .orderBy("window_start", *keys)
     )
 
 
@@ -74,7 +73,6 @@ def sliding_window(
             "n_events",
             "total_value",
         )
-        .orderBy("window_start", *keys)
     )
 
 
@@ -122,7 +120,6 @@ def sessionize(
             F.count("*").alias("n_events"),
             _exact_sum(F.col("value")).alias("total_value"),
         )
-        .orderBy(user_col, "session_id")
     )
 
 
@@ -219,7 +216,6 @@ def sessionize_sharded(
             F.sum("_n").cast("long").alias("n_events"),
             F.sum("_v").cast("double").alias("total_value"),
         )
-        .orderBy(user_col, "session_id")
     )
 
 

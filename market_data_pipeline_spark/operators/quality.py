@@ -201,7 +201,6 @@ def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
             "min_value",
             "max_value",
         )
-        .orderBy("column")
     )
 
 

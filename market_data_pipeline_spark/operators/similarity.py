@@ -318,7 +318,7 @@ def cosine_near_dup_pairs(
     6-dp ROUND on both sides absorbs them (a flip needs a true cosine
     within ~1e-15 of a rounding boundary — verified value-identical to
     the sequential path and the DuckDB oracle at sf0.01 and sf0.1).
-    Returns (vec_a, vec_b, cosine) ordered by (vec_a, vec_b).
+    Returns (vec_a, vec_b, cosine), one row per pair with vec_a < vec_b.
     """
     import numpy as np
     import pandas as pd
@@ -372,7 +372,6 @@ def cosine_near_dup_pairs(
     return (
         both.groupBy("ba", "bb")
         .applyInPandas(confirm, f"vec_a {id_type}, vec_b {id_type}, cosine double")
-        .orderBy("vec_a", "vec_b")
     )
 
 
@@ -477,10 +476,9 @@ def cosine_near_dup_lsh(
         F.posexplode_outer("_bks").alias("_bd", "_bk"),
     ).filter(F.col("_bk").isNotNull())
     id_type = embeddings.schema[id_col].dataType.simpleString()
-    out = banded.groupBy("_bd", "_bk").applyInPandas(
+    return banded.groupBy("_bd", "_bk").applyInPandas(
         confirm, f"vec_a {id_type}, vec_b {id_type}, cosine double"
     )
-    return out.orderBy("vec_a", "vec_b")
 
 
 def ivf_assign(
@@ -1083,7 +1081,7 @@ def semantic_dedup(
     round to ``round_digits`` before the threshold on both the Spark and
     oracle sides (see cosine_near_dup_pairs for why 6 dp absorbs BLAS
     accumulation-order ULPs).
-    Returns (id_col, centroid_id, dup_of, keep) ordered by id.
+    Returns (id_col, centroid_id, dup_of, keep), one row per vector.
     """
     import numpy as np
     import pandas as pd
@@ -1167,7 +1165,7 @@ def semantic_dedup(
             f"vec_id {id_type}, centroid_id {cid_type}, dup_of {id_type}, keep boolean",
         )
     )
-    return out.withColumnRenamed("vec_id", id_col).orderBy(id_col)
+    return out.withColumnRenamed("vec_id", id_col)
 
 
 def knn_graph(
@@ -1195,7 +1193,7 @@ def knn_graph(
     Ranking uses the ROUNDED cosine with neighbor-id tiebreak (BLAS
     accumulation order differs from SQL's — rounding first makes the
     order engine-independent). Returns (src_id, nbr_id, cosine,
-    rank<=k) ordered by (src_id, rank).
+    rank<=k), in no defined order.
     """
     import numpy as np
     import pandas as pd
@@ -1290,7 +1288,6 @@ def knn_graph(
     return (
         candidates.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .orderBy("src_id", "rank")
     )
 
 

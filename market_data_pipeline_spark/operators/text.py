@@ -1486,7 +1486,6 @@ def stopword_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
                 / F.count(F.lit(1))
             ).alias("stop_ratio"),
         )
-        .orderBy("lang")
     )
 
 

@@ -91,7 +91,7 @@ def max_drawdown(
     rounding is cosmetic on the emitted ratio. One shuffle (the window
     partition), one partial-aggregated groupBy on the same key, which
     Catalyst schedules without a second exchange.
-    Returns (partition_col, max_drawdown) sorted by key.
+    Returns (partition_col, max_drawdown), one row per key.
     """
     w = _series_window(partition_col, order_col).rowsBetween(
         Window.unboundedPreceding, 0
@@ -101,7 +101,6 @@ def max_drawdown(
         df.withColumn("_dd", dd)
         .groupBy(partition_col)
         .agg(F.round(F.min("_dd"), round_digits).alias("max_drawdown"))
-        .orderBy(partition_col)
     )
 
 

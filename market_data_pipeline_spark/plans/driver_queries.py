@@ -22,9 +22,7 @@ rules that make the hash-compare meaningful:
 
 from __future__ import annotations
 
-import functools
 import math
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -144,44 +142,6 @@ def _price_agg(li: DataFrame, symbols: list[str] | None) -> DataFrame:
         .cast("double")
         .alias("amount"),
     )
-
-
-# r13 VERDICT #8: a query's CLOSING global sort is presentation order
-# only — the driver's recorder canonicalizes by sorting the collected
-# row tuples itself before comparing/hashing (scripts/check_oracle.py
-# is the replica, and the mm6 recording crash trace shows the driver's
-# pandas sort_values running over the full result), so a root Sort buys
-# determinism nobody consumes and costs a range exchange (a
-# boundary-sampling pass + a shuffle) per query: ~60-70 ms each where
-# the child plan ends in a shuffle, and a FULL re-execution of the
-# child where it does not (the materialize_then_sort class). The @query
-# decorator therefore elides the plan-ROOT Sort from every registered
-# query (see _strip_root_sort); set SPARK_GRAFT_SORTED_OUTPUT=1 to
-# restore globally sorted output for human consumers (every sort key is
-# kept at its call site, so the flag restores the exact r12 surface).
-_SORTED_OUTPUT = os.environ.get("SPARK_GRAFT_SORTED_OUTPUT", "") == "1"
-
-
-def materialize_then_sort(df, *keys):
-    """Cut lineage before a FINAL global sort whose child plan contains
-    no shuffle (map-only or broadcast-only upstream): the range
-    exchange's boundary-sampling pass re-EXECUTES the sort's child, and
-    with no shuffle files below it to reuse, the entire pipeline runs
-    TWICE per action (r12 opt session-3 walk census — every flagged
-    single-call-site 2.0x query whose plan had exactly one Exchange was
-    this shape; tx9 measured 1.39 -> 0.82 s isolated with the cut). The
-    lazy localCheckpoint materializes the child once; sampling and the
-    sort both read its blocks. Queries whose plan already ends in a
-    shuffle do NOT need this — their sampling pass reuses shuffle files
-    (which is why the final orderBy only costs ~60-70 ms there).
-
-    r13: when declared_sort drops the closing sort (the default), there
-    is no sampling pass to protect against, so the checkpoint is
-    skipped too — the full plan is visible to audits again (r12 verdict
-    #5's blind spot) and the checkpoint's write cost disappears."""
-    if not _SORTED_OUTPUT:
-        return df
-    return df.localCheckpoint(eager=False).orderBy(*keys)
 
 
 def returns_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,45 +286,18 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
-def _strip_root_sort(df: DataFrame) -> DataFrame:
-    """Drop a GLOBAL Sort sitting at the very ROOT of the plan — the
-    declared surface's presentation sort (see the declared_sort note:
-    the driver canonicalizes by sorting collected row tuples itself, so
-    the root Sort costs a range exchange per query and changes nothing
-    the recorder can observe). Only the root node is examined: a sort
-    whose order IS consumed (orderBy().limit() top-k, window chains,
-    anything followed by another operator) is never at the root and is
-    never touched, so the surviving plan computes the same multiset of
-    rows by construction. scripts/sort_census.py verifies the registry:
-    0 root sorts with the flag unset, the identical 295-query list as
-    r12 with SPARK_GRAFT_SORTED_OUTPUT=1."""
-    jqe = df._jdf.queryExecution()
-    node = jqe.logical()
-    if node.getClass().getSimpleName() != "Sort" or not getattr(node, "global")():
-        return df
-    spark = df.sparkSession
-    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        spark._jsparkSession, node.child()
-    )
-    return DataFrame(jdf, spark)
-
-
 def query(name: str, oracle: str | None = None):
-    """Register a declared query. The registered callable elides the
-    plan-root presentation Sort unless SPARK_GRAFT_SORTED_OUTPUT=1
-    (r13 VERDICT #8); the module-level function object stays unwrapped,
-    so operator tests that import a query function directly see the
-    exact sorted surface of r12."""
+    """Register a declared query under ``name``, with its DuckDB oracle SQL
+    if it has one. ``QUERIES[name]`` is the function itself.
+
+    A registered query returns its rows in no defined order: a closing
+    presentation sort would cost a range exchange per call and every
+    consumer here compares results as multisets. Sorts that feed a limit,
+    a window or a rank stay where they are. A caller that prints, limits
+    or indexes rows sorts them itself."""
 
     def deco(fn):
-        @functools.wraps(fn)
-        def wrapped(spark, sf_dir, *a, **k):
-            df = fn(spark, sf_dir, *a, **k)
-            if _SORTED_OUTPUT or not isinstance(df, DataFrame):
-                return df
-            return _strip_root_sort(df)
-
-        QUERIES[name] = wrapped
+        QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
@@ -1321,7 +1254,6 @@ def smp1_hash_sample(spark, sf_dir):
     return (
         docs.filter(F.md5(F.col("doc_id").cast("string").cast("binary")) .substr(1, 2) < "29")
         .select("doc_id", "lang", "n_chars")
-        .orderBy("doc_id")
     )
 
 
@@ -1473,7 +1405,6 @@ def smp2_stratified(spark, sf_dir):
         docs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 20)
         .select("doc_id", "lang")
-        .orderBy("lang", "doc_id")
     )
 
 
@@ -1502,9 +1433,8 @@ ORDER BY f.doc_id""",
 )
 def tx7_clean_corpus(spark, sf_dir):
     """The composed training-data filter: tokenize -> quality features ->
-    exact-dedup (keep lowest id per text) -> thresholds. One pipeline, two
-    shuffles (dedup groupBy + final sort); the feature computation stays
-    in one projection pass."""
+    exact-dedup (keep lowest id per text) -> thresholds. One pipeline;
+    the feature computation stays in one projection pass."""
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+")
     feat = docs.select(
@@ -1535,7 +1465,6 @@ def tx7_clean_corpus(spark, sf_dir):
             & (F.col("stop_ratio") >= 0.01)
         )
         .select("doc_id", "lang", F.col("token_count").cast("long").alias("token_count"))
-        .orderBy("doc_id")
     )
 
 
@@ -1588,7 +1517,6 @@ def st2_streaming_user_totals(spark, sf_dir):
         out.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .orderBy("user_id")
     )
 
 
@@ -1622,9 +1550,7 @@ def st3_streaming_sessions(spark, sf_dir):
     from market_data_pipeline_spark.streaming import jobs as sj
 
     stream = sj.streaming_sessionize(sj.read_events_stream(spark, sf_dir))
-    return sj.run_stream_to_memory(stream, "st3_sink").orderBy(
-        "user_id", "session_start"
-    )
+    return sj.run_stream_to_memory(stream, "st3_sink")
 
 
 def _media(spark, sf_dir):
@@ -1649,7 +1575,7 @@ def mm1_image_stats(spark, sf_dir):
     are not DuckDB-expressible; determinism asserted in pytest)."""
     from market_data_pipeline_spark.operators import multimodal as mm
 
-    return mm.image_stats(_media(spark, sf_dir)).orderBy("media_id")
+    return mm.image_stats(_media(spark, sf_dir))
 
 
 @query("mm2_resize_roundtrip")
@@ -1659,7 +1585,7 @@ def mm2_resize_roundtrip(spark, sf_dir):
     from market_data_pipeline_spark.operators import multimodal as mm
 
     resized = mm.resize_images(_media(spark, sf_dir), 16, 16)
-    return mm.image_stats(resized).orderBy("media_id")
+    return mm.image_stats(resized)
 
 
 @query("mm3_frame_sample")
@@ -1671,7 +1597,7 @@ def mm3_frame_sample(spark, sf_dir):
     frames = mm.sample_frames(_media(spark, sf_dir), every_k=2)
     return frames.select(
         "media_id", "frame_idx", F.length("content").alias("n_bytes")
-    ).orderBy("media_id", "frame_idx")
+    )
 
 
 @query("mm4_image_knn")
@@ -1699,7 +1625,7 @@ def mm4_image_knn(spark, sf_dir):
 def mm5_audio_stats(spark, sf_dir):
     from market_data_pipeline_spark.operators import multimodal as mm
 
-    return mm.audio_stats(_media(spark, sf_dir)).orderBy("media_id")
+    return mm.audio_stats(_media(spark, sf_dir))
 
 
 def _k5_oracle_sql(k: int = _IVF_CENTROIDS, iters: int = 2, seed: int = 42) -> str:
@@ -1942,9 +1868,7 @@ def dd3_minhash_lsh(spark, sf_dir):
     crc32/xxhash64 — and degenerate: without the mod, every signature
     position was an affine image of one gram hash (see
     dedup._minhash_params)."""
-    return dedup.minhash_lsh_pairs(load_table(spark, sf_dir, "documents")).orderBy(
-        "doc_a", "doc_b"
-    )
+    return dedup.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -1993,7 +1917,7 @@ def dd4_simhash_pairs(spark, sf_dir):
     distances exact integers both engines compute identically. Was
     rows-only while the gram hash was a crc32 pack."""
     fp = dedup.simhash(load_table(spark, sf_dir, "documents"))
-    return dedup.simhash_near_pairs(fp, max_hamming=10).orderBy("doc_a", "doc_b")
+    return dedup.simhash_near_pairs(fp, max_hamming=10)
 
 
 @query(
@@ -2065,7 +1989,7 @@ def k3_knn_lsh(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.knn_lsh(
         emb, emb.filter(F.col("vec_id") < 5), dim=64, k=5, n_planes=6
-    ).orderBy("query_id", "rank")
+    )
 
 
 # ===========================================================================
@@ -2128,8 +2052,7 @@ def ts1_sma(spark, sf_dir):
     """Trailing 5/20-row moving averages — decimal-accumulated window sums
     so Spark's sequential frame buffer and DuckDB's segment tree can't
     produce different floats."""
-    out = tseries.sma(tseries.sma(_ts_series(spark, sf_dir), 5), 20)
-    return out.orderBy("symbol", "trade_date")
+    return tseries.sma(tseries.sma(_ts_series(spark, sf_dir), 5), 20)
 
 
 @query(
@@ -2159,9 +2082,7 @@ def ts7_bollinger(spark, sf_dir):
     """Bollinger bands (20-row SMA ± 2σ): both moments in one window pass
     on one shuffle; mean decimal-exact, deviation rounded (see
     operators/timeseries.bollinger_bands)."""
-    return tseries.bollinger_bands(_ts_series(spark, sf_dir), n=20, k=2.0).orderBy(
-        "symbol", "trade_date"
-    )
+    return tseries.bollinger_bands(_ts_series(spark, sf_dir), n=20, k=2.0)
 
 
 @query(
@@ -2205,9 +2126,7 @@ def ts8_rsi(spark, sf_dir):
     """RSI-14 (Cutler simple-average variant — the Wilder recursion is
     not SQL-window-expressible, see operators/timeseries.rsi): lag diff
     plus trailing averages stacked on ONE (symbol, date) shuffle."""
-    return tseries.rsi(_ts_series(spark, sf_dir), n=14).orderBy(
-        "symbol", "trade_date"
-    )
+    return tseries.rsi(_ts_series(spark, sf_dir), n=14)
 
 
 @query(
@@ -2256,10 +2175,9 @@ def ts9_rolling_corr(spark, sf_dir):
             (F.col("close_price") / F.col("prev_close") - 1.0).alias("daily_return"),
         )
     )
-    out = tseries.rolling_pair_corr(
+    return tseries.rolling_pair_corr(
         rets, pairs=[("Brand#1", "Brand#2"), ("Brand#3", "Brand#4")], n=20
     )
-    return out.orderBy("key_a", "key_b", "trade_date")
 
 
 @query(
@@ -2284,9 +2202,7 @@ ORDER BY symbol, trade_date""",
 def ts2_volatility(spark, sf_dir):
     """Rolling 10-row realized volatility of daily returns (stddev rounded:
     variance accumulation order is engine-internal)."""
-    return tseries.rolling_volatility(_ts_series(spark, sf_dir), 10).orderBy(
-        "symbol", "trade_date"
-    )
+    return tseries.rolling_volatility(_ts_series(spark, sf_dir), 10)
 
 
 @query(
@@ -2341,7 +2257,7 @@ def ts4_weekly_ohlc(spark, sf_dir):
         F.col("low").alias("low_px"),
         F.col("close").alias("close_px"),
         "volume",
-    ).orderBy("symbol", "bucket")
+    )
 
 
 @query(
@@ -2382,7 +2298,7 @@ def ts5_asof_prices(spark, sf_dir):
     )
     return joined.select(
         "symbol", "qend", F.col("close_price").alias("asof_close")
-    ).orderBy("symbol", "qend")
+    )
 
 
 # ===========================================================================
@@ -2432,7 +2348,6 @@ def r1_top3_per_market(spark, sf_dir):
         _symbol_totals(spark, sf_dir)
         .withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= 3)
-        .orderBy("market", "rnk")
     )
 
 
@@ -2458,7 +2373,6 @@ def r2_rollup_market_year(spark, sf_dir):
     return (
         j.rollup("market", "yr")
         .agg(F.sum("volume").alias("total_volume"), F.count("*").alias("n_rows"))
-        .orderBy(F.col("market").asc_nulls_first(), F.col("yr").asc_nulls_first())
     )
 
 
@@ -2479,10 +2393,6 @@ def r3_cube_flag_status(spark, sf_dir):
             F.sum(F.col("l_quantity").cast("decimal(18,2)"))
             .cast("double")
             .alias("total_qty"),
-        )
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
         )
     )
 
@@ -2512,10 +2422,6 @@ def r7_grouping_sets(spark, sf_dir):
             F.sum(F.col("l_quantity").cast("decimal(18,2)"))
             .cast("double")
             .alias("total_qty"),
-        )
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
         )
     )
 
@@ -2548,7 +2454,6 @@ def r4_pivot_market_year(spark, sf_dir):
         j.groupBy("market")
         .pivot("yr", [1995, 1996, 1997, 1998])
         .agg(F.sum(F.col("amount").cast("decimal(18,2)")).cast("double"))
-        .orderBy("market")
     )
 
 
@@ -2573,7 +2478,7 @@ def r5_symbol_deciles(spark, sf_dir):
         n=10,
         out_col="decile",
     )
-    return bucketed.select("symbol", "total_amount", "decile").orderBy("symbol")
+    return bucketed.select("symbol", "total_amount", "decile")
 
 
 # ===========================================================================
@@ -2600,7 +2505,7 @@ def er1_similar_supplier_names(spark, sf_dir):
     sup = load_table(spark, sf_dir, "supplier")
     return dedup.blocked_name_pairs(
         sup, block_col="s_nationkey", id_col="s_suppkey", name_col="s_name", max_dist=2
-    ).orderBy("id_a", "id_b")
+    )
 
 
 @query(
@@ -2694,7 +2599,6 @@ def apx1_approx_distinct(spark, sf_dir):
                 < 0.05
             ).alias("approx_ok"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -2733,7 +2637,6 @@ def apx2_price_quantiles(spark, sf_dir):
             F.round(F.element_at("_q", 2), 6).alias("p50"),
             F.round(F.element_at("_q", 3), 6).alias("p75"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -2752,12 +2655,11 @@ def st4_streaming_dedup(spark, sf_dir):
     s1 = sj.read_events_stream(spark, sf_dir)
     s2 = sj.read_events_stream(spark, sf_dir)
     deduped = sj.streaming_dedup(s1.unionByName(s2), id_cols=["event_id"])
-    out = sj.run_stream_to_memory(
+    return sj.run_stream_to_memory(
         deduped.select("event_id", "ts", "user_id", "event_type", "value"),
         "st4_sink",
         output_mode="append",
     )
-    return out.orderBy("event_id")
 
 
 @query(
@@ -2806,8 +2708,7 @@ def st6_stream_stream_join(spark, sf_dir):
     from market_data_pipeline_spark.streaming import jobs as sj
 
     joined = sj.streaming_view_click_join(sj.read_events_stream(spark, sf_dir))
-    out = sj.run_stream_to_memory(joined, "st6_sink", output_mode="append")
-    return out.orderBy("view_id", "click_id")
+    return sj.run_stream_to_memory(joined, "st6_sink", output_mode="append")
 
 
 # ===========================================================================
@@ -2862,7 +2763,7 @@ def cdc1_snapshot_diff(spark, sf_dir):
     )
     return upsert.snapshot_diff(
         old, new, "symbol", ["name", "market", "is_active"]
-    ).orderBy("symbol")
+    )
 
 
 @query(
@@ -2887,7 +2788,7 @@ def ivm1_merged_summary(spark, sf_dir):
     p = price_frame(spark, sf_dir)
     first = ivm.daily_summary_partial(p.filter(F.col("trade_date") < "1998-01-01"))
     second = ivm.daily_summary_partial(p.filter(F.col("trade_date") >= "1998-01-01"))
-    return ivm.finalize_summary(ivm.merge_partials(first, second)).orderBy("trade_date")
+    return ivm.finalize_summary(ivm.merge_partials(first, second))
 
 
 @query(
@@ -2910,9 +2811,7 @@ def ts6_range_avg(spark, sf_dir):
     """Trailing 30 CALENDAR days average (RANGE frame over days-since-
     epoch) — on a gapped series this is a different operator from the
     row-frame sma, and it is the one a human means by '30-day average'."""
-    return tseries.sma_range_days(_ts_series(spark, sf_dir), 30).orderBy(
-        "symbol", "trade_date"
-    )
+    return tseries.sma_range_days(_ts_series(spark, sf_dir), 30)
 
 
 @query(
@@ -2954,7 +2853,7 @@ def e5_funnel_users(spark, sf_dir):
         "first_view",
         "first_click",
         F.col("first_click").isNotNull().alias("converted"),
-    ).orderBy("user_id")
+    )
 
 
 # ===========================================================================
@@ -2994,9 +2893,7 @@ def dd7_dup_clusters(spark, sf_dir):
     pairs = dedup.blocked_name_pairs(
         sup, block_col="s_nationkey", id_col="s_suppkey", name_col="s_name", max_dist=2
     )
-    return materialize_then_sort(
-        dedup.connected_components(pairs, "id_a", "id_b"), "node"
-    )
+    return dedup.connected_components(pairs, "id_a", "id_b")
 
 
 @query(
@@ -3058,7 +2955,6 @@ def dd10_dedup_keep_best(spark, sf_dir):
             F.col("s_acctbal").cast("double").alias("quality"),
             "cluster_size",
         )
-        .orderBy("component")
     )
 
 
@@ -3108,7 +3004,7 @@ def dq1_lineitem_constraints(spark, sf_dir):
             dq.in_set("l_returnflag", ["A", "N", "R"]),
         ],
         unique_keys=[["l_orderkey", "l_linenumber"]],
-    ).orderBy("constraint")
+    )
 
 
 @query(
@@ -3158,7 +3054,7 @@ def iv1_interval_join(spark, sf_dir):
     )
     return out.select(
         "event_id", "user_id", "session_start", "session_end"
-    ).orderBy("event_id", "session_start")
+    )
 
 
 @query(
@@ -3212,10 +3108,7 @@ def dd8_dedup_corpus(spark, sf_dir):
     drop = cc.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )
-    return materialize_then_sort(
-        docs.join(drop, "doc_id", "left_anti").select("doc_id", "lang", "source"),
-        "doc_id",
-    )
+    return docs.join(drop, "doc_id", "left_anti").select("doc_id", "lang", "source")
 
 
 @query(
@@ -3278,10 +3171,7 @@ def dd8_capped_dedup_corpus(spark, sf_dir):
     drop = cc.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )
-    return materialize_then_sort(
-        docs.join(drop, "doc_id", "left_anti").select("doc_id", "lang", "source"),
-        "doc_id",
-    )
+    return docs.join(drop, "doc_id", "left_anti").select("doc_id", "lang", "source")
 
 
 @query(
@@ -3321,7 +3211,7 @@ def r6_rank_functions(spark, sf_dir):
         F.datediff(F.lead("trade_date").over(wd), F.col("trade_date"))
         .cast("long")
         .alias("gap_days"),
-    ).orderBy("symbol", "trade_date")
+    )
 
 
 # ===========================================================================
@@ -3356,9 +3246,7 @@ def tx8_tfidf_terms(spark, sf_dir):
     """Top-5 characteristic terms per document by TF-IDF. Ranking happens
     on the ROUNDED score (ln() differs in the last ulp across engines) —
     see operators/text.tfidf_top_terms for the shuffle budget."""
-    return tx.tfidf_top_terms(load_table(spark, sf_dir, "documents"), k=5).orderBy(
-        "doc_id", "rnk"
-    )
+    return tx.tfidf_top_terms(load_table(spark, sf_dir, "documents"), k=5)
 
 
 @query(
@@ -3374,9 +3262,7 @@ def tx9_redact_pii(spark, sf_dir):
     """Regex PII scrubbing (emails, phone-shaped digit runs) — map-only
     codegen; the regexes are restricted to Java-regex ∩ RE2 syntax so the
     oracle executes the identical patterns."""
-    return materialize_then_sort(
-        tx.redact_pii(load_table(spark, sf_dir, "documents")), "doc_id"
-    )
+    return tx.redact_pii(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -3398,12 +3284,8 @@ def ck1_chunk_documents(spark, sf_dir):
     """Context-length chunking: 64-token windows, 16-token overlap
     (stride 48) — the RAG/embedding ingestion reshape. Map-only
     posexplode; output rows ≈ tokens / stride."""
-    return materialize_then_sort(
-        tx.chunk_documents(
-            load_table(spark, sf_dir, "documents"), chunk_tokens=64, overlap=16
-        ),
-        "doc_id",
-        "chunk_idx",
+    return tx.chunk_documents(
+        load_table(spark, sf_dir, "documents"), chunk_tokens=64, overlap=16
     )
 
 
@@ -3428,7 +3310,7 @@ def pk1_pack_sequences(spark, sf_dir):
     global single-task window) — the concat-then-chunk loader shape."""
     return tx.pack_sequences(
         load_table(spark, sf_dir, "documents"), budget=256
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -3447,7 +3329,6 @@ def smp3_group_split(spark, sf_dir):
     return (
         tx.train_val_test_split(docs, key_col="source")
         .select("doc_id", "source", "split")
-        .orderBy("doc_id")
     )
 
 
@@ -3497,9 +3378,7 @@ def dc1_decontaminate(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     benchmark = docs.filter(F.col("doc_id") % 20 == 0)
-    return dedup.decontaminate(corpus, benchmark, n=3, min_overlap=2).orderBy(
-        "doc_id"
-    )
+    return dedup.decontaminate(corpus, benchmark, n=3, min_overlap=2)
 
 
 # --- SD1: SemDeDup-style semantic dedup --------------------------------------
@@ -3588,9 +3467,7 @@ def tx10_repetition_stats(spark, sf_dir):
     Counter pass, no shuffle. A JVM higher-order-function form was measured
     and rejected as O(distinct x total) per document (quadratic in doc
     length); rationale in ``operators/text.py:351``."""
-    return materialize_then_sort(
-        tx.repetition_stats(load_table(spark, sf_dir, "documents")), "doc_id"
-    )
+    return tx.repetition_stats(load_table(spark, sf_dir, "documents"))
 
 
 # --- SHF1: deterministic global shuffle-shard --------------------------------
@@ -3617,7 +3494,7 @@ def shf1_shuffle_shards(spark, sf_dir):
     matches the one-writer-per-shard export sink."""
     return tx.shuffle_shards(
         load_table(spark, sf_dir, "documents"), key_col="doc_id", n_shards=8
-    ).orderBy("doc_id")
+    )
 
 
 # --- SMP4: weighted Bernoulli sampling ---------------------------------------
@@ -3641,7 +3518,6 @@ def smp4_weighted_sample(spark, sf_dir):
     return (
         tx.weighted_sample(docs, keep_p, key_col="doc_id")
         .select("doc_id", "source", "n_chars")
-        .orderBy("doc_id")
     )
 
 
@@ -3673,7 +3549,7 @@ def mix1_domain_quota(spark, sf_dir):
     'sample each domain to its token allocation'."""
     return tx.domain_quota_sample(
         load_table(spark, sf_dir, "documents"), budget=5000
-    ).orderBy("doc_id")
+    )
 
 
 # --- TS10: return z-score outliers -------------------------------------------
@@ -3707,9 +3583,7 @@ ORDER BY symbol, trade_date""",
 def ts10_zscore_outliers(spark, sf_dir):
     """Per-series return z-score spike screen (|z| >= 2, rounded before
     thresholding so the flagged set is engine-independent)."""
-    return tseries.zscore_outliers(_ts_series(spark, sf_dir), 2.0).orderBy(
-        "symbol", "trade_date"
-    )
+    return tseries.zscore_outliers(_ts_series(spark, sf_dir), 2.0)
 
 
 # --- E6: weekly retention cohorts --------------------------------------------
@@ -3734,9 +3608,7 @@ ORDER BY 1, 2""",
 def e6_retention_cohorts(spark, sf_dir):
     """Weekly cohort-retention matrix in long form (cohort = ISO week of
     first activity; offsets are exact Monday-date arithmetic)."""
-    return ev.retention_cohorts(load_table(spark, sf_dir, "events")).orderBy(
-        "cohort_week", "week_offset"
-    )
+    return ev.retention_cohorts(load_table(spark, sf_dir, "events"))
 
 
 # --- DD11: incremental-ingest dedup ------------------------------------------
@@ -3772,7 +3644,6 @@ def dd11_incremental_dedup(spark, sf_dir):
     return (
         dedup.incremental_dedup(new_batch, seen, fingerprint_col=head_fp)
         .select("doc_id", "lang", "source", "n_chars")
-        .transform(lambda d: materialize_then_sort(d, "doc_id"))
     )
 
 
@@ -3819,7 +3690,7 @@ def r8_unpivot_ohlc(spark, sf_dir):
         ["open_px", "high_px", "low_px", "close_px"],
         "field",
         "px",
-    ).orderBy("symbol", "bucket", "field")
+    )
 
 
 # --- IV2: interval-overlap join (concurrent sessions) ------------------------
@@ -3895,7 +3766,7 @@ def iv2_concurrent_sessions(spark, sf_dir):
         "start_b",
         F.greatest("start_a", "start_b").alias("overlap_start"),
         F.least("end_a", "end_b").alias("overlap_end"),
-    ).orderBy("user_a", "start_a", "user_b", "start_b")
+    )
 
 
 # --- ST7: streaming incremental-ingest dedup ---------------------------------
@@ -3935,8 +3806,7 @@ def st7_streaming_ingest_dedup(spark, sf_dir):
     survivors = dedup.incremental_dedup(
         docs_stream, seen, fingerprint_col=head_fp
     ).select("doc_id", "lang", "source", "n_chars")
-    out = sj.run_stream_to_memory(survivors, "st7_sink", output_mode="append")
-    return out.orderBy("doc_id")
+    return sj.run_stream_to_memory(survivors, "st7_sink", output_mode="append")
 
 
 # --- TS11: forward fill ------------------------------------------------------
@@ -3987,7 +3857,6 @@ def ts11_forward_fill(spark, sf_dir):
             "close_gapped",
             F.col("close_gapped_x").alias("close_filled"),
         )
-        .orderBy("symbol", "trade_date")
     )
 
 
@@ -4031,7 +3900,6 @@ def ts12_linear_trend(spark, sf_dir):
             F.round(F.regr_intercept("y", "x"), 6).alias("intercept"),
             F.round(F.regr_r2("y", "x"), 6).alias("r2"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -4096,7 +3964,6 @@ def ts13_market_beta(spark, sf_dir):
             F.round(F.regr_intercept("ret", "mkt_ret"), 6).alias("alpha"),
             F.round(F.corr("ret", "mkt_ret"), 6).alias("mkt_corr"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -4135,7 +4002,6 @@ def j9_salted_join(spark, sf_dir):
             .cast("double")
             .alias("total_price"),
         )
-        .orderBy("segment")
     )
 
 
@@ -4164,9 +4030,7 @@ def tx11_lm_quality(spark, sf_dir):
     """CCNet-style LM quality filter with the corpus unigram distribution
     as the LM: mean token log-probability per document (low = gibberish /
     rare-token-heavy, high = boilerplate; filter both tails)."""
-    return tx.lm_quality_score(load_table(spark, sf_dir, "documents")).orderBy(
-        "doc_id"
-    )
+    return tx.lm_quality_score(load_table(spark, sf_dir, "documents"))
 
 
 # --- U4: intersect -----------------------------------------------------------
@@ -4191,7 +4055,7 @@ def u4_intersect_symbols(spark, sf_dir):
     traded = (
         price_frame(spark, sf_dir).filter(F.col("volume") > 0).select("symbol")
     )
-    return active.intersect(traded).orderBy("symbol")
+    return active.intersect(traded)
 
 
 # --- A11: deterministic mode per group ---------------------------------------
@@ -4238,7 +4102,6 @@ def a11_modal_priority(spark, sf_dir):
             F.col("priority").alias("modal_priority"),
             F.col("n").alias("n_orders"),
         )
-        .orderBy("segment")
     )
 
 
@@ -4354,9 +4217,7 @@ def dd12_crossdoc_ngram(spark, sf_dir):
     """Per-doc fraction of distinct 5-grams shared with another document
     (cross-corpus contamination signal). The shuffle key is the 64-bit
     gram hash, never the gram string — see operators.text.crossdoc_ngram_stats."""
-    return tx.crossdoc_ngram_stats(load_table(spark, sf_dir, "documents"), n=5).orderBy(
-        "doc_id"
-    )
+    return tx.crossdoc_ngram_stats(load_table(spark, sf_dir, "documents"), n=5)
 
 
 @query(
@@ -4414,7 +4275,6 @@ def j10_bloom_semi_join(spark, sf_dir):
             .cast("double")
             .alias("sum_qty"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -4450,9 +4310,7 @@ def ts14_ewma(spark, sf_dir):
     prices = price_frame(spark, sf_dir, RETURN_SYMBOLS).select(
         "symbol", "trade_date", "close_price"
     )
-    return ts_ops.ewma(prices, alpha=0.2, round_digits=4).orderBy(
-        "symbol", "trade_date"
-    )
+    return ts_ops.ewma(prices, alpha=0.2, round_digits=4)
 
 
 @query(
@@ -4489,7 +4347,7 @@ def mix2_temperature_resample(spark, sf_dir):
     operators.text.temperature_resample."""
     return tx.temperature_resample(
         load_table(spark, sf_dir, "documents"), temperature=2.0, scale=1.0
-    ).orderBy("doc_id", "copy_idx")
+    )
 
 
 @query(
@@ -4516,9 +4374,7 @@ def e7_cumulative_users(spark, sf_dir):
     is the unscalable form; this is the first-appearance rewrite (one
     map-combined aggregate + a running sum over the bounded day grid) —
     see operators.events.cumulative_distinct_users."""
-    return ev.cumulative_distinct_users(load_table(spark, sf_dir, "events")).orderBy(
-        "event_type", "day"
-    )
+    return ev.cumulative_distinct_users(load_table(spark, sf_dir, "events"))
 
 
 _CAL_IN = ", ".join(f"'{s}'" for s in STOCK_SYMBOLS)
@@ -4554,9 +4410,7 @@ def ts15_calendar_fill(spark, sf_dir):
     prices = price_frame(spark, sf_dir, STOCK_SYMBOLS).select(
         "symbol", "trade_date", "close_price"
     )
-    return ts_ops.calendar_fill(prices, ["close_price"]).orderBy(
-        "symbol", "trade_date"
-    )
+    return ts_ops.calendar_fill(prices, ["close_price"])
 
 
 @query(
@@ -4583,11 +4437,10 @@ def iv3_nearest_event(spark, sf_dir):
     never the |L|x|R| theta join (which the sf-scale oracle runs) — see
     operators.events.nearest_event_join."""
     events = load_table(spark, sf_dir, "events")
-    out = ev.nearest_event_join(
+    return ev.nearest_event_join(
         events.filter(F.col("event_type") == "click"),
         events.filter(F.col("event_type") == "error"),
     )
-    return out.orderBy("left_id")
 
 
 @query(
@@ -4609,7 +4462,7 @@ def ts16_rolling_median(spark, sf_dir):
     prices = price_frame(spark, sf_dir, RETURN_SYMBOLS).select(
         "symbol", "trade_date", "close_price"
     )
-    return ts_ops.rolling_median(prices, 15).orderBy("symbol", "trade_date")
+    return ts_ops.rolling_median(prices, 15)
 
 
 @query(
@@ -4630,7 +4483,7 @@ def u5_bag_difference(spark, sf_dir):
     cut = F.lit("2024-01-15").cast("timestamp")
     l = events.filter(F.col("ts") < cut).select("user_id", "event_type")
     r = events.filter(F.col("ts") >= cut).select("user_id", "event_type")
-    return bag_difference(l, r).orderBy("user_id", "event_type")
+    return bag_difference(l, r)
 
 
 @query(
@@ -4667,9 +4520,7 @@ def ts17_cusum(spark, sf_dir):
     prices = price_frame(spark, sf_dir, RETURN_SYMBOLS).select(
         "symbol", "trade_date", "close_price"
     )
-    return ts_ops.cusum(prices, slack=0.0, threshold=0.05).orderBy(
-        "symbol", "trade_date"
-    )
+    return ts_ops.cusum(prices, slack=0.0, threshold=0.05)
 
 
 @query(
@@ -4713,7 +4564,6 @@ def apx3_sketch_rollup(spark, sf_dir):
             ).alias("approx_ok"),
             "merge_consistent",
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -4739,7 +4589,7 @@ def tx13_bigram_lm(spark, sf_dir):
     ln P(w_i | w_{i-1}) per doc — catches shuffled-word gibberish the
     unigram score (tx11) cannot; bigrams shuffle as 64-bit hashes — see
     operators.text.bigram_lm_score."""
-    return tx.bigram_lm_score(load_table(spark, sf_dir, "documents")).orderBy("doc_id")
+    return tx.bigram_lm_score(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -4784,7 +4634,7 @@ def e8_last_touch_attribution(spark, sf_dir):
     return joined.select(
         "user_id", "purchase_id", F.col("pts").alias("purchase_ts"), "value",
         "click_id", "click_ts",
-    ).orderBy("purchase_id")
+    )
 
 
 @query(
@@ -4815,7 +4665,6 @@ def st8_streaming_ewma(spark, sf_dir):
         out.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .orderBy("user_id")
     )
 
 
@@ -4840,7 +4689,7 @@ def dq2_freshness(spark, sf_dir):
 
     return freshness_report(
         price_frame(spark, sf_dir), max_staleness_days=30
-    ).orderBy("symbol")
+    )
 
 
 _ADJ_SYMBOLS = ["3", "7", "16", "27", "42", "101"]
@@ -4895,7 +4744,7 @@ def ts18_adjusted_close(spark, sf_dir):
     prices = price_frame(spark, sf_dir, _ADJ_SYMBOLS).select(
         "symbol", "trade_date", "close_price"
     )
-    return ts_ops.adjusted_close(prices, actions).orderBy("symbol", "trade_date")
+    return ts_ops.adjusted_close(prices, actions)
 
 
 @query(
@@ -4918,7 +4767,7 @@ def ts19_vwap(spark, sf_dir):
     prices = price_frame(spark, sf_dir, STOCK_SYMBOLS)
     return ts_ops.vwap(
         prices, F.date_trunc("month", F.col("trade_date")).cast("date")
-    ).orderBy("symbol", "bucket")
+    )
 
 
 @query(
@@ -4943,9 +4792,7 @@ def e9_markov_transitions(spark, sf_dir):
     estimate): one lead-window pass over the per-key shuffle, counts
     aggregated before the probability join — see
     operators.events.transition_matrix."""
-    return ev.transition_matrix(load_table(spark, sf_dir, "events")).orderBy(
-        "from_type", "to_type"
-    )
+    return ev.transition_matrix(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -4981,7 +4828,6 @@ def st9_streaming_windowed_topk(spark, sf_dir):
         out.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= 3)
         .select("window_start", "event_type", "n_events", "rnk")
-        .orderBy("window_start", "rnk")
     )
 
 
@@ -5019,7 +4865,7 @@ def dp2_quantity_drift(spark, sf_dir):
         li,
         bucket_col=F.floor((F.col("l_quantity").cast("long") - 1) / 10).cast("long"),
         is_reference_col=F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"),
-    ).orderBy("bucket")
+    )
 
 
 @query(
@@ -5066,7 +4912,7 @@ def dd13_span_dedup(spark, sf_dir):
     operators.dedup.remove_duplicate_spans."""
     return dedup.remove_duplicate_spans(
         load_table(spark, sf_dir, "documents"), n=5
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -5097,7 +4943,7 @@ def shf2_interleave_sources(spark, sf_dir):
     operators.text.interleave_sources."""
     return tx.interleave_sources(
         load_table(spark, sf_dir, "documents"), n_shards=8
-    ).orderBy("doc_id")
+    )
 
 
 @query("k7_knn_pq")  # rows-only: PQ codebooks/codes aren't SQL-expressible
@@ -5148,7 +4994,7 @@ def ts20_seasonal_baseline(spark, sf_dir):
     )
     return ts_ops.seasonal_baseline(prices).select(
         "symbol", "trade_date", "close_price", "dow", "dow_avg", "seasonal_ratio"
-    ).orderBy("symbol", "trade_date")
+    )
 
 
 @query(
@@ -5181,11 +5027,7 @@ def smp5_negative_sampling(spark, sf_dir):
     per anchor over a range-partitioned exact rank (ids not assumed
     dense; no single-task window); self-draws shift to the next rank —
     see operators.text.negative_sampling."""
-    return materialize_then_sort(
-        tx.negative_sampling(load_table(spark, sf_dir, "documents"), k=4),
-        "doc_id",
-        "neg_idx",
-    )
+    return tx.negative_sampling(load_table(spark, sf_dir, "documents"), k=4)
 
 
 @query(
@@ -5225,7 +5067,6 @@ def st10_streaming_running_stats(spark, sf_dir):
         out.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .orderBy("user_id")
     )
 
 
@@ -5257,7 +5098,7 @@ def ts21_robust_scale(spark, sf_dir):
     )
     return ts_ops.robust_scale(prices).select(
         "symbol", "trade_date", "close_price", "median", "iqr", "scaled"
-    ).orderBy("symbol", "trade_date")
+    )
 
 
 _ALLEN_CASE = """CASE
@@ -5324,7 +5165,7 @@ def iv4_allen_relations(spark, sf_dir):
         bucket="1 hour",
         extra_condition=F.col("user_a") < F.col("user_b"),
     )
-    return ev.allen_relation_census(pairs).orderBy("relation")
+    return ev.allen_relation_census(pairs)
 
 
 # ===========================================================================
@@ -5355,7 +5196,7 @@ def ts22_sharpe(spark, sf_dir):
     one window pass + one map-combined moment aggregate; ratio rounded
     (moment accumulation is engine-internal). See
     operators.timeseries.sharpe_ratio."""
-    return tseries.sharpe_ratio(_ts_series(spark, sf_dir)).orderBy("symbol")
+    return tseries.sharpe_ratio(_ts_series(spark, sf_dir))
 
 
 @query(
@@ -5385,9 +5226,7 @@ def ts23_donchian(spark, sf_dir):
     flags — exact associative aggregates, fully deterministic, one
     shuffle on the series key. See
     operators.timeseries.donchian_channels."""
-    return tseries.donchian_channels(_ts_series(spark, sf_dir), 20).orderBy(
-        "symbol", "trade_date"
-    )
+    return tseries.donchian_channels(_ts_series(spark, sf_dir), 20)
 
 
 @query(
@@ -5414,7 +5253,7 @@ def ts24_return_autocorr(spark, sf_dir):
     """Lag-1 autocorrelation of daily returns per symbol (mean-reversion
     diagnostic); corr rounded at 6dp. See
     operators.timeseries.return_autocorr."""
-    return tseries.return_autocorr(_ts_series(spark, sf_dir), 1).orderBy("symbol")
+    return tseries.return_autocorr(_ts_series(spark, sf_dir), 1)
 
 
 @query(
@@ -5445,7 +5284,7 @@ def ts25_xs_momentum(spark, sf_dir):
     out = tseries.cross_sectional_momentum(p, lookback=20, n_quantiles=5)
     return out.filter(
         (F.col("trade_date") >= "1998-06-01") & (F.col("trade_date") <= "1998-06-30")
-    ).orderBy("trade_date", "xs_rank")
+    )
 
 
 @query(
@@ -5468,7 +5307,7 @@ def ts26_amihud_illiquidity(spark, sf_dir):
     with no output rounding. See
     operators.timeseries.amihud_illiquidity."""
     p = returns_frame(spark, sf_dir)
-    return tseries.amihud_illiquidity(p, ret_col="ret").orderBy("symbol")
+    return tseries.amihud_illiquidity(p, ret_col="ret")
 
 
 @query(
@@ -5520,7 +5359,7 @@ def ts27_candlestick_flags(spark, sf_dir):
         F.col("open").alias("open_px"), F.col("high").alias("high_px"),
         F.col("low").alias("low_px"), F.col("close").alias("close_px"),
         "volume", "bullish", "doji", "engulfing_up", "engulfing_down",
-    ).orderBy("symbol", "bucket")
+    )
 
 
 # ===========================================================================
@@ -5555,7 +5394,7 @@ def e10_conversion_latency(spark, sf_dir):
     See operators.events.conversion_latency."""
     return ev.conversion_latency(
         load_table(spark, sf_dir, "events"), "view", "purchase"
-    ).orderBy("user_id")
+    )
 
 
 @query(
@@ -5584,7 +5423,7 @@ def e11_rfm_scores(spark, sf_dir):
     (analytics.global_ntile) — never a single-task global window.
     Monetary accumulates in DECIMAL for engine-exact sums. See
     operators.events.rfm_scores."""
-    return ev.rfm_scores(load_table(spark, sf_dir, "events")).orderBy("user_id")
+    return ev.rfm_scores(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -5609,7 +5448,7 @@ def e12_burst_detection(spark, sf_dir):
         load_table(spark, sf_dir, "events"),
         window_duration="1 minute",
         burst_threshold=3,
-    ).orderBy("user_id")
+    )
 
 
 # ===========================================================================
@@ -5641,9 +5480,7 @@ def tx14_sentence_stats(spark, sf_dir):
     per sentence) — map-only higher-order expressions, no shuffle; the
     average is an exact integer ratio. See
     operators.text.sentence_stats."""
-    return materialize_then_sort(
-        tx.sentence_stats(load_table(spark, sf_dir, "documents")), "doc_id"
-    )
+    return tx.sentence_stats(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -5680,7 +5517,7 @@ def tx15_zipf_slope(spark, sf_dir):
     ln-product sums are fixed-pointed to 1e-9 and accumulated as BIGINT,
     so the closed-form slope is engine-exact with no output rounding.
     See operators.text.zipf_slope."""
-    return tx.zipf_slope(load_table(spark, sf_dir, "documents")).orderBy("lang")
+    return tx.zipf_slope(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -5713,7 +5550,7 @@ def dd14_crossdoc_sentences(spark, sf_dir):
     operators.text.crossdoc_sentence_stats."""
     return tx.crossdoc_sentence_stats(
         load_table(spark, sf_dir, "documents")
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -5749,7 +5586,7 @@ def smp6_quantile_stratified(spark, sf_dir):
         ).substr(1, 2)
         < "4d"
     )
-    return bucketed.filter(keep).orderBy("doc_id")
+    return bucketed.filter(keep)
 
 
 # ===========================================================================
@@ -5801,7 +5638,6 @@ def j11_band_range_join(spark, sf_dir):
             .cast("double")
             .alias("revenue"),
         )
-        .orderBy("band")
     )
 
 
@@ -5821,11 +5657,8 @@ def dq3_childless_orders(spark, sf_dir):
     keys = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey")
     )
-    return materialize_then_sort(
-        o.join(keys, "o_orderkey", "left_anti").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-        ),
-        "o_orderkey",
+    return o.join(keys, "o_orderkey", "left_anti").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
 
 
@@ -5874,7 +5707,6 @@ def a12_weighted_market_return(spark, sf_dir):
                 / (F.sum(F.round(F.col("amount") * 1e6).cast("decimal(38,0)")) / 1e6)
             ).alias("vw_return"),
         )
-        .orderBy("trade_date")
     )
 
 
@@ -5902,7 +5734,7 @@ def u6_symmetric_difference(spark, sf_dir):
     only_b = b.join(a, "symbol", "left_anti").select(
         "symbol", F.lit("only_second").alias("side")
     )
-    return only_a.unionByName(only_b).orderBy("symbol", "side")
+    return only_a.unionByName(only_b)
 
 
 # ===========================================================================
@@ -5949,7 +5781,7 @@ def iv5_interval_coverage(spark, sf_dir):
     self-join. See operators.events.interval_coverage."""
     return ev.interval_coverage(
         load_table(spark, sf_dir, "events"), duration_minutes=10
-    ).orderBy("user_id")
+    )
 
 
 @query(
@@ -5981,7 +5813,7 @@ def e13_bounce_rate(spark, sf_dir):
     """Per-user session bounce rate (share of 1-event sessions, 30-min
     gap rule): sessionize + one aggregate on the already-partitioned
     user key. See operators.events.bounce_rate."""
-    return ev.bounce_rate(load_table(spark, sf_dir, "events")).orderBy("user_id")
+    return ev.bounce_rate(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -6012,7 +5844,7 @@ def cdc2_status_history(spark, sf_dir):
         "o_custkey",
         ["o_orderdate", "o_orderkey"],
         "o_orderstatus",
-    ).orderBy("o_custkey", "run_start", "o_orderstatus")
+    )
 
 
 @query(
@@ -6031,12 +5863,8 @@ def k8_radius_search(spark, sf_dir):
     fixed k): broadcast queries, one corpus scan, map-side filter — no
     shuffle after the scan. See operators.similarity.radius_search."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return materialize_then_sort(
-        similarity.radius_search(
-            emb, emb.filter(F.col("vec_id").isin(0, 1, 2)), threshold=0.15
-        ),
-        "query_id",
-        "vec_id",
+    return similarity.radius_search(
+        emb, emb.filter(F.col("vec_id").isin(0, 1, 2)), threshold=0.15
     )
 
 
@@ -6078,7 +5906,6 @@ def st11_streaming_burst(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n_windows"),
         )
         .withColumn("is_burst", (F.col("peak_per_window") >= 3).cast("boolean"))
-        .orderBy("user_id")
     )
 
 
@@ -6120,7 +5947,6 @@ def mm6_phash_dedup(spark, sf_dir):
             ).alias("media_ids"),
         )
         .filter(F.col("n_images") >= 2)
-        .orderBy("phash")
     )
 
 
@@ -6149,7 +5975,7 @@ def e14_sliding_active_users(spark, sf_dir):
     feeds. See operators.events.sliding_active_users."""
     return ev.sliding_active_users(
         load_table(spark, sf_dir, "events"), window_days=7
-    ).orderBy("day")
+    )
 
 
 @query(
@@ -6180,9 +6006,7 @@ def pk2_bucketed_batches(spark, sf_dir):
     lengths batch together, padding waste bounded by the bucket edge),
     then the distributed running-sum pack within (bucket, shard) — one
     exchange, no single-task window. See operators.text.bucketed_batches."""
-    return tx.bucketed_batches(load_table(spark, sf_dir, "documents")).orderBy(
-        "doc_id"
-    )
+    return tx.bucketed_batches(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -6220,10 +6044,7 @@ def tx16_quality_gate(spark, sf_dir):
     auditable form of a pretraining filter; the reasons string is what
     a data-quality dashboard aggregates). Map-only, split staged once.
     See operators.text.quality_gate."""
-    return materialize_then_sort(
-        tx.quality_gate(load_table(spark, sf_dir, "documents")),
-        "doc_id"
-    )
+    return tx.quality_gate(load_table(spark, sf_dir, "documents"))
 
 
 # ===========================================================================
@@ -6302,7 +6123,7 @@ def ts28_drawdown_duration(spark, sf_dir):
     below-running-peak flag, one shuffle on the series key. See
     operators.timeseries.drawdown_duration."""
     p = price_frame(spark, sf_dir).filter(F.col("close_price") > 0)
-    return tseries.drawdown_duration(p).orderBy("symbol")
+    return tseries.drawdown_duration(p)
 
 
 # ===========================================================================
@@ -6340,7 +6161,6 @@ def smp7_group_reservoir(spark, sf_dir):
         .withColumn("_rn", F.row_number().over(Window.partitionBy("lang").orderBy("_h", "doc_id")))
         .filter(F.col("_rn") <= 20)
         .select("doc_id", "lang", "n_chars")
-        .orderBy("doc_id")
     )
 
 
@@ -6394,7 +6214,6 @@ def r9_pareto_symbols(spark, sf_dir):
             (F.col("_cum") / F.col("_t").cast("double")).alias("cum_share"),
             ((F.col("_cum") / F.col("_t").cast("double")) <= 0.8).alias("in_top80"),
         )
-        .orderBy("rnk")
     )
 
 
@@ -6433,7 +6252,7 @@ def f10_time_features(spark, sf_dir):
         # Spark dayofweek is Sunday=1; ISO (DuckDB isodow) is Monday=1
         "day_of_week",
         ((F.col("_dow_sun1") + 5) % 7 + 1).cast("long"),
-    ).drop("_dow_sun1").orderBy("symbol", "trade_date")
+    ).drop("_dow_sun1")
 
 
 # ===========================================================================
@@ -6498,7 +6317,6 @@ def k9_label_centroids(spark, sf_dir):
             F.posexplode("centroid").alias("dim", "component"),
         )
         .withColumn("dim", F.col("dim").cast("long"))
-        .orderBy("label", "dim")
     )
 
 
@@ -6687,7 +6505,7 @@ def fx1_feature_matrix(spark, sf_dir):
             (F.col("close_price") - F.col("lo_20"))
             / (F.col("hi_20") - F.col("lo_20")),
         ).alias("chan_pos_20"),
-    ).orderBy("symbol", "trade_date")
+    )
 
 
 @query(
@@ -6745,7 +6563,7 @@ def fx2_point_in_time_join(spark, sf_dir):
         "event_id", "symbol", "event_date",
         F.col("trade_date").alias("feature_date"),
         F.col("close_price").alias("feature_close"),
-    ).orderBy("event_id")
+    )
 
 
 # ===========================================================================
@@ -6797,7 +6615,7 @@ def smp8_purged_split(spark, sf_dir):
     return p.select(
         "symbol", "trade_date", "close_price",
         fold.alias("fold"), split.alias("split"),
-    ).orderBy("symbol", "trade_date")
+    )
 
 
 # ===========================================================================
@@ -6815,7 +6633,7 @@ def apx5_sliding_actives_hll(spark, sf_dir):
     HLL error is pinned by pytest."""
     return ev.sliding_active_users_hll(
         load_table(spark, sf_dir, "events"), window_days=7
-    ).orderBy("day")
+    )
 
 
 # ===========================================================================
@@ -6843,9 +6661,7 @@ def e16_interarrival_stats(spark, sf_dir):
     so the mean is exact BIGINT arithmetic — engine-identical with no
     rounding. One series-key shuffle. See
     operators.events.interarrival_stats."""
-    return ev.interarrival_stats(load_table(spark, sf_dir, "events")).orderBy(
-        "user_id"
-    )
+    return ev.interarrival_stats(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -6861,9 +6677,7 @@ def e17_hourly_profile(spark, sf_dir):
     exact distinct actors per cell — the load-forecast / anomaly
     baseline. Constant-size output, map-side combine does the work. See
     operators.events.hourly_profile."""
-    return ev.hourly_profile(load_table(spark, sf_dir, "events")).orderBy(
-        "day_of_week", "hour"
-    )
+    return ev.hourly_profile(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -6915,7 +6729,6 @@ def e18_first_touch_attribution(spark, sf_dir):
             F.when(hit, F.col("_fid")).alias("first_click_id"),
             F.when(hit, F.col("_fts")).alias("first_click_ts"),
         )
-        .orderBy("purchase_id")
     )
 
 
@@ -6933,9 +6746,7 @@ def e19_event_type_pairs(spark, sf_dir):
     bounded by the TYPE VOCABULARY (C(|types|,2) per user), never event
     volume — the distinct (user, type) pass collapses the stream first.
     See operators.events.event_type_pairs."""
-    return ev.event_type_pairs(load_table(spark, sf_dir, "events")).orderBy(
-        "type_a", "type_b"
-    )
+    return ev.event_type_pairs(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -6955,7 +6766,7 @@ def e20_stickiness(spark, sf_dir):
     track. One (month, day, user) distinct pass feeds every aggregate;
     the DAU mean is exact integer arithmetic so the ratio is
     engine-identical. See operators.events.stickiness."""
-    return ev.stickiness(load_table(spark, sf_dir, "events")).orderBy("month")
+    return ev.stickiness(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -6991,7 +6802,6 @@ def dq4_ship_lag(spark, sf_dir):
             F.max(lag).cast("long").alias("max_lag_days"),
             F.sum(F.when(lag < 0, 1).otherwise(0)).cast("long").alias("n_negative"),
         )
-        .orderBy("priority")
     )
 
 
@@ -7035,7 +6845,6 @@ def dq5_benford_digits(spark, sf_dir):
             F.round(F.col("n") / tot, 6).alias("observed_share"),
             F.round(F.log10(1 + 1.0 / F.col("digit")), 6).alias("benford_share"),
         )
-        .orderBy("digit")
     )
 
 
@@ -7068,7 +6877,7 @@ def ts29_ulcer_index(spark, sf_dir):
     summed so the root is engine-identical. See
     operators.timeseries.ulcer_index."""
     p = price_frame(spark, sf_dir).filter(F.col("close_price").isNotNull())
-    return tseries.ulcer_index(p).orderBy("symbol")
+    return tseries.ulcer_index(p)
 
 
 @query(
@@ -7096,7 +6905,7 @@ def ts30_obv(spark, sf_dir):
     accumulation/distribution divergence. All-integer arithmetic
     (sign x volume), exact in any engine; two window passes share one
     series-key shuffle. See operators.timeseries.on_balance_volume."""
-    return tseries.on_balance_volume(price_frame(spark, sf_dir)).orderBy("symbol")
+    return tseries.on_balance_volume(price_frame(spark, sf_dir))
 
 
 @query(
@@ -7130,7 +6939,7 @@ def ts31_streaks(spark, sf_dir):
     symbol — gaps-and-islands on the daily change sign (flat days break
     streaks). Run lengths are integers, exact everywhere; one series-key
     shuffle. See operators.timeseries.streak_stats."""
-    return tseries.streak_stats(price_frame(spark, sf_dir)).orderBy("symbol")
+    return tseries.streak_stats(price_frame(spark, sf_dir))
 
 
 @query(
@@ -7158,7 +6967,6 @@ def r10_share_of_total(spark, sf_dir):
             "total_amount",
             (cents / F.sum(cents).over(w)).alias("market_share"),
         )
-        .orderBy("market", "symbol")
     )
 
 
@@ -7191,7 +6999,6 @@ def r11_close_quartiles(spark, sf_dir):
             F.round(F.col("_q")[1], 6).alias("med"),
             F.round(F.col("_q")[2], 6).alias("q3"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -7220,7 +7027,6 @@ def smp9_systematic_sample(spark, sf_dir):
     return (
         ranked.filter((F.col("rn") - 1) % 20 == 0)
         .select("doc_id", "rn")
-        .orderBy("rn")
     )
 
 
@@ -7251,9 +7057,7 @@ def k10_centroid_distances(spark, sf_dir):
     fixed-point means of k9, distances fold JVM-side via
     zip_with/aggregate. See operators.similarity.centroid_distances."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.centroid_distances(emb, "label").orderBy(
-        "group_a", "group_b"
-    )
+    return similarity.centroid_distances(emb, "label")
 
 
 @query(
@@ -7280,7 +7084,7 @@ def tx18_charset_stats(spark, sf_dir):
     share. Map-only JVM regex counting, fully codegen'd. See
     operators.text.charset_stats."""
     docs = load_table(spark, sf_dir, "documents")
-    return materialize_then_sort(tx.charset_stats(docs), "doc_id")
+    return tx.charset_stats(docs)
 
 
 # ===========================================================================
@@ -7337,7 +7141,7 @@ def a13_advance_decline(spark, sf_dir):
     )
     return daily.withColumn(
         "ad_line", F.sum(F.col("n_adv") - F.col("n_dec")).over(w).cast("long")
-    ).orderBy("market", "trade_date")
+    )
 
 
 @query(
@@ -7369,7 +7173,6 @@ def cdc3_point_in_time_status(spark, sf_dir):
     return (
         latest.groupBy("status")
         .agg(F.count(F.lit(1)).cast("long").alias("n_customers"))
-        .orderBy("status")
     )
 
 
@@ -7395,7 +7198,7 @@ def k11_norm_stats(spark, sf_dir):
     Fixed-point fold per row, map-only until one bounded label groupBy.
     See operators.similarity.norm_stats."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.norm_stats(emb, "label").orderBy("label")
+    return similarity.norm_stats(emb, "label")
 
 
 @query(
@@ -7427,7 +7230,7 @@ def fx3_lagged_features(spark, sf_dir):
         F.lag("close_price", 5).over(w).alias("close_lag5"),
         fwd.alias("close_fwd1"),
         (fwd / F.col("close_price") - 1).alias("target_ret"),
-    ).orderBy("symbol", "trade_date")
+    )
 
 
 @query(
@@ -7470,7 +7273,7 @@ def tx19_dup_sentences(spark, sf_dir):
                 1 - F.size(F.array_distinct("_s")) * 1.0 / F.size("_s"), 6
             ),
         ).alias("dup_ratio"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -7518,7 +7321,6 @@ def j12_nation_top_customers(spark, sf_dir):
             F.col("_total").cast("double").alias("total_spend"),
             "rnk",
         )
-        .orderBy("nation", "rnk")
     )
 
 
@@ -7553,7 +7355,6 @@ def ts32_monthly_seasonality(spark, sf_dir):
                 / F.count(F.lit(1))
             ).alias("mean_ret"),
         )
-        .orderBy("month")
     )
 
 
@@ -7583,7 +7384,7 @@ def st13_streaming_distinct_users(spark, sf_dir):
     )
     return sj.run_stream_to_memory(
         stream, "st13_sink", output_mode="append"
-    ).orderBy("window_start")
+    )
 
 
 # ===========================================================================
@@ -7674,7 +7475,6 @@ def iv6_activity_span(spark, sf_dir):
                 F.countDistinct(F.to_date("ts")) * 1.0 / (span + 1), 6
             ).alias("density"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -7702,7 +7502,6 @@ def dd15_prefix_dup_groups(spark, sf_dir):
             F.min("doc_id").cast("long").alias("min_doc_id"),
         )
         .filter(F.col("n_docs") > 1)
-        .orderBy(F.desc("n_docs"), "prefix100")
     )
 
 
@@ -7766,7 +7565,7 @@ def ts33_weekly_atr(spark, sf_dir):
             / F.count(F.lit(1)).over(w14),
             6,
         ).alias("atr_14"),
-    ).orderBy("symbol", "bucket")
+    )
 
 
 @query(
@@ -7795,7 +7594,7 @@ def a14_hhi_concentration(spark, sf_dir):
     totals = _symbol_totals(spark, sf_dir).select(
         "market", F.round(F.col("total_amount") * 100).cast("long").alias("cents")
     )
-    return fixed_point_hhi(totals, "market").orderBy("market")
+    return fixed_point_hhi(totals, "market")
 
 
 def _k12_oracle_sql(k: int = 5, pool: int = 50) -> str:
@@ -7903,7 +7702,6 @@ def mm7_scene_changes(spark, sf_dir):
             F.round("max_frame_diff", 6).alias("max_frame_diff"),
             "n_cuts",
         )
-        .orderBy("media_id")
     )
 
 
@@ -7946,7 +7744,7 @@ def tx20_lexical_diversity(spark, sf_dir):
             F.size("_t") > 0,
             F.round(F.size(F.array_distinct("_t")) * 1.0 / F.size("_t"), 6),
         ).alias("ttr"),
-    ).transform(lambda d: materialize_then_sort(d, "doc_id"))
+    )
 
 
 @query(
@@ -7981,7 +7779,6 @@ def e21_dwell_time(spark, sf_dir):
             (F.sum("_d") / 1e6 / F.count(F.lit(1))).alias("mean_dwell_sec"),
             (F.max("_d") / 1e6).alias("max_dwell_sec"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -8054,7 +7851,6 @@ def ts34_calmar(spark, sf_dir):
                 F.round(cagr / F.abs(F.col("max_drawdown")), 6),
             ).alias("calmar"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -8083,7 +7879,7 @@ def a15_listing_flows(spark, sf_dir):
     feed (new listings in, delistings out). Two pruned aggregates
     unioned by month; pure date bucketing, exact counts. See
     operators.analytics.listing_flows."""
-    return analytics.listing_flows(master_frame(spark, sf_dir)).orderBy("month")
+    return analytics.listing_flows(master_frame(spark, sf_dir))
 
 
 # ===========================================================================
@@ -8137,7 +7933,6 @@ def k13_ivf_balance(spark, sf_dir):
                 F.col("n_vectors") * 1.0 * len(_IVF_CENTROID_IDS) / F.col("_n"), 6
             ).alias("balance_factor"),
         )
-        .orderBy("centroid_id")
     )
 
 
@@ -8187,7 +7982,7 @@ def fx4_winsorized_returns(spark, sf_dir):
         "trade_date",
         F.round("ret", 6).alias("ret_raw"),
         F.round(clipped, 6).alias("ret_winsorized"),
-    ).orderBy("trade_date", "symbol")
+    )
 
 
 @query(
@@ -8229,7 +8024,6 @@ def e22_anomalous_days(spark, sf_dir):
             F.round(z, 6).alias("zscore"),
             (F.abs(z) > 2).alias("is_anomaly"),
         )
-        .orderBy("day")
     )
 
 
@@ -8323,7 +8117,6 @@ def r12_percent_rank(spark, sf_dir):
             F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
             F.round(F.cume_dist().over(w), 6).alias("cume"),
         )
-        .orderBy("market", "symbol")
     )
 
 
@@ -8375,7 +8168,6 @@ def apx6_hll_day_overlap(spark, sf_dir):
                 "overlap_estimate"
             ),
         )
-        .orderBy("day")
     )
 
 
@@ -8446,7 +8238,6 @@ def e24_event_pagerank(spark, sf_dir):
             "node",
             F.round(F.col("rank_fp") / F.lit(float(PAGERANK_SCALE)), 6).alias("rank"),
         )
-        .orderBy(F.desc("rank"), "node")
     )
 
 
@@ -8518,9 +8309,7 @@ def ts35_rolling_sharpe(spark, sf_dir):
     sharpe = F.round(
         F.avg("ret").over(w60) / F.stddev_samp("ret").over(w60) * math.sqrt(252), 6
     )
-    return r.select("symbol", "trade_date", sharpe.alias("rolling_sharpe")).orderBy(
-        "symbol", "trade_date"
-    )
+    return r.select("symbol", "trade_date", sharpe.alias("rolling_sharpe"))
 
 
 @query(
@@ -8568,7 +8357,6 @@ def ts36_inverse_vol_weights(spark, sf_dir):
                 "weight"
             ),
         )
-        .orderBy("symbol")
     )
 
 
@@ -8637,7 +8425,6 @@ def dd16_source_jaccard(spark, sf_dir):
                 6,
             ).alias("jaccard"),
         )
-        .orderBy("source_a", "source_b")
     )
 
 
@@ -8672,7 +8459,7 @@ def a16_monthly_momentum(spark, sf_dir):
         F.round(F.col("turnover") / F.lag("turnover").over(w) - 1, 6).alias(
             "mom_growth"
         ),
-    ).orderBy("month")
+    )
 
 
 @query(
@@ -8742,7 +8529,7 @@ def e25_cohort_ltv(spark, sf_dir):
             F.sum((F.col("_rev_dec") * 100).cast("long")).over(w).cast("double")
             / 100
         ).alias("cumulative_ltv"),
-    ).orderBy("cohort_week", "week_offset")
+    )
 
 
 @query(
@@ -8778,7 +8565,6 @@ def iv7_gap_histogram(spark, sf_dir):
     return (
         staged.groupBy("event_type", bucket.alias("log10_gap_sec_bucket"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy("event_type", "log10_gap_sec_bucket")
     )
 
 
@@ -8836,7 +8622,6 @@ def tx21_bigram_entropy(spark, sf_dir):
             F.max("n").cast("long").alias("n_bigrams"),
             (F.sum(term) / 1e9).alias("bigram_entropy_bits"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -8895,7 +8680,6 @@ def ts37_updown_capture(spark, sf_dir):
             F.round(up_n / up_d, 6).alias("up_capture"),
             F.round(dn_n / dn_d, 6).alias("down_capture"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -9010,7 +8794,6 @@ def dp4_price_histogram(spark, sf_dir):
             (F.col("_lo") + (F.col("bin") + 1) * ((F.col("_hi") - F.col("_lo")) / 20)).alias("bin_hi"),
             "n",
         )
-        .orderBy("bin")
     )
 
 
@@ -9051,7 +8834,6 @@ def tx22_keyword_in_context(spark, sf_dir):
             F.col("pos").cast("long").alias("pos"),
             F.concat_ws(" ", F.slice("_t", lo, n)).alias("context"),
         )
-        .transform(lambda d: materialize_then_sort(d, "doc_id"))
     )
 
 
@@ -9082,7 +8864,7 @@ def ts38_rank_churn(spark, sf_dir):
     deterministic (symbol tiebreak); the correlation is rounded (moment
     accumulation order). Rank windows partition by month — bounded by
     the universe per month. See operators.timeseries.rank_churn."""
-    return tseries.rank_churn(price_frame(spark, sf_dir)).orderBy("month")
+    return tseries.rank_churn(price_frame(spark, sf_dir))
 
 
 @query(
@@ -9131,7 +8913,6 @@ def k15_label_confusion(spark, sf_dir):
     return (
         best.groupBy("true_label", "nearest_label")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy("true_label", "nearest_label")
     )
 
 
@@ -9180,7 +8961,6 @@ def dq6_monthly_coverage(spark, sf_dir):
                 "coverage"
             ),
         )
-        .orderBy("month", "symbol")
     )
 
 
@@ -9226,7 +9006,6 @@ def f11_target_encoding(spark, sf_dir):
                 (F.col("_s") - F.col("_p")) * 1.0 / (F.col("_n") - 1) / 100
             ).alias("loo_target_mean"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -9268,7 +9047,6 @@ def smp11_balanced_downsample(spark, sf_dir):
         ranked.crossJoin(F.broadcast(floor_n))
         .filter(F.col("rn") <= F.col("_n"))
         .select("doc_id", "lang", "rn")
-        .orderBy("lang", "rn")
     )
 
 
@@ -9302,9 +9080,7 @@ def tx23_vocab_coverage(spark, sf_dir):
     (count-ordered, term tiebreak) broadcast against the exploded
     tokens — one corpus aggregate + one map-side membership join. See
     operators.text.vocab_coverage."""
-    return tx.vocab_coverage(load_table(spark, sf_dir, "documents")).orderBy(
-        "doc_id"
-    )
+    return tx.vocab_coverage(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -9362,7 +9138,6 @@ def k16_simplified_silhouette(spark, sf_dir):
                 fp_sum(sil, 6) / F.count(F.lit(1))
             ).alias("mean_silhouette"),
         )
-        .orderBy("label")
     )
 
 
@@ -9477,7 +9252,6 @@ def tx24_pii_by_source(spark, sf_dir):
                 6,
             ).alias("pii_doc_rate"),
         )
-        .orderBy("source")
     )
 
 
@@ -9504,7 +9278,7 @@ def f12_feature_binning(spark, sf_dir):
         "trade_date",
         "close_price",
         F.ntile(4).over(w).cast("long").alias("price_quartile_bin"),
-    ).orderBy("symbol", "trade_date")
+    )
 
 
 @query(
@@ -9583,7 +9357,6 @@ def k17_ivf_recall(spark, sf_dir):
             F.count("_iv").cast("long").alias("n_recovered"),
             F.round(F.count("_iv") * 1.0 / 10, 6).alias("recall_at_10"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -9613,7 +9386,7 @@ def e28_wau_trend(spark, sf_dir):
         F.round(F.col("wau") * 1.0 / F.lag("wau").over(lw) - 1, 6).alias(
             "wow_growth"
         ),
-    ).orderBy("week")
+    )
 
 
 @query(
@@ -9687,7 +9460,7 @@ def ts40_return_moments(spark, sf_dir):
         F.col("n").cast("long").alias("n_returns"),
         F.round(skew, 6).alias("skewness"),
         F.round(kurt, 6).alias("excess_kurtosis"),
-    ).orderBy("symbol")
+    )
 
 
 @query(
@@ -9735,7 +9508,6 @@ def a18_turnover_gini(spark, sf_dir):
                 6,
             ).alias("gini"),
         )
-        .orderBy("market")
     )
 
 
@@ -9785,7 +9557,6 @@ def tx25_langid_confusion(spark, sf_dir):
         .join(pred, "doc_id")
         .groupBy("true_lang", "predicted_lang")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy("true_lang", "predicted_lang")
     )
 
 
@@ -9832,7 +9603,6 @@ def ts41_pain_index(spark, sf_dir):
             ).alias("pain_index"),
             F.round(F.min("_dd"), 6).alias("max_drawdown"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -9862,7 +9632,6 @@ def e30_hourly_conversion(spark, sf_dir):
                 "purchase_rate"
             ),
         )
-        .orderBy("hour")
     )
 
 
@@ -9908,7 +9677,6 @@ def dd18_shingle_df_profile(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n_shingles"),
             F.max("doc_freq").cast("long").alias("max_df_in_bucket"),
         )
-        .orderBy("log2_df_bucket")
     )
 
 
@@ -9946,7 +9714,6 @@ def smp12_proportional_strata(spark, sf_dir):
     return (
         ranked.filter(F.col("rn") <= F.round(F.col("_n") * 0.2).cast("long"))
         .select("doc_id", "lang", "rn")
-        .orderBy("lang", "rn")
     )
 
 
@@ -9992,7 +9759,6 @@ def e31_new_vs_returning(spark, sf_dir):
                 "returning_share"
             ),
         )
-        .orderBy("day")
     )
 
 
@@ -10027,7 +9793,7 @@ def a19_market_share_trend(spark, sf_dir):
         "month",
         (F.col("cents").cast("double") / 100).alias("turnover"),
         (F.col("cents") * 1.0 / F.sum("cents").over(wm)).alias("market_share"),
-    ).orderBy("market", "month")
+    )
 
 
 @query(
@@ -10076,7 +9842,6 @@ def e32_session_depth(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n_sessions"),
             F.sum("n_events").cast("long").alias("n_events"),
         )
-        .orderBy("log2_depth_bucket")
     )
 
 
@@ -10116,7 +9881,6 @@ def ts42_up_day_ratio(spark, sf_dir):
             F.round(n_up * 1.0 / n, 6).alias("up_ratio"),
             F.round((n_up - 0.5 * n) / (0.5 * F.sqrt(n)), 6).alias("binomial_z"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -10142,9 +9906,7 @@ def dd19_dedup_savings(spark, sf_dir):
     aggregate; at scale the groupBy key is the 128-bit text hash, the
     text itself never shuffles (lengths ride as ints). See
     operators.dedup.dedup_savings."""
-    return dedup.dedup_savings(load_table(spark, sf_dir, "documents")).orderBy(
-        "source"
-    )
+    return dedup.dedup_savings(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -10208,7 +9970,7 @@ def k18_text_ann_end_to_end(spark, sf_dir):
     probes = emb.filter(F.col("vec_id").isin([0, 1, 2]))
     return similarity.knn_batch(emb, probes, k=3).select(
         "query_id", "vec_id", "cosine", "rank"
-    ).orderBy("query_id", "rank")
+    )
 
 
 # ===========================================================================
@@ -10294,7 +10056,6 @@ def tx26_word_length_profile(spark, sf_dir):
             .alias("n_long_words"),
             (F.sum("wl") / F.count(F.lit(1))).alias("mean_word_len"),
         )
-        .orderBy("source")
     )
 
 
@@ -10355,7 +10116,6 @@ def iv8_peak_concurrency(spark, sf_dir):
         pts.withColumn("live", F.sum("delta").over(w))
         .groupBy("event_type")
         .agg(F.max("live").cast("long").alias("peak_concurrency"))
-        .orderBy("event_type")
     )
 
 
@@ -10392,7 +10152,6 @@ def e33_daypart_rollup(spark, sf_dir):
             .cast("double")
             .alias("total_value"),
         )
-        .orderBy("event_type", "daypart")
     )
 
 
@@ -10421,7 +10180,6 @@ def e34_active_gap_histogram(spark, sf_dir):
         .filter(F.col("gap").isNotNull())
         .groupBy(F.col("gap").cast("long").alias("gap_days"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy("gap_days")
     )
 
 
@@ -10456,7 +10214,6 @@ def ts43_series_gaps(spark, sf_dir):
             F.max("gap").cast("long").alias("max_gap_days"),
             F.sum("gap").cast("long").alias("total_gap_days"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -10491,7 +10248,6 @@ def u7_bag_intersect(spark, sf_dir):
         .agg(c95.alias("n_1995"), c96.alias("n_1996"))
         .filter((F.col("n_1995") > 0) & (F.col("n_1996") > 0))
         .withColumn("common", F.least("n_1995", "n_1996").cast("long"))
-        .orderBy("part_key")
     )
 
 
@@ -10527,7 +10283,6 @@ def dq8_natural_key_collisions(spark, sf_dir):
             .alias("n_collisions"),
             F.max("n").cast("long").alias("max_group"),
         )
-        .orderBy("brand")
     )
 
 
@@ -10594,7 +10349,6 @@ def k19_dim_variance(spark, sf_dir):
             mean.alias("mean"),
             (s2 / 1e12 / n - mean * mean).alias("variance"),
         )
-        .orderBy("dim")
     )
 
 
@@ -10631,7 +10385,7 @@ def f13_minmax_log_features(spark, sf_dir):
         .otherwise((F.col("close_price") - mn) / (mx - mn))
         .alias("close_scaled"),
         F.log(F.lit(1) + F.col("volume")).alias("log_volume"),
-    ).orderBy("symbol", "trade_date")
+    )
 
 
 @query(
@@ -10718,9 +10472,7 @@ def a20_breadth_thrust(spark, sf_dir):
     vs sequential) cannot change the float result. The unpartitioned
     window is post-aggregation over the trading CALENDAR — bounded
     domain, the a16 pattern. See operators.timeseries.breadth_thrust."""
-    return tseries.breadth_thrust(returns_frame(spark, sf_dir)).orderBy(
-        "trade_date"
-    )
+    return tseries.breadth_thrust(returns_frame(spark, sf_dir))
 
 
 # ===========================================================================
@@ -10769,7 +10521,7 @@ def cdc4_scd2_dimension(spark, sf_dir):
     )
     return ivm.scd2_history(
         orders, "o_custkey", "o_orderdate", "o_orderstatus", "o_orderkey"
-    ).orderBy("o_custkey", "valid_from")
+    )
 
 
 @query(
@@ -10824,7 +10576,6 @@ def iv9_interval_stabbing(spark, sf_dir):
         .agg(
             F.sum(F.when(covered, 1).otherwise(0)).cast("long").alias("n_covering")
         )
-        .orderBy("probe_idx")
     )
 
 
@@ -10846,7 +10597,6 @@ def smp13_kfold_assign(spark, sf_dir):
     return (
         tx.kfold_assign(docs, key_col="doc_id", k=5)
         .select("doc_id", "lang", "fold")
-        .orderBy("doc_id")
     )
 
 
@@ -10968,7 +10718,7 @@ def dp5_column_drift(spark, sf_dir):
         "n_1996",
         m96.alias("mean_1996"),
         ((m96 - m95) / m95 * 100.0).alias("drift_pct"),
-    ).orderBy("column_name")
+    )
 
 
 @query(
@@ -11012,7 +10762,6 @@ def ts44_parkinson_vol(spark, sf_dir):
                 F.sum("qv") / 1e12 / n / F.lit(4 * _math.log(2))
             ).alias("parkinson_vol"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -11051,7 +10800,7 @@ def f14_cyclic_time_features(spark, sf_dir):
         (F.round(F.cos(two_pi * dow / 7), 6) + 0).alias("dow_cos"),
         (F.round(F.sin(two_pi * month / 12), 6) + 0).alias("month_sin"),
         (F.round(F.cos(two_pi * month / 12), 6) + 0).alias("month_cos"),
-    ).orderBy("symbol", "trade_date")
+    )
 
 
 @query(
@@ -11088,7 +10837,6 @@ def a22_turn_of_month(spark, sf_dir):
             n.cast("long").alias("n_obs"),
             (F.sum("qret") / 1e9 / n).alias("mean_ret"),
         )
-        .orderBy("day_of_month")
     )
 
 
@@ -11157,7 +10905,6 @@ def dd21_dup_provenance(spark, sf_dir):
             .cast("long")
             .alias("n_cross_source"),
         )
-        .orderBy("source")
     )
 
 
@@ -11199,7 +10946,6 @@ def e35_repeat_latency(spark, sf_dir):
         firsts.filter(F.col("latency").isNotNull())
         .groupBy(F.col("latency").cast("long").alias("latency_days"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_users"))
-        .orderBy("latency_days")
     )
 
 
@@ -11262,7 +11008,6 @@ def k20_label_knn_purity(spark, sf_dir):
             F.sum("hit").cast("long").alias("n_same_label"),
             (F.sum("hit") / n).alias("purity"),
         )
-        .orderBy("label")
     )
 
 
@@ -11290,7 +11035,7 @@ def dq9_source_completeness(spark, sf_dir):
 
     return dq.source_completeness(
         load_table(spark, sf_dir, "documents")
-    ).orderBy("source")
+    )
 
 
 # ===========================================================================
@@ -11377,7 +11122,6 @@ def ts45_hurst_exponent(spark, sf_dir):
                 F.regr_slope(F.log("v"), F.log(F.col("q").cast("double"))) / 2, 6
             ).alias("hurst"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -11418,7 +11162,7 @@ def e36_second_order_markov(spark, sf_dir):
     ctx = Window.partitionBy("p2", "p1")
     return tri.select(
         "p2", "p1", "nxt", "n", (F.col("n") / F.sum("n").over(ctx)).alias("prob")
-    ).orderBy("p2", "p1", "nxt")
+    )
 
 
 @query(
@@ -11462,7 +11206,6 @@ def tx28_ngram_novelty(spark, sf_dir):
             uniq.cast("long").alias("n_unique"),
             (uniq / n).alias("novelty"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -11557,7 +11300,7 @@ def tx29_bpe_merges(spark, sf_dir):
     (tests/test_round6.py). See operators.text.bpe_train."""
     return tx.bpe_train(
         load_table(spark, sf_dir, "documents"), n_merges=8
-    ).orderBy("merge_rank")
+    )
 
 
 @query(
@@ -11609,9 +11352,7 @@ def f15_doc_feature_matrix(spark, sf_dir):
     alone); two explode passes over text, hash-only shuffles for the
     novelty join, exact-integer ratios throughout. See
     operators.text.doc_feature_matrix."""
-    return tx.doc_feature_matrix(load_table(spark, sf_dir, "documents")).orderBy(
-        "doc_id"
-    )
+    return tx.doc_feature_matrix(load_table(spark, sf_dir, "documents"))
 
 
 # ===========================================================================
@@ -11695,7 +11436,7 @@ def pipeline1_daily_update(spark, sf_dir):
         raw_delisted,
         now=_dt.datetime(2024, 6, 1, 2, 0, 0),
     )
-    return master.read_current().orderBy("symbol")
+    return master.read_current()
 
 
 def _daily_update_inputs(spark, sf_dir):
@@ -11820,7 +11561,6 @@ def pipeline3_daily_master_update(spark, sf_dir):
             F.min("delisting_date").alias("earliest_delisting"),
             F.max("delisting_date").alias("latest_delisting"),
         )
-        .orderBy("market")
     )
 
 
@@ -11887,7 +11627,7 @@ def dq10_order_price_reconciliation(spark, sf_dir):
     return analytics.order_price_reconciliation(
         load_table(spark, sf_dir, "orders"),
         load_table(spark, sf_dir, "lineitem"),
-    ).orderBy("order_status")
+    )
 
 
 @query(
@@ -11919,7 +11659,7 @@ def ts46_garman_klass_vol(spark, sf_dir):
     row per (symbol, day)); per-bar terms are fixed-pointed to 1e-12
     BIGINTs so the per-symbol mean is accumulation-order-proof. Two
     shuffles, no window. See operators.timeseries.garman_klass_vol."""
-    return tseries.garman_klass_vol(price_frame(spark, sf_dir)).orderBy("symbol")
+    return tseries.garman_klass_vol(price_frame(spark, sf_dir))
 
 
 @query(
@@ -11947,7 +11687,7 @@ def ts47_roll_spread(spark, sf_dir):
     estimator, complementing ts26's Amihud illiquidity. Full universe,
     single series-key shuffle; rides the memoized returns stage. See
     operators.timeseries.roll_spread."""
-    return tseries.roll_spread(returns_frame(spark, sf_dir)).orderBy("symbol")
+    return tseries.roll_spread(returns_frame(spark, sf_dir))
 
 
 @query(
@@ -11978,9 +11718,7 @@ def e37_retention_survival(spark, sf_dir):
     window's calendar span, not by users), the same bounded-domain
     single-partition argument as a16. See
     operators.events.retention_survival."""
-    return ev.retention_survival(load_table(spark, sf_dir, "events")).orderBy(
-        "lifetime_days"
-    )
+    return ev.retention_survival(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -12010,9 +11748,7 @@ def e38_event_type_lift(spark, sf_dir):
     from genuine behavioral association. Extends e19's co-occurrence
     counts with broadcast marginals; pair fan-out stays bounded by the
     type vocabulary. See operators.events.event_type_lift."""
-    return ev.event_type_lift(load_table(spark, sf_dir, "events")).orderBy(
-        "type_a", "type_b"
-    )
+    return ev.event_type_lift(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -12118,7 +11854,6 @@ def tx30_doc_entropy(spark, sf_dir):
                 fp_sum(-p * F.log2(p)), 6
             ).alias("entropy")
         )
-        .orderBy("doc_id")
     )
 
 
@@ -12156,7 +11891,6 @@ def smp14_anchor_positive_pairs(spark, sf_dir):
             F.lead("n_chars").over(w).alias("positive_chars"),
         )
         .filter(F.col("positive_id").isNotNull())
-        .orderBy("source", "anchor_id")
     )
 
 
@@ -12193,7 +11927,7 @@ def k22_quantization_error(spark, sf_dir):
     operators.similarity.quantization_error_stats."""
     return similarity.quantization_error_stats(
         load_table(spark, sf_dir, "embeddings"), group_col="label"
-    ).orderBy("label")
+    )
 
 
 @query(
@@ -12247,7 +11981,6 @@ def e39_power_users(spark, sf_dir):
                 F.col("events").cast("double") / F.sum("events").over(w_all), 6
             ).alias("event_share"),
         )
-        .orderBy("decile")
     )
 
 
@@ -12293,7 +12026,6 @@ def ts48_kaufman_er(spark, sf_dir):
             ).alias("efficiency_ratio"),
         )
         .filter(F.col("n_days") >= 2)
-        .orderBy("symbol")
     )
 
 
@@ -12349,7 +12081,6 @@ def dd22_jaccard_histogram(spark, sf_dir):
         )
         .groupBy("bucket", "bucket_lo")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-        .orderBy("bucket")
     )
 
 
@@ -12411,7 +12142,7 @@ def f16_oof_target_encoding(spark, sf_dir):
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         "fold",
     )
-    return analytics.oof_target_mean(t).orderBy("category", "fold")
+    return analytics.oof_target_mean(t)
 
 
 @query(
@@ -12479,7 +12210,6 @@ def ts49_variance_ratio(spark, sf_dir):
                 var5 / F.when(denom != 0, denom).otherwise(F.lit(None)), 6
             ).alias("vr5"),
         )
-        .orderBy("symbol")
     )
 
 
@@ -12639,9 +12369,7 @@ def a24_equal_weight_index(spark, sf_dir):
     reproducible to 6 dp on any engine. Rides the memoized returns
     stage shared with a12/ts25/ts26. See
     operators.timeseries.equal_weight_index."""
-    return tseries.equal_weight_index(returns_frame(spark, sf_dir)).orderBy(
-        "trade_date"
-    )
+    return tseries.equal_weight_index(returns_frame(spark, sf_dir))
 
 
 
@@ -12706,7 +12434,7 @@ def ts50_sortino(spark, sf_dir):
             / F.when(F.col("_dd") != 0, F.col("_dd")).otherwise(F.lit(None)),
             6,
         ).alias("sortino"),
-    ).orderBy("symbol")
+    )
 
 
 @query(
@@ -12748,7 +12476,6 @@ def a25_volume_volatility_corr(spark, sf_dir):
             ),
         )
         .filter(F.col("n_days") >= 30)
-        .orderBy("symbol")
     )
 
 
@@ -12791,7 +12518,7 @@ def tx32_vocab_coverage_curve(spark, sf_dir):
     operators.text.vocab_coverage_curve."""
     return tx.vocab_coverage_curve(
         load_table(spark, sf_dir, "documents")
-    ).orderBy("vocab_size")
+    )
 
 
 @query(
@@ -12840,7 +12567,6 @@ def cdc5_status_change_rate(spark, sf_dir):
     return (
         runs.groupBy((F.col("n_runs") - 1).cast("long").alias("n_changes"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_customers"))
-        .orderBy("n_changes")
     )
 
 
@@ -12899,7 +12625,6 @@ def ts51_downside_beta(spark, sf_dir):
             F.round(F.regr_slope("ret", "mkt_ret"), 6).alias("downside_beta"),
         )
         .filter(F.col("n_down_days") >= 10)
-        .orderBy("symbol")
     )
 
 
@@ -12965,7 +12690,6 @@ def a26_new_highs_lows(spark, sf_dir):
             .alias("new_lows"),
             F.count(F.lit(1)).cast("long").alias("n_symbols"),
         )
-        .orderBy("trade_date")
     )
 
 
@@ -13017,7 +12741,6 @@ def tx33_hapax_by_source(spark, sf_dir):
                 6,
             ).alias("hapax_ratio"),
         )
-        .orderBy("source")
     )
 
 
@@ -13074,7 +12797,6 @@ def tx35_doc_length_gini(spark, sf_dir):
                 6,
             ).alias("length_gini"),
         )
-        .orderBy("source")
     )
 
 
@@ -13111,7 +12833,7 @@ def a27_monthly_hhi(spark, sf_dir):
     )
 
     m = monthly_cents_totals(price_frame(spark, sf_dir), ["symbol"])
-    return fixed_point_hhi(m, "month").orderBy("month")
+    return fixed_point_hhi(m, "month")
 
 
 @query(
@@ -13179,7 +12901,6 @@ def tx36_readability(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n_docs_scored"),
             ((F.sum("_s") / 1e6) / F.count(F.lit(1))).alias("avg_flesch"),
         )
-        .orderBy("source")
     )
 
 
@@ -13222,7 +12943,6 @@ def e42_daily_error_rate(spark, sf_dir):
             .cast("long")
             .alias("n_affected_users"),
         )
-        .orderBy("day")
     )
 
 
@@ -13266,7 +12986,6 @@ def j13_price_elasticity(spark, sf_dir):
             F.count(F.lit(1)).cast("long").alias("n_lines"),
             F.round(F.regr_slope("log_q", "log_p"), 6).alias("elasticity"),
         )
-        .orderBy("brand")
     )
 
 
@@ -13314,7 +13033,7 @@ def j14_sourcing_entropy(spark, sf_dir):
         load_table(spark, sf_dir, "supplier"),
         load_table(spark, sf_dir, "nation"),
         load_table(spark, sf_dir, "customer"),
-    ).orderBy("segment")
+    )
 
 
 @query(
@@ -13371,7 +13090,6 @@ def a28_price_dispersion(spark, sf_dir):
                 "avg_log_price_range"
             ),
         )
-        .orderBy("brand")
     )
 
 
@@ -13404,7 +13122,7 @@ def a29_return_rates(spark, sf_dir):
     operators.analytics.return_rates."""
     return analytics.return_rates(
         load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "part")
-    ).orderBy("brand")
+    )
 
 
 @query(
@@ -13455,7 +13173,6 @@ def k23_split_representativeness(spark, sf_dir):
         similarity.split_representativeness(
             load_table(spark, sf_dir, "embeddings")
         )
-        .orderBy("label")
     )
 
 
@@ -13517,7 +13234,6 @@ def j15_supplier_risk_exposure(spark, sf_dir):
                 "revenue_share"
             ),
         )
-        .orderBy("tier")
     )
 
 
@@ -13584,7 +13300,6 @@ def dq12_status_invariant(spark, sf_dir):
             .cast("long")
             .alias("n_violations"),
         )
-        .orderBy("status")
     )
 
 
@@ -13619,7 +13334,7 @@ def a30_margin_health(spark, sf_dir):
     operators.analytics.margin_health."""
     return analytics.margin_health(
         load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "part")
-    ).orderBy("part_type")
+    )
 
 
 @query(
@@ -13702,9 +13417,7 @@ def e43_activity_streaks(spark, sf_dir):
     user-key window finds every streak without self-joins; all-integer
     outputs, histogram bounded by the longest streak. See
     operators.events.activity_streaks."""
-    return ev.activity_streaks(load_table(spark, sf_dir, "events")).orderBy(
-        "streak_days"
-    )
+    return ev.activity_streaks(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -13740,7 +13453,7 @@ def a31_new_vs_repeat_revenue(spark, sf_dir):
     int/int division. See operators.analytics.new_vs_repeat_revenue."""
     return analytics.new_vs_repeat_revenue(
         load_table(spark, sf_dir, "orders")
-    ).orderBy("month")
+    )
 
 
 @query(
@@ -13783,7 +13496,6 @@ def dq13_last_digit_bias(spark, sf_dir):
                 "uniform_deviation"
             ),
         )
-        .orderBy("digit")
     )
 
 
@@ -13822,7 +13534,7 @@ def a32_listing_age_vol(spark, sf_dir):
     operators.timeseries.listing_age_vol."""
     return tseries.listing_age_vol(
         returns_frame(spark, sf_dir), master_frame(spark, sf_dir)
-    ).orderBy("age_years")
+    )
 
 
 # ===========================================================================
@@ -13897,7 +13609,6 @@ def skw1_join_key_skew_profile(spark, sf_dir):
         one(li, "l_partkey", "lineitem.l_partkey")
         .unionByName(one(li, "l_suppkey", "lineitem.l_suppkey"))
         .unionByName(one(od, "o_custkey", "orders.o_custkey"))
-        .orderBy("dim")
     )
 
 
@@ -13930,7 +13641,7 @@ def skw2_salted_user_totals(spark, sf_dir):
         "user_id",
         "n_rows",
         (F.col("sum_cents") / F.lit(100.0)).cast("double").alias("value_total"),
-    ).orderBy("user_id")
+    )
 
 
 @query(
@@ -14027,7 +13738,6 @@ def stb1_stream_batch_reconcile(spark, sf_dir):
             .otherwise("mismatch")
             .alias("status"),
         )
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -14077,7 +13787,7 @@ def k24_stratified_knn(spark, sf_dir):
     )
     return similarity.grouped_knn(
         emb, qvec, k=3, exclude_ids=(0,)
-    ).orderBy("label", "rank")
+    )
 
 
 # ===========================================================================
@@ -14232,7 +13942,7 @@ def pipeline4_corpus_prep(spark, sf_dir):
         benchmark=docs.filter(F.col("doc_id") % 20 == 0),
         audit_counts=False,  # the CLI's audit actions are dead weight here
     )
-    return out.orderBy("doc_id", "chunk_idx")
+    return out
 
 
 @query(
@@ -14273,7 +13983,7 @@ def pipeline5_streaming_ingest(spark, sf_dir):
     stream = sj.streaming_ingest_pipeline(s1.unionByName(s2))
     return sj.run_stream_to_memory(
         stream, "pipeline5_sink", output_mode="append"
-    ).orderBy("window_start", "event_type")
+    )
 
 
 from market_data_pipeline_spark.plans import tpch  # noqa: E402,F401

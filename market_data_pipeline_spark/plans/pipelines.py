@@ -188,7 +188,6 @@ def delisted_report(master: ParquetTable) -> DataFrame:
             F.min("delisting_date").alias("earliest"),
             F.max("delisting_date").alias("latest"),
         )
-        .orderBy(F.desc("delisted_count"), "market")
     )
 
 

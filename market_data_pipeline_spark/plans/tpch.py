@@ -880,7 +880,6 @@ def tpch_q11_important_stock(spark, sf_dir):
         val.join(F.broadcast(total))
         .filter(F.col("part_value") > F.col("_thresh"))
         .select("l_partkey", F.col("part_value").cast("double").alias("part_value"))
-        .orderBy(F.desc("part_value"), "l_partkey")
     )
 
 
@@ -929,7 +928,6 @@ def tpch_q20_promotion_suppliers(spark, sf_dir):
     return (
         s.join(qualifying, s.s_suppkey == F.col("l_suppkey"), "left_semi")
         .select("s_name", F.col("s_acctbal").cast("double").alias("s_acctbal"))
-        .orderBy("s_name")
     )
 
 

@@ -25,6 +25,7 @@ Design rules:
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator
 from typing import Any
 
@@ -210,6 +211,12 @@ def streaming_dedup(
     )
 
 
+_INTERVAL = re.compile(
+    r"\d+ (?:year|month|week|day|hour|minute|second|millisecond|microsecond)s?",
+    re.IGNORECASE,
+)
+
+
 def streaming_view_click_join(
     events: DataFrame,
     attribution_window: str = "30 minutes",
@@ -231,7 +238,13 @@ def streaming_view_click_join(
     arrive. Run to completion over a finite lake, the result equals the
     batch interval self-join — which is the oracle.
     Returns (view_id, click_id, user_id, view_ts, click_ts).
+    ``attribution_window`` must read ``<integer> <unit>`` ("30 minutes"):
+    it is pasted into SQL text, so anything else raises ``ValueError``.
     """
+    if not _INTERVAL.fullmatch(attribution_window):
+        raise ValueError(
+            f"attribution_window must be '<integer> <unit>', got {attribution_window!r}"
+        )
     views = (
         events.filter(F.col(type_col) == "view")
         .select(

@@ -59,16 +59,8 @@ def main() -> int:
         ap.error("provide --sf-dir or both --master and --price")
 
     print(json.dumps({"table_info": A.table_info(price).collect()[0].asDict()}, default=str))
-    print(
-        json.dumps(
-            {
-                "count_stats": [
-                    r.asDict() for r in A.stock_count_stats(master).limit(30).collect()
-                ]
-            },
-            default=str,
-        )
-    )
+    stats = A.stock_count_stats(master).orderBy("market").limit(30)
+    print(json.dumps({"count_stats": [r.asDict() for r in stats.collect()]}, default=str))
 
     cov = A.missing_dates_stats(price).withColumn(
         # trading-day heuristic: ~5/7 of calendar span expected

@@ -29,6 +29,8 @@ def main() -> int:
     ap.add_argument("--markets", nargs="+", default=["KOSPI", "KOSDAQ", "KONEX"])
     args = ap.parse_args()
 
+    from pyspark.sql import functions as F
+
     from market_data_pipeline_spark.plans import pipelines as pl
     from market_data_pipeline_spark.session import get_spark
     from market_data_pipeline_spark.sources import krx
@@ -53,7 +55,8 @@ def main() -> int:
     )
     print(json.dumps(report, default=str))
     if not report.get("gate_skipped"):
-        for row in pl.delisted_report(master).collect():
+        rows = pl.delisted_report(master).orderBy(F.desc("delisted_count"), "market")
+        for row in rows.collect():
             print(json.dumps(row.asDict(), default=str))
     return 0
 

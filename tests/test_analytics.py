@@ -56,7 +56,7 @@ def test_top_performers_uses_prior_day(price, master):
 
 
 def test_calculate_returns(price):
-    out = A.calculate_returns(price, symbols=["s1"]).collect()
+    out = A.calculate_returns(price, symbols=["s1"]).orderBy("trade_date").collect()
     assert out[0].daily_return is None  # lag null on first day
     assert out[1].daily_return == pytest.approx(0.10)
     assert out[2].cumulative_return == pytest.approx(0.21)

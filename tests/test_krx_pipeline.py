@@ -177,7 +177,7 @@ def test_sync_delisted_gate_and_force(spark, master):
 def test_delisted_report(spark, master):
     src = krx.KrxDelistedSource(spark, transport=euc_kr_transport(DELISTED_HTML))
     PL.sync_delisted_stocks(master, src.fetch_market("KOSPI"), now=NOW)
-    rep = PL.delisted_report(master).collect()
+    rep = PL.delisted_report(master).orderBy(F.desc("delisted_count"), "market").collect()
     assert rep[0].market == "KOSPI"
     assert rep[0].delisted_count == 3
     assert rep[0].earliest == dt.date(2023, 10, 25)

@@ -151,7 +151,7 @@ def test_sessionize_gap_split(spark):
         (4, TS(2024, 1, 1, 10, 0), 8, "a", 1.0),    # other user
     ]
     df = spark.createDataFrame(rows, ["event_id", "ts", "user_id", "event_type", "value"])
-    out = EV.sessionize(df, gap_minutes=30).collect()
+    out = EV.sessionize(df, gap_minutes=30).orderBy("user_id", "session_id").collect()
     u7 = [r for r in out if r.user_id == 7]
     assert [(r.session_id, r.n_events) for r in u7] == [(1, 2), (2, 1)]
     assert len([r for r in out if r.user_id == 8]) == 1

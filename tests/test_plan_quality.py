@@ -159,21 +159,13 @@ def test_semantic_dedup_broadcast_assignment(plans):
     assert facts["max_read_cols"] <= 2
 
 
-def test_repetition_stats_map_only(spark, plans):
-    # The declared query now cuts lineage before its final sort
-    # (materialize_then_sort, r12 opt session 3), which truncates the
-    # visible plan at a Scan ExistingRDD — so audit the OPERATOR frame
-    # directly for the map-only evidence (one pruned scan, no joins),
-    # and the full query for join-freedom.
-    from market_data_pipeline_spark.operators import text as tx
-    from market_data_pipeline_spark.sources.catalog import load_table
-
-    op = audit_plan(tx.repetition_stats(load_table(spark, SF_DIR, "documents")))
-    assert op["scans"] == 1
-    assert op["max_read_cols"] <= 2
-    assert op["smj"] == 0 and op["bhj"] == 0
+def test_repetition_stats_map_only(plans):
+    # map-only: one pruned scan, no joins, no exchange
     facts = plans("tx10_repetition_stats")
+    assert facts["scans"] == 1
+    assert facts["max_read_cols"] <= 2
     assert facts["smj"] == 0 and facts["bhj"] == 0
+    assert facts["shuffles"] == 0
 
 
 def test_shuffle_shards_no_single_task_stage(plans):
@@ -200,18 +192,27 @@ def test_no_query_plans_a_single_partition_exchange(spark):
     frame) are the canonical plan for those shapes and are allowed — the
     audit's ``unbounded_single_partition`` makes the distinction.
     Streaming queries (which execute on build) and driver-side helpers
-    are exercised by their own tests."""
+    are exercised by their own tests. The same loop checks that no
+    registered query ends in a global Sort at its plan root."""
     from market_data_pipeline_spark.plans.driver_queries import QUERIES as ALL_Q
 
     offenders = {}
+    root_sorted = []
     for name, fn in ALL_Q.items():
         try:
-            facts = audit_plan(fn(spark, SF_DIR))
+            df = fn(spark, SF_DIR)
+            # registered queries return rows in no defined order: a global
+            # Sort at the plan root is a presentation sort nobody reads
+            root = df._jdf.queryExecution().analyzed()
+            if root.getClass().getSimpleName() == "Sort" and getattr(root, "global")():
+                root_sorted.append(name)
+            facts = audit_plan(df)
         except Exception:
             continue  # streaming/memory-sink queries run on build
         if facts["unbounded_single_partition"]:
             offenders[name] = facts["unbounded_single_partition"]
     assert not offenders, f"unbounded single-partition exchanges in: {offenders}"
+    assert not root_sorted, f"closing global sort at the plan root of: {root_sorted}"
 
 
 def test_bm25_single_scan_and_distributed_topk(plans):
@@ -326,25 +327,13 @@ def test_interval_coverage_single_key_shuffle(plans):
     assert facts["unbounded_single_partition"] == 0
 
 
-def test_radius_search_no_post_scan_shuffle(spark, plans):
-    # broadcast queries + map-side threshold filter: the only exchanges
-    # are the broadcast and the output sort. The declared query cuts
-    # lineage before its final sort (materialize_then_sort, r12 opt
-    # session 3), so audit the OPERATOR frame for the scan evidence.
-    from market_data_pipeline_spark.operators import similarity
-    from market_data_pipeline_spark.sources.catalog import load_table
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    op = audit_plan(
-        similarity.radius_search(
-            emb, emb.filter(F.col("vec_id").isin(0, 1, 2)), threshold=0.15
-        )
-    )
-    assert op["smj"] == 0
-    assert op["scans"] == 2  # corpus + query slice
+def test_radius_search_no_post_scan_shuffle(plans):
+    # broadcast queries + map-side threshold filter: the only exchange is
+    # the broadcast, and the corpus is read once beside the query slice
     facts = plans("k8_radius_search")
     assert facts["smj"] == 0
+    assert facts["scans"] == 2  # corpus + query slice
+    assert facts["shuffles"] == 0
 
 
 # --- round-5 plan shapes -----------------------------------------------------

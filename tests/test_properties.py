@@ -228,10 +228,10 @@ def test_sessionize_matches_python_reference(spark, events):
         for i, (u, m, v) in enumerate(events)
     ]
     df = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long, value double")
-    got = [
+    got = sorted(
         (r.user_id, r.session_start, r.session_end, r.n_events)
         for r in sessionize(df, gap_minutes=30).collect()
-    ]
+    )
 
     # python reference: sort per user, split on >30min gaps
     ref = []

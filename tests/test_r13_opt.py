@@ -146,28 +146,3 @@ def test_kmeans_lloyd_exact_null_ragged_golden(spark):
         ).collect()
     )
     assert got == [(0, (2.6666666666666665,)), (1, (0.75, None))]
-
-
-def test_root_sort_elision_contract(spark, monkeypatch):
-    """r13 VERDICT #8: registered queries drop their ROOT presentation
-    Sort by default (the driver's recorder sorts collected row tuples
-    itself), keep it with SPARK_GRAFT_SORTED_OUTPUT=1, and the two
-    surfaces return the same multiset of rows."""
-    import market_data_pipeline_spark.plans.driver_queries as DQ
-
-    name = "a1_market_summary"  # ends in a root sort in the r12 surface
-
-    def root(df):
-        node = df._jdf.queryExecution().logical()
-        return node.getClass().getSimpleName()
-
-    plain = DQ.QUERIES[name](spark, SF_DIR)
-    assert root(plain) != "Sort"
-
-    monkeypatch.setattr(DQ, "_SORTED_OUTPUT", True)
-    sorted_df = DQ.QUERIES[name](spark, SF_DIR)
-    assert root(sorted_df) == "Sort"
-
-    a = sorted(map(str, plain.collect()))
-    b = sorted(map(str, sorted_df.collect()))
-    assert a == b and len(a) > 0

@@ -283,7 +283,7 @@ def test_power_users_shares_sum_to_one(spark):
             rows.append((eid, u, "x", t))
     path = tempfile.mkdtemp(prefix="e39_")
     _events(spark, rows).write.parquet(f"{path}/events.parquet")
-    out = e39_power_users(spark, path).collect()
+    out = e39_power_users(spark, path).orderBy("decile").collect()
     assert len(out) == 10 and sum(r["n_users"] for r in out) == 20
     assert sum(r["events"] for r in out) == 210
     assert abs(sum(r["event_share"] for r in out) - 1.0) < 1e-5
@@ -550,7 +550,7 @@ def test_new_highs_lows_monotone_paths(spark, tmp_path):
     up = [(d0 + dt.timedelta(days=i), 100 + i) for i in range(25)]
     dn = [(d0 + dt.timedelta(days=i), 1000 - i) for i in range(25)]
     _li_frame(spark, tmp_path, {1: up, 2: dn})
-    out = a26_new_highs_lows(spark, str(tmp_path)).collect()
+    out = a26_new_highs_lows(spark, str(tmp_path)).orderBy("trade_date").collect()
     assert len(out) == 6
     assert [r["trade_date"] for r in out] == [
         d0 + dt.timedelta(days=i) for i in range(19, 25)

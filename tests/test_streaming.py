@@ -61,33 +61,46 @@ def _read_stream(spark, event_dir, max_files=None):
 
 def test_streaming_tumbling_matches_batch(spark, event_dir):
     stream = SJ.streaming_tumbling(_read_stream(spark, event_dir), "1 hour")
-    got = SJ.run_stream_to_memory(stream, "t_tumble").orderBy("window_start")
+    got = SJ.run_stream_to_memory(stream, "t_tumble")
     batch = EV.tumbling_window(spark.read.parquet(event_dir), duration="hour")
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in batch.collect()]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
 
 
 def test_streaming_sliding_matches_batch(spark, event_dir):
     stream = SJ.streaming_sliding(_read_stream(spark, event_dir))
-    got = SJ.run_stream_to_memory(stream, "t_slide").orderBy("window_start")
+    got = SJ.run_stream_to_memory(stream, "t_slide")
     batch = EV.sliding_window(spark.read.parquet(event_dir))
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in batch.collect()]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
 
 
 def test_streaming_sessionize_matches_batch(spark, event_dir):
     stream = SJ.streaming_sessionize(_read_stream(spark, event_dir), gap="30 minutes")
-    got = SJ.run_stream_to_memory(stream, "t_sess").orderBy("user_id", "session_start")
+    got = SJ.run_stream_to_memory(stream, "t_sess")
     batch = EV.sessionize(spark.read.parquet(event_dir), gap_minutes=30)
-    got_rows = [
+    got_rows = sorted(
         (r.user_id, r.session_start, r.session_end, r.n_events, r.total_value)
         for r in got.collect()
-    ]
-    batch_rows = [
+    )
+    batch_rows = sorted(
         (r.user_id, r.session_start, r.session_end, r.n_events, r.total_value)
         for r in batch.collect()
-    ]
+    )
     assert got_rows == batch_rows
     # user 1: sessions {0:05,0:20} and {1:10}; user 2: {0:50,1:15} and {2:40}
     assert len(got_rows) == 4
+
+
+
+def test_view_click_join_rejects_non_interval_window(spark):
+    """attribution_window is pasted into SQL text: a value that is not
+    '<integer> <unit>' raises instead of widening the join window."""
+    events = spark.createDataFrame(
+        [(0, TS(2024, 1, 1, 0, 0), 1, "view"), (1, TS(2024, 1, 3, 0, 0), 1, "click")],
+        ["event_id", "ts", "user_id", "event_type"],
+    )
+    assert SJ.streaming_view_click_join(events, "30 minutes").count() == 0
+    with pytest.raises(ValueError, match="attribution_window"):
+        SJ.streaming_view_click_join(events, "30 minutes + INTERVAL 100 days")
 
 
 def test_running_user_totals_across_micro_batches(spark, event_dir):
