@@ -50,15 +50,21 @@ def entry(spark: SparkSession) -> DataFrame:
 #   tier 2 — rows-only queries (no oracle) with at least one recorded
 #            row: can never hash-green, recorded dead last.
 #
-# Within each tier, cheapest-first by the measured sf0.1 cost table so a
-# time-budgeted window covers the most queries.
+# Within each tier, cheapest-first by the frozen sf0.1 cost table
+# (BENCHQ_r14.json) so a time-budgeted window covers the most queries.
 
 _TIER2_RESERVED = 5
 
 
-def _newest_green_round() -> dict[str, int]:
-    """Per query: the newest round whose CORRECTNESS_r*.json has a
-    hash_match=true row — the query's driver-trail vintage."""
+def _trail_rounds() -> tuple[dict[str, int], dict[str, int]]:
+    """One pass over the CORRECTNESS_r*.json trail. Returns two maps:
+
+    - newest green: per query, the newest round with a hash_match=true
+      row — the query's driver-trail vintage (tiers 0 and 1);
+    - first seen: per query, the oldest round with ANY recorded row
+      (hash-green or rows-only). Re-records never move it; a rows-only
+      query absent from it has never been recorded (tier 0.5).
+    """
     import glob
     import json
     import os
@@ -66,7 +72,8 @@ def _newest_green_round() -> dict[str, int]:
 
     here = os.path.dirname(os.path.abspath(__file__))
     newest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
+    first: dict[str, int] = {}
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
         m = re.search(r"_r(\d+)\.json$", os.path.basename(path))
         rnd = int(m.group(1)) if m else 0
         try:
@@ -76,93 +83,36 @@ def _newest_green_round() -> dict[str, int]:
         if not isinstance(data, dict):
             continue
         for name, row in data.items():
-            if isinstance(row, dict) and row.get("hash_match") is True:
+            if not isinstance(row, dict):
+                continue
+            first[name] = min(first.get(name, rnd), rnd)
+            if row.get("hash_match") is True:
                 newest[name] = max(newest.get(name, 0), rnd)
-    return newest
-
+    return newest, first
 
 
 def _cost_table() -> dict[str, float]:
-    """Measured sf0.1 per-query wall times (seconds) from the newest
-    BENCHQ_r*.json (written by bench.py each run; seeded at r10 by
-    migrating the former 180-line hand-grown literal — r9 verdict #3).
-    Used only to sort WITHIN each tier cheapest-first, so a
-    time-budgeted recording window covers the most queries. A missing
-    or stale file degrades only the order, never correctness;
+    """Measured sf0.1 per-query wall times (seconds), frozen in
+    BENCHQ_r14.json. Used only to sort WITHIN each tier cheapest-first,
+    so a time-budgeted recording window covers the most queries. A
+    missing file degrades only the order, never correctness;
     new/unlisted queries default to mid-cost 1.0 via ``_COST.get``."""
-    import glob
     import json
     import os
 
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-
-    def _round_num(p: str) -> int:
-        # numeric, not lexical: BENCHQ_r100 must beat BENCHQ_r99.
-        # Rerun files rank JUST BELOW their own round's canonical (r11
-        # ADVICE #3): if the newest round's canonical is missing or
-        # corrupt while its reruns exist, the reruns must still beat an
-        # OLDER round's canonical rather than silently losing to it.
-        m = re.search(r"BENCHQ_r(\d+)(_rerun\d*)?\.json$", os.path.basename(p))
-        if not m:
-            return -1
-        return int(m.group(1)) * 10 - (1 if m.group(2) else 0)
-
-    for path in sorted(
-        glob.glob(os.path.join(here, "BENCHQ_r*.json")), key=_round_num, reverse=True
-    ):
-        try:
-            data = json.load(open(path))
-            queries = data.get("queries")
-            if isinstance(queries, dict) and queries:
-                return {
-                    n: float(t)
-                    for n, t in queries.items()
-                    if isinstance(t, (int, float))
-                }
-        except Exception:
-            continue
-    return {}
-
-
-def _first_seen_round() -> dict[str, int]:
-    """Per query: the OLDEST round whose CORRECTNESS_r*.json has ANY
-    recorded row (hash-green or rows-only) — a registration-age proxy
-    for bench.py's like-for-like exclusion. Re-records never move it,
-    unlike _newest_green_round (which the old bench exclusion leaned on
-    and which goes stale the moment the driver records the round)."""
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    first: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", os.path.basename(path))
-        rnd = int(m.group(1)) if m else 0
-        try:
-            data = json.load(open(path))
-        except Exception:
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if isinstance(row, dict) and name not in first:
-                first[name] = rnd
-    return first
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCHQ_r14.json")
+    try:
+        queries = json.load(open(path))["queries"]
+    except Exception:
+        return {}
+    return {n: float(t) for n, t in queries.items() if isinstance(t, (int, float))}
 
 
 _COST = _cost_table()
 
 
-
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    vintage = _newest_green_round()
-    ever = _first_seen_round()
+    vintage, ever = _trail_rounds()
     never_recorded_rows_only = sorted(
         (n for n in QUERIES if n not in ORACLES and n not in ever),
         key=lambda n: (_COST.get(n, 1.0), n),

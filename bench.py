@@ -1,10 +1,13 @@
-"""Benchmark harness: runs the oracle-checked query surface at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""Timing loop over the registered query surface at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data, ``SF_DIR``) on local[$SPARK_GRAFT_CPUS].
 
 Each query is forced end-to-end with a noop-format write (computes the
-full plan, no driver collect and no disk I/O in the measurement).
+full plan, no driver collect and no disk I/O in the measurement) and
+timed best-of-2. stdout gets two JSON lines: the full record
+{"metric", "value", "unit", "sf", "n_queries", "families", "queries"},
+then a short summary {"bench_total_sec", "n_queries", "sf"}.
+
+    python bench.py 2>/dev/null | tail -1
 """
 
 from __future__ import annotations
@@ -28,315 +31,20 @@ def sf_from_dir(d: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def family_diff(
-    current: dict[str, float],
-    previous: dict[str, float],
-    threshold: float = 1.3,
-    min_sec: float = 1.0,
-) -> list[dict]:
-    """Per-family regression flags vs the previous round's bench (r7
-    verdict #7: the k-family decimal-fold cost was only caught by
-    self-report — make the budget mechanical). A family is flagged when
-    its subtotal grew past ``threshold``x AND by at least ``min_sec``
-    (sub-second families swing on session noise alone). New families
-    (no previous entry) are never flagged — they are registrations,
-    not regressions."""
-    flags = []
-    for fam, cur in sorted(current.items()):
-        prev = previous.get(fam)
-        if not prev or prev <= 0:
-            continue
-        if cur >= prev * threshold and cur - prev >= min_sec:
-            flags.append(
-                {"family": fam, "prev": prev, "cur": cur, "ratio": round(cur / prev, 2)}
-            )
-    return flags
-
-
-def query_pins(baselines: list[dict]) -> dict[str, float]:
-    """Per-query pin: the MINIMUM observed timing across the baseline
-    rounds' BENCHQ dicts. The min, not median, because each BENCHQ
-    canonical is already best-of-runs on closed code — a query's pin is
-    its best reproducible cost, and the regression gate asks "did the
-    plan get structurally slower", not "was the box busier"."""
-    pins: dict[str, float] = {}
-    for b in baselines:
-        for name, t in (b.get("queries") or {}).items():
-            if isinstance(t, (int, float)):
-                pins[name] = min(pins.get(name, float(t)), float(t))
-    return pins
-
-
-def query_diff(
-    current: dict[str, float],
-    pins: dict[str, float],
-    threshold: float = 2.0,
-    min_sec: float = 0.5,
-) -> list[dict]:
-    """Per-QUERY regression flags vs the historical pins (r11 verdict
-    #2: with the adaptive-rep + forced-GC fixes the BENCHQ trail's
-    cross-run p95 ratio is 1.40, so a >2x move on a >=0.5s-growth query
-    is treated as REAL until an isolated best-of-2 probe clears it —
-    the inverse of the old flag-is-probably-noise posture). Queries
-    with no pin (registrations / renames) are never flagged."""
-    flags = []
-    for name, cur in sorted(current.items()):
-        pin = pins.get(name)
-        if not pin or pin <= 0:
-            continue
-        if cur >= pin * threshold and cur - pin >= min_sec:
-            flags.append(
-                {"query": name, "prev": pin, "cur": cur, "ratio": round(cur / pin, 2)}
-            )
-    return flags
-
-
-def family_subtotals(
-    timings: dict[str, float], exclude: set[str] | frozenset[str] = frozenset()
-) -> dict[str, float]:
-    """Per-family wall subtotals, optionally excluding named queries —
-    the budget diff passes the never-driver-green registrations here so
-    a new member's cost can't masquerade as a family regression."""
+def family_subtotals(timings: dict[str, float]) -> dict[str, float]:
+    """Per-family wall subtotals; a family is the name's leading letters."""
     fams: dict[str, float] = {}
     for name, t in timings.items():
-        if name in exclude:
-            continue
         fam = re.match(r"[a-z]+", name).group(0)
         fams[fam] = round(fams.get(fam, 0.0) + t, 2)
     return fams
 
 
-def load_baselines(
-    repo_dir: str, window: int = 3, exclude: tuple[str, ...] = ()
-) -> list[dict]:
-    """The newest ``window`` usable BENCH_r*.json baselines, newest first.
-
-    Each entry: {"name", "round", "families", "queries"} — ``queries`` is
-    the full per-query timing dict from the sibling BENCHQ_r{N}.json when
-    one exists (written by this script since round 10; the driver's own
-    BENCH tail head-clips the per-query dict, r9 verdict #2), else None.
-    Files named in ``exclude`` or in $SPARK_GRAFT_BENCH_EXCLUDE
-    (comma-separated basenames) are skipped outright.
-    """
-    import glob
-
-    skip = set(exclude) | {
-        s for s in os.environ.get("SPARK_GRAFT_BENCH_EXCLUDE", "").split(",") if s
-    }
-    def _round_num(p: str) -> int:
-        # numeric, not lexical: BENCH_r100 must sort after BENCH_r99
-        m = re.search(r"_r(\d+)\.json$", os.path.basename(p))
-        return int(m.group(1)) if m else -1
-
-    used: list[dict] = []
-    for path in sorted(
-        glob.glob(os.path.join(repo_dir, "BENCH_r*.json")),
-        key=_round_num,
-        reverse=True,
-    ):
-        base = os.path.basename(path)
-        if base in skip:
-            continue
-        rnd = max(_round_num(path), 0)
-        try:
-            data = json.load(open(path))
-            # driver files wrap the parsed line under "parsed" or store it raw
-            for cand in (data.get("parsed") if isinstance(data, dict) else None, data):
-                if isinstance(cand, dict) and isinstance(cand.get("families"), dict):
-                    queries = None
-                    qpath = os.path.join(repo_dir, f"BENCHQ_r{rnd:02d}.json")
-                    try:
-                        qdata = json.load(open(qpath))
-                        if isinstance(qdata.get("queries"), dict):
-                            queries = qdata["queries"]
-                    except Exception:
-                        pass
-                    used.append(
-                        {"name": base, "round": rnd,
-                         "families": cand["families"], "queries": queries}
-                    )
-                    break
-        except Exception:
-            continue
-        if len(used) >= window:
-            break
-    return used
-
-
-def load_prev_families(
-    repo_dir: str, window: int = 3, exclude: tuple[str, ...] = ()
-) -> tuple[str, dict[str, float]]:
-    """Per-family MEDIAN subtotal over the newest ``window`` usable
-    BENCH_r*.json files — the baseline for family_diff.
-
-    Median-of-3, not single-newest (r8 verdict #7): a slow two-round
-    creep can't hide under the 1.3x single-round gate when two older
-    rounds anchor the median. It also defuses the self-comparison
-    no-op (r8 ADVICE #3): if the CURRENT round's recording is already
-    on disk it is at most one of the three files, so the flags still
-    compare against history. Returns ("", {}) when no usable file.
-    """
-    import statistics
-
-    used = load_baselines(repo_dir, window, exclude)
-    if not used:
-        return "", {}
-    fams: dict[str, float] = {}
-    for fam in {f for b in used for f in b["families"]}:
-        vals = [
-            b["families"][fam]
-            for b in used
-            if isinstance(b["families"].get(fam), (int, float))
-        ]
-        if vals:
-            fams[fam] = round(statistics.median(vals), 2)
-    return "median(" + ",".join(b["name"] for b in used) + ")", fams
-
-
-def diff_exclusions(
-    current_names, baselines: list[dict], first_seen: dict[str, int]
-) -> set[str]:
-    """Query names to drop from the like-for-like family diff.
-
-    A query with no cost in the baselines inflates its family's current
-    subtotal and flags a "regression" that is really a registration
-    (BENCH_r09 false-flagged `pipeline 2.59x` on pipeline3's by-design
-    10.4s — r9 verdict "what's wrong" #1: the old never-green exclusion
-    was empty because the driver records correctness BEFORE bench, so
-    this round's registrations were already green).
-
-    Exact path: when every baseline carries a per-query dict (BENCHQ
-    sibling), keep only names present in ALL baselines — set
-    intersection is the definition of like-for-like, no vintage
-    heuristics. Fallback (pre-r10 baselines have no BENCHQ): drop names
-    whose FIRST driver-trail appearance (any recorded row, hash-green or
-    rows-only) is newer than the second-newest baseline round — the
-    median-of-3 only prices a query present in >=2 of its 3 files.
-    Rows-only queries never reach the trail (tier-2, recorded dead
-    last), so a name with NO trail row stays priced as long as some
-    baseline BENCHQ lists it. The fallback still over-excludes a
-    recently-CONVERTED old query (first hash row is new, registration
-    is not — dd3 et al. in r10); that direction under-counts the
-    current subtotal and can only mask, never false-flag, and it ages
-    out once three real BENCHQ files exist (r12) and the exact path
-    takes over.
-    """
-    if not baselines:
-        return set()
-    qsets = [set(b["queries"]) for b in baselines if b["queries"]]
-    if len(qsets) == len(baselines):
-        common = set.intersection(*qsets)
-        return {n for n in current_names if n not in common}
-    rounds = sorted(b["round"] for b in baselines)
-    anchor = rounds[-2] if len(rounds) >= 2 else rounds[-1]
-    priced_somewhere = set().union(*qsets) if qsets else set()
-    out = set()
-    for n in current_names:
-        if n in first_seen:
-            if first_seen[n] > anchor:
-                out.add(n)
-        elif n not in priced_somewhere:
-            out.add(n)
-    return out
-
-
-def write_benchq(repo_dir: str, this_round: int, payload: dict) -> str:
-    """Write the per-query timing artifact without destroying a prior
-    same-round run (r10 verdict #6: the driver's slower-day run
-    overwrote the builder's closed-code BENCHQ_r10; the 312s best run
-    survived only in prose). Collision rule (r11): every raw run is
-    preserved in the first free ``BENCHQ_r{N}_rerun{,2,3...}.json``
-    slot, and the canonical ``BENCHQ_r{N}.json`` becomes the
-    ELEMENT-WISE MIN across the round's runs — best-of-N extended
-    across sessions, which is exactly what the per-query pins are for
-    (a query's reproducible cost is its best observation on closed
-    code; per-run totals stay recoverable from the rerun files).
-    Returns the path the new raw payload was written to."""
-    canonical = os.path.join(repo_dir, f"BENCHQ_r{this_round:02d}.json")
-    if not os.path.exists(canonical):
-        with open(canonical, "w") as fh:
-            json.dump(payload, fh, indent=1, sort_keys=True)
-            fh.write("\n")
-        return canonical
-    try:
-        prior = json.load(open(canonical))
-        prior_q = dict(prior.get("queries") or {})
-        prior_sf = prior.get("sf")
-    except Exception:
-        prior_q = {}
-        prior_sf = None
-    # preserve the incoming raw run in the first free rerun slot
-    n = 1
-    while True:
-        suffix = "_rerun" if n == 1 else f"_rerun{n}"
-        rerun = os.path.join(
-            repo_dir, f"BENCHQ_r{this_round:02d}{suffix}.json"
-        )
-        if not os.path.exists(rerun):
-            break
-        n += 1
-    with open(rerun, "w") as fh:
-        json.dump(payload, fh, indent=1, sort_keys=True)
-        fh.write("\n")
-    # Cross-sf guard (r11 ADVICE #1): element-wise min across runs at
-    # DIFFERENT scale factors would let the smaller sf win every pin
-    # while stamping the newest sf on the canonical. A rerun under
-    # another SPARK_GRAFT_SF_DIR keeps its raw rerun slot but never
-    # merges into the canonical.
-    if prior_sf is not None and payload.get("sf") != prior_sf:
-        print(
-            f"== BENCHQ: sf mismatch ({payload.get('sf')} vs canonical "
-            f"{prior_sf}); raw run kept at {os.path.basename(rerun)}, "
-            "canonical left untouched",
-            file=sys.stderr,
-        )
-        return rerun
-    new_q = dict(payload.get("queries") or {})
-    # Semantic-change reset (r12): the min-merge premise is "best
-    # observation on CLOSED code". When a query's implementation
-    # changed mid-round, its prior same-round observations price the
-    # OLD code and must not win the pin — name it in
-    # $SPARK_GRAFT_BENCHQ_RESET (comma-separated) for the run that
-    # first times the new code.
-    reset = {
-        s
-        for s in os.environ.get("SPARK_GRAFT_BENCHQ_RESET", "").split(",")
-        if s
-    }
-    for name in reset & set(prior_q):
-        del prior_q[name]
-    # skip keys whose every observation is None (r11 ADVICE #2: min()
-    # over an empty generator raised after the rerun write, before the
-    # canonical update)
-    merged = {}
-    for name in set(prior_q) | set(new_q):
-        vals = [v for v in (prior_q.get(name), new_q.get(name)) if v is not None]
-        if vals:
-            merged[name] = min(vals)
-    with open(canonical, "w") as fh:
-        json.dump(
-            {
-                "round": this_round,
-                "source": "element-wise min across same-round bench runs",
-                "sf": payload.get("sf"),
-                "n_queries": len(merged),
-                "total_sec": round(sum(merged.values()), 2),
-                "queries": merged,
-            },
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
-        fh.write("\n")
-    return rerun
-
-
 def main() -> None:
-    # The driver parses stdout as JSON; anything the JVM launcher or a
-    # stray library prints to fd 1 breaks that (BENCH_r01 recorded
-    # "parsed": null despite an intact JSON line in the tail).  Redirect
+    # stdout carries only the JSON lines; anything the JVM launcher or a
+    # stray library prints to fd 1 would make it unparseable. Redirect
     # the OS-level stdout to stderr for the entire run and keep a dup of
-    # the real stdout for the single JSON line at the end.
+    # the real stdout for the JSON lines at the end.
     real_stdout_fd = os.dup(1)
     sys.stdout.flush()
     os.dup2(2, 1)
@@ -364,7 +72,7 @@ def main() -> None:
     # Adaptive third rep (r11): when the two reps DISAGREE by >1.5x the
     # pair straddled a disturbance (both-reps-bad is what put dd3=4.36
     # in one run and 2.33 in the next); one more rep costs seconds per
-    # run and de-noises exactly the queries whose pins were unusable.
+    # run and de-noises exactly the queries whose two reps disagree.
     import gc
 
     timings: dict[str, float] = {}
@@ -389,105 +97,22 @@ def main() -> None:
         # per-query outliers to queries starting inside a bloated
         # between-periodic-GC window (BENCHNOTES r11). A synchronous
         # System.gc() here costs bench wall-clock, never query time, and
-        # removes the lottery from the recorded pins.
+        # removes the lottery from the recorded timings.
         try:
             spark._jvm.System.gc()
         except Exception:
             pass
 
     total = round(sum(timings.values()), 2)
-    # Truncation defense (BENCH_r02 recorded "parsed": null because the
-    # driver's tail capture clipped the head of the 113-entry line):
-    # summary fields FIRST, per-family subtotals next, per-query dict last;
-    # compact separators + 2-decimal times keep the whole line well under a
-    # 4 KiB tail buffer so it parses end-to-end.
-    families = family_subtotals(timings)
-    # machine-generated family budget (r7 verdict #7): diff vs the
-    # median of the last three recorded benches, flag >1.3x + >=1s
-    # growth. Table goes to stderr (stdout is reserved for the parseable
-    # JSON lines); flags ride in both JSON lines so the driver records
-    # them too. The diff subtotal drops queries the baselines never
-    # priced (see diff_exclusions); the RECORDED subtotals keep
-    # everything, so next rounds' baselines include the new members.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    baselines = load_baselines(repo_dir)
-    new_names: set[str] = set()
-    try:
-        from __spark_entry__ import _first_seen_round
-
-        new_names = diff_exclusions(timings, baselines, _first_seen_round())
-    except Exception:
-        pass
-    diff_families = family_subtotals(timings, exclude=new_names)
-    if new_names:
-        print(
-            f"== family budget excludes {len(new_names)} "
-            f"not-in-baseline name(s): {sorted(new_names)}",
-            file=sys.stderr,
-        )
-    prev_name, prev_families = load_prev_families(repo_dir)
-    regressions = family_diff(diff_families, prev_families) if prev_families else []
-    # exact per-query gate (r11 verdict #2): every query vs its best
-    # historical BENCHQ pin; >2x AND >=0.5s growth is flagged as real
-    pins = query_pins(baselines)
-    q_regressions = query_diff(timings, pins)
-    if q_regressions:
-        print("\n== per-query regressions vs BENCHQ pins ==", file=sys.stderr)
-        for r in q_regressions:
-            print(
-                f"  {r['query']:35s} {r['prev']:>7.2f} -> {r['cur']:>7.2f} "
-                f"({r['ratio']}x)",
-                file=sys.stderr,
-            )
-    if prev_families:
-        print(f"\n== family diff vs {prev_name} ==", file=sys.stderr)
-        for fam in sorted(families):
-            p = prev_families.get(fam)
-            flag = " <-- REGRESSION" if any(
-                r["family"] == fam for r in regressions
-            ) else ""
-            print(
-                f"  {fam:10s} {p if p is not None else '-':>8} -> "
-                f"{families[fam]:>8.2f}{flag}",
-                file=sys.stderr,
-            )
-    # Full per-query timings survive OUTSIDE the driver's tail buffer
-    # (r9 verdict #2: BENCH_r*.json head-clips the 361-entry dict to ~90
-    # entries). Named for the round the driver is about to record:
-    # newest existing BENCH round + 1 — stable whether this is the
-    # builder's in-session run or the driver's own (both happen before
-    # BENCH_r{N}.json lands on disk). __spark_entry__._COST loads the
-    # newest of these, replacing the hand-grown literal (r9 verdict #3).
-    import glob as _glob
-
-    bench_rounds = [
-        int(m.group(1))
-        for p in _glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
-        if (m := re.search(r"_r(\d+)\.json$", p))
-    ]
-    this_round = max(bench_rounds, default=0) + 1
-    benchq_path = write_benchq(
-        repo_dir,
-        this_round,
-        {
-            "round": this_round,
-            "source": "bench.py best-of-2 noop-write wall times",
-            "sf": sf_from_dir(SF_DIR),
-            "n_queries": len(timings),
-            "total_sec": total,
-            "queries": timings,
-        },
-    )
+    sf = sf_from_dir(SF_DIR)
     line = json.dumps(
         {
             "metric": "total_query_wall_time",
             "value": total,
             "unit": "sec",
-            "sf": sf_from_dir(SF_DIR),
+            "sf": sf,
             "n_queries": len(timings),
-            "families": families,
-            "family_regressions": regressions,
-            "query_regressions": q_regressions,
+            "families": family_subtotals(timings),
             "queries": timings,
         },
         separators=(",", ":"),
@@ -497,29 +122,11 @@ def main() -> None:
     os.dup2(real_stdout_fd, 1)
     os.close(real_stdout_fd)
     print(line, flush=True)
-    # Tail-truncation defense (r3 verdict #2): the driver keeps a *tail*
-    # buffer of stdout, so a >4 KiB main line gets its HEAD clipped — which
-    # is where r3 put the summary. Emit a second JSON line AFTER the main
-    # line: the end of the output always parses, and the totals are
-    # recoverable from BENCH_r{N}.json without git archaeology even when
-    # the per-query dict is clipped. Per-query contract (r12 verdict #6):
-    # the driver's PERF comparator reads THIS final line, so it now also
-    # carries the compact per-query dict (the driver demonstrably parses
-    # the full final line, not just its 4 KiB tail: BENCH_r12's "parsed"
-    # holds complete families from a tail that clipped them) plus the
-    # name of the per-query sidecar this exact run was preserved in.
+    # The short summary goes last, so a reader that keeps only the tail of
+    # stdout still gets a complete line.
     print(
         json.dumps(
-            {
-                "bench_total_sec": total,
-                "n_queries": len(timings),
-                "sf": sf_from_dir(SF_DIR),
-                "families": families,
-                "family_regressions": regressions,
-                "query_regressions": q_regressions,
-                "queries_file": os.path.basename(benchq_path),
-                "queries": timings,
-            },
+            {"bench_total_sec": total, "n_queries": len(timings), "sf": sf},
             separators=(",", ":"),
         ),
         flush=True,

@@ -689,8 +689,8 @@ def blocked_name_pairs(
     strings but not for entity names. The regime check is one bounded
     single-row aggregate.
 
-    Threshold provenance (r8 verdict #3 — MEASURED, scripts/
-    dd7_crossover.py, table in SCALE.md §C): on 25-block supplier-shaped
+    Threshold provenance (r8 verdict #3 — MEASURED, table in
+    SCALE.md §C): on 25-block supplier-shaped
     corpora the quadratic/deletion wall-time crossover interpolates to
     ~8.6k rows (quadratic 2.48s vs deletion 4.28s at 5k; 9.54 vs 8.39
     at 10k; 250 vs 42 at 50k), so ``deletion_min_rows=8000`` — set a

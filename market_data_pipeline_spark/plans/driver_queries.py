@@ -8244,7 +8244,7 @@ def e24_event_pagerank(spark, sf_dir):
 # ===========================================================================
 # Round-6 bank: registered with oracles now, cost-pinned PAST this round's
 # exactly-full recording window (they sort after every windowed query and
-# become the automated round-6 backlog via scripts/round_open.py).
+# became the round-6 backlog, BENCHNOTES "Round-5 final addendum").
 # ===========================================================================
 
 
@@ -12863,8 +12863,9 @@ def tx36_readability(spark, sf_dir):
     the standard no-dictionary heuristic): the curation signal that
     separates technical/legalese sources from conversational ones,
     which tx16's length/charset quality gate cannot see. Checked
-    against the registry with scripts/concept_check.py: 0 prior
-    readability/syllable matches. Map-only regex counting per doc
+    against the registry's names, docstrings and oracle SQL (BENCHNOTES
+    "Round-7 bank batch 11"): 0 prior readability/syllable matches.
+    Map-only regex counting per doc
     (identical '[aeiouy]+' semantics in Java regex and RE2), per-doc
     scores fixed-pointed to 1e-6 BIGINTs before the source-key sum so
     the average is engine-identical. A terminator-less document counts
@@ -12921,7 +12922,8 @@ def e42_daily_error_rate(spark, sf_dir):
     """Daily reliability rollup: error share of all events plus the
     blast radius (distinct users who hit at least one error that day) —
     the SRE view of the event stream that no existing e-query carries
-    (concept_check: only iv3 mentions 'error', as a join example). One
+    (registry concept check, BENCHNOTES "Round-7 bank batch 11": only
+    iv3 mentions 'error', as a join example). One
     date-key aggregate with two COUNT DISTINCTs (bounded expand, day
     granularity); error_rate is a division of two exact integers, IEEE-
     identical in both engines with no rounding needed."""
@@ -12962,8 +12964,9 @@ FROM u GROUP BY 1 ORDER BY brand""",
 def j13_price_elasticity(spark, sf_dir):
     """Log-log price elasticity of demand per part brand: the OLS slope
     of ln(quantity) on ln(unit price) across order lines — the classic
-    demand-curve diagnostic (concept_check: 0 prior elasticity/unit-
-    price matches). Fact⋈dim broadcast equi-join (the J1 shape: part is
+    demand-curve diagnostic (registry concept check, BENCHNOTES
+    "Round-7 bank batch 11": 0 prior elasticity/unit-price matches).
+    Fact⋈dim broadcast equi-join (the J1 shape: part is
     the small side at every sf since both scale together — at cluster
     scale the same join stays broadcastable or falls back to a
     co-partitioned equi-join), then one brand-key regr_slope; ln() of
@@ -13677,7 +13680,8 @@ def skw3_sharded_sessions(spark, sf_dir):
     rehearsal showed neither AQE (joins only) nor salting (breaks order
     semantics) covers: a bot-grade hot entity serializing an
     order-dependent window onto one task (e3_sessionize measured 1.26x
-    at 50%-hot/10x; sharded stays flat — scripts/skew_straggler_10x.py).
+    at 50%-hot/10x; sharded stays flat — BENCHNOTES "Round-8 addendum
+    2" and "Round 9: hot-entity sessionization").
     The 4-hour gap with 6-hour shards makes sessions genuinely cross
     shard edges at this SF, so the stitch pass is exercised, not
     decorative. Cost: one (user, shard) shuffle over events + one tiny

@@ -45,8 +45,9 @@ def with_audit_cols(df: DataFrame, now: dt.datetime | None = None) -> DataFrame:
     A NAIVE ``now`` is a UTC wall value by contract: F.lit(naive
     datetime) would otherwise convert through the PYTHON PROCESS'S
     local zone, silently shifting the audit instant on any non-UTC
-    workstation (found by scripts/tz_sweep.py, r8 — the only
-    divergence in the registry-wide America/New_York run)."""
+    workstation (BENCHNOTES "Round 8: session-timezone adversary": the
+    only divergence in the registry-wide America/New_York run; pinned by
+    tests/test_krx_pipeline.py::test_audit_cols_naive_now_is_utc)."""
     if now is not None and now.tzinfo is None:
         now = now.replace(tzinfo=dt.timezone.utc)
     ts = F.lit(now) if now is not None else F.current_timestamp()

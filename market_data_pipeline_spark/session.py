@@ -93,8 +93,8 @@ def get_spark(
         # accumulate localCheckpoint blocks and shuffle files whose cleanup
         # waits on a driver JVM GC; force one periodically so the block
         # manager doesn't balloon across hundreds of queries. 15s, not the
-        # previous 60s: the r11 aged-session probe (scripts/udf_noise_probe.py,
-        # BENCHNOTES r11) traced the 2-4x per-query bench noise band to
+        # previous 60s: the r11 aged-session probe (BENCHNOTES "Round 11",
+        # Arrow-UDF noise band) traced the 2-4x per-query bench noise band to
         # queries landing inside a bloated between-GC window — at 60s,
         # 4/15 aged-session k16 reps measured 6.0-9.3s vs a 1.5s floor;
         # at 15s, 0/12 reps exceeded 2.4s on a quiet box. The shorter

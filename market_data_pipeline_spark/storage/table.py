@@ -238,14 +238,13 @@ class ParquetTable:
         exists for. Unpartitioned (dim) tables rewrite whole.
 
         ``max_concurrency`` overlaps the per-partition rewrite JOBS: the
-        r9 100x rehearsal (scripts/storage_compaction_100x.py, SCALE.md
-        §A.2) measured a 115-partition full compaction at ~0.44s of
-        fixed job overhead per partition under the sequential loop —
-        at a 10k-partition production table that loop IS the cost, not
-        the bytes. Each partition's stage-and-swap touches only its own
-        directory and Spark schedules jobs from concurrent driver
-        threads natively, so rewrites are safely parallel; exceptions
-        propagate and abort remaining submissions.
+        r9 100x rehearsal (SCALE.md §A.2) measured a 115-partition full
+        compaction at ~0.44s of fixed job overhead per partition under
+        the sequential loop — at a 10k-partition production table that
+        loop IS the cost, not the bytes. Each partition's stage-and-swap
+        touches only its own directory and Spark schedules jobs from
+        concurrent driver threads natively, so rewrites are safely
+        parallel; exceptions propagate and abort remaining submissions.
         """
         if not self.version_col:
             return

@@ -9,8 +9,8 @@ straggler task — and the shipped testdata is uniform by construction,
 so neither the per-round gate nor the other five sweeps ever exercises
 this class. Correctness under skew is checked here registry-wide at
 sf0.001; the PERFORMANCE side (which plans AQE rescues vs which need
-operators/skew.salted_join) is measured separately by
-scripts/skew_bench.py at sf0.1 and recorded in BENCHNOTES.md.
+operators/skew.salted_join) was measured at sf0.1 and is recorded in
+BENCHNOTES "Round 8: key-skew adversary".
 
 Skews injected (deterministic, ~50% of rows each, hot key = MIN of the
 column's existing domain so referential joins stay valid):

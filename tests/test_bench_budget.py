@@ -1,361 +1,12 @@
-"""The mechanical bench family budget (r7 verdict #7): bench.py diffs
-per-family subtotals against the previous round's recorded BENCH JSON
-and flags regressions — the k-family decimal-fold cost in r7 was only
-caught by self-report."""
+"""bench.py's per-family subtotals: a family is the query name's leading
+letters, and each subtotal sums its members' best-of-2 wall times."""
 
 from __future__ import annotations
 
-import json
-
-from bench import diff_exclusions, family_diff, load_baselines, load_prev_families
+from bench import family_subtotals
 
 
-def test_flags_synthetic_regression():
-    prev = {"k": 27.7, "ts": 45.0, "tx": 24.0}
-    cur = {"k": 38.8, "ts": 45.6, "tx": 25.2}  # k blown 1.4x
-    flags = family_diff(cur, prev)
-    assert [f["family"] for f in flags] == ["k"]
-    assert flags[0]["ratio"] == 1.4
-    # the ACTUAL r6->r7 k move (+24%) sat under the 1.3x flag — that is
-    # the documented blind spot: the budget catches blowups, BENCHNOTES
-    # still owns the narrative for sub-1.3x drift
-    assert family_diff({"k": 34.3}, {"k": 27.7}) == []
-
-
-def test_threshold_and_floor():
-    # >1.3x but sub-second growth: noise, not flagged
-    assert family_diff({"o": 0.6}, {"o": 0.4}) == []
-    # big absolute growth below 1.3x: not flagged either
-    assert family_diff({"ts": 50.0}, {"ts": 45.0}) == []
-    # both conditions met -> flagged
-    assert family_diff({"dd": 40.0}, {"dd": 28.0}) == [
-        {"family": "dd", "prev": 28.0, "cur": 40.0, "ratio": 1.43}
-    ]
-
-
-def test_new_family_never_flagged():
-    assert family_diff({"zz": 99.0}, {"k": 1.0}) == []
-    assert family_diff({"k": 99.0}, {}) == []
-
-
-def test_load_prev_families_reads_driver_file(tmp_path):
-    (tmp_path / "BENCH_r03.json").write_text(
-        json.dumps({"parsed": {"families": {"k": 1.5}, "bench_total_sec": 1.5}})
-    )
-    (tmp_path / "BENCH_r04.json").write_text("not json at all")
-    name, fams = load_prev_families(str(tmp_path))
-    # newest unparseable file is skipped, not fatal
-    assert name == "median(BENCH_r03.json)" and fams == {"k": 1.5}
-    assert load_prev_families(str(tmp_path / "nowhere")) == ("", {})
-
-
-def test_load_prev_families_trailing_median(tmp_path):
-    """r8 verdict #7: the baseline is the per-family MEDIAN of the
-    newest 3 usable files, so a slow two-round creep can't reset the
-    yardstick each round, and (r8 ADVICE #3) the current round's own
-    recording being on disk can't turn the diff into a self-compare."""
-    for rnd, k in [(5, 10.0), (6, 10.5), (7, 11.0), (8, 30.0)]:
-        (tmp_path / f"BENCH_r0{rnd}.json").write_text(
-            json.dumps({"parsed": {"families": {"k": k, f"only{rnd}": 1.0}}})
-        )
-    name, fams = load_prev_families(str(tmp_path))
-    # newest three files (r6, r7, r8); r8's inflated 30.0 is outvoted
-    assert name == "median(BENCH_r08.json,BENCH_r07.json,BENCH_r06.json)"
-    assert fams["k"] == 11.0
-    # a family present in only one window file still gets a baseline
-    assert fams["only8"] == 1.0 and "only5" not in fams
-    # creep check: 13.0 vs median 11.0 sub-1.3x -> unflagged, but vs a
-    # single-newest baseline of 30.0 it would even have looked like a win
-    assert family_diff({"k": 15.0}, fams) == [
-        {"family": "k", "prev": 11.0, "cur": 15.0, "ratio": 1.36}
-    ]
-
-
-def test_load_prev_families_exclude(tmp_path, monkeypatch):
-    for rnd in (7, 8):
-        (tmp_path / f"BENCH_r0{rnd}.json").write_text(
-            json.dumps({"parsed": {"families": {"k": float(rnd)}}})
-        )
-    name, fams = load_prev_families(str(tmp_path), exclude=("BENCH_r08.json",))
-    assert name == "median(BENCH_r07.json)" and fams == {"k": 7.0}
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_EXCLUDE", "BENCH_r08.json,BENCH_r07.json")
-    assert load_prev_families(str(tmp_path)) == ("", {})
-
-
-def test_diff_exclusions_first_seen_fallback():
-    """r9 verdict "what's wrong" #1 / r10 #2: a query REGISTERED this
-    round must not read as a family regression even though the driver
-    records correctness (making it green) BEFORE bench runs. The old
-    never-green exclusion was empty by bench time; the fix keys on the
-    FIRST driver-trail appearance vs the baseline rounds instead."""
-    baselines = [
-        {"name": f"BENCH_r0{r}.json", "round": r, "families": {}, "queries": None}
-        for r in (9, 8, 7)
-    ]
-    first_seen = {
-        "pipeline3_daily_master_update": 9,  # the r9 false-flag case
-        "pipeline4_corpus_prep": 10,         # first green == current round
-        "pipeline1_daily_update": 6,
-        "a1_market_summary": 1,              # re-recorded every ~7 rounds
-    }
-    current = list(first_seen) + ["mm1_image_stats", "brand_new_rows_only"]
-    excl = diff_exclusions(current, baselines, first_seen)
-    # median-of-3 over (r7,r8,r9) only prices queries present in >=2
-    # files, i.e. first seen <= r8: both recent registrations drop out,
-    # long-standing queries stay in regardless of re-record vintage.
-    # Names with NO trail row at all (rows-only tier-2 queries are
-    # never driver-recorded) drop too when no BENCHQ prices them.
-    assert excl == {
-        "pipeline3_daily_master_update",
-        "pipeline4_corpus_prep",
-        "mm1_image_stats",
-        "brand_new_rows_only",
-    }
-    # ...but a trail-absent name listed in some baseline's BENCHQ dict
-    # stays priced: long-registered rows-only queries keep their costs
-    # in the family diff
-    baselines[0]["queries"] = {"mm1_image_stats": 1.6}
-    excl = diff_exclusions(current, baselines, first_seen)
-    assert "mm1_image_stats" not in excl and "brand_new_rows_only" in excl
-    assert diff_exclusions(current, [], first_seen) == set()
-
-
-def test_diff_exclusions_per_query_intersection():
-    """Once every baseline carries a BENCHQ per-query dict, the diff is
-    the exact set intersection — no vintage heuristics."""
-    baselines = [
-        {"name": "BENCH_r09.json", "round": 9, "families": {},
-         "queries": {"a": 1.0, "b": 2.0, "c": 3.0}},
-        {"name": "BENCH_r08.json", "round": 8, "families": {},
-         "queries": {"a": 1.0, "b": 2.0}},
-    ]
-    # c is only in r9's baseline; d is brand new this round
-    excl = diff_exclusions(["a", "b", "c", "d"], baselines, {"c": 2, "d": 10})
-    assert excl == {"c", "d"}
-    # one baseline lacking per-query data -> whole diff falls back to
-    # the first-seen rule (anchor = second-newest round = 8)
-    baselines[1]["queries"] = None
-    excl = diff_exclusions(["a", "c", "d"], baselines, {"a": 1, "c": 2, "d": 10})
-    assert excl == {"d"}
-
-
-def test_load_baselines_reads_benchq_sibling(tmp_path):
-    (tmp_path / "BENCH_r09.json").write_text(
-        json.dumps({"parsed": {"families": {"k": 1.5}}})
-    )
-    (tmp_path / "BENCHQ_r09.json").write_text(
-        json.dumps({"round": 9, "queries": {"k1": 1.5}})
-    )
-    (tmp_path / "BENCH_r08.json").write_text(
-        json.dumps({"parsed": {"families": {"k": 1.0}}})
-    )
-    got = load_baselines(str(tmp_path))
-    assert [(b["round"], b["queries"]) for b in got] == [
-        (9, {"k1": 1.5}),
-        (8, None),
-    ]
-
-
-def test_family_subtotals_excludes_new_registrations():
-    from bench import family_subtotals
-
+def test_family_subtotals_groups_by_prefix():
     timings = {"pipeline1_daily_update": 5.0, "pipeline3_daily_master_update": 10.4,
                "skw1_join_key_skew_profile": 0.8, "skw3_sharded_sessions": 1.3}
-    full = family_subtotals(timings)
-    assert full == {"pipeline": 15.4, "skw": 2.1}
-    # a this-round registration's cost must not read as a family
-    # regression: the diff subtotal drops it, the recorded one keeps it
-    diffed = family_subtotals(
-        timings, exclude={"pipeline3_daily_master_update", "skw3_sharded_sessions"}
-    )
-    assert diffed == {"pipeline": 5.0, "skw": 0.8}
-
-
-def test_write_benchq_collision_merges_best_of_runs(tmp_path):
-    """r10 verdict #6 + r11: same-round runs never destroy each other —
-    every raw run lands in a free _rerun slot and the canonical becomes
-    the element-wise MIN across runs (per-query pins want the best
-    observation on closed code, not one arbitrary run's)."""
-    from bench import write_benchq
-
-    run_a = {"round": 11, "sf": 0.1, "total_sec": 384.5,
-             "queries": {"q1": 2.0, "q2": 1.0}}
-    run_b = {"round": 11, "sf": 0.1, "total_sec": 312.2,
-             "queries": {"q1": 1.0, "q2": 3.0, "q3": 0.5}}
-
-    assert write_benchq(str(tmp_path), 11, run_a).endswith("BENCHQ_r11.json")
-    assert write_benchq(str(tmp_path), 11, run_b).endswith(
-        "BENCHQ_r11_rerun.json"
-    )
-    canon = json.load(open(tmp_path / "BENCHQ_r11.json"))
-    # element-wise min, union of query sets, total recomputed
-    assert canon["queries"] == {"q1": 1.0, "q2": 1.0, "q3": 0.5}
-    assert canon["total_sec"] == 2.5
-    # raw runs preserved verbatim
-    assert json.load(open(tmp_path / "BENCHQ_r11_rerun.json"))["queries"] == \
-        run_b["queries"]
-
-    # a THIRD run takes the next free slot and re-merges
-    run_c = {"round": 11, "sf": 0.1, "total_sec": 350.0,
-             "queries": {"q1": 0.8, "q2": 5.0}}
-    assert write_benchq(str(tmp_path), 11, run_c).endswith(
-        "BENCHQ_r11_rerun2.json"
-    )
-    canon = json.load(open(tmp_path / "BENCHQ_r11.json"))
-    assert canon["queries"] == {"q1": 0.8, "q2": 1.0, "q3": 0.5}
-    assert json.load(open(tmp_path / "BENCHQ_r11_rerun.json"))["queries"] == \
-        run_b["queries"]
-
-
-def test_load_baselines_numeric_round_order(tmp_path):
-    """BENCH_r100 must beat BENCH_r99 (lexical sort would invert them)."""
-    (tmp_path / "BENCH_r99.json").write_text(
-        json.dumps({"parsed": {"families": {"k": 1.0}}})
-    )
-    (tmp_path / "BENCH_r100.json").write_text(
-        json.dumps({"parsed": {"families": {"k": 2.0}}})
-    )
-    got = load_baselines(str(tmp_path), window=1)
-    assert [b["round"] for b in got] == [100]
-
-
-def test_cost_table_numeric_round_order(tmp_path, monkeypatch):
-    """__spark_entry__._cost_table must pick BENCHQ_r100 over r99, and
-    skip *_rerun files while a canonical sibling exists."""
-    import __spark_entry__ as entry
-
-    (tmp_path / "BENCHQ_r99.json").write_text(
-        json.dumps({"round": 99, "queries": {"q": 99.0}})
-    )
-    (tmp_path / "BENCHQ_r100.json").write_text(
-        json.dumps({"round": 100, "queries": {"q": 100.0}})
-    )
-    (tmp_path / "BENCHQ_r100_rerun.json").write_text(
-        json.dumps({"round": 100, "queries": {"q": 0.5}})
-    )
-    # _cost_table imports glob locally; redirect its BENCHQ glob
-    import glob as _glob
-
-    real_glob = _glob.glob
-    monkeypatch.setattr(
-        _glob,
-        "glob",
-        lambda pat: real_glob(str(tmp_path / "BENCHQ_r*.json"))
-        if "BENCHQ_r*" in pat
-        else real_glob(pat),
-    )
-    got = entry._cost_table()
-    assert got == {"q": 100.0}
-
-
-def test_query_pins_min_across_baselines():
-    from bench import query_pins
-
-    baselines = [
-        {"round": 11, "queries": {"q1": 2.0, "q2": 1.0}},
-        {"round": 10, "queries": {"q1": 1.5, "q3": 4.0, "bad": "x"}},
-        {"round": 9, "queries": None},
-    ]
-    assert query_pins(baselines) == {"q1": 1.5, "q2": 1.0, "q3": 4.0}
-    assert query_pins([]) == {}
-
-
-def test_query_diff_flags_structural_slowdowns():
-    """r11 verdict #2: any per-query >2x vs its best BENCHQ pin with
-    >=0.5s growth is flagged as a REAL regression (p95 cross-run ratio
-    is 1.40, so 2x is outside the measured noise band)."""
-    from bench import query_diff
-
-    pins = {"dd3": 2.27, "a6": 0.37, "w1": 0.5, "pipeline3": 8.32}
-    cur = {
-        "dd3": 5.0,        # 2.2x and +2.7s -> flagged
-        "a6": 0.9,         # 2.4x but +0.53s... flagged (crosses both gates)
-        "w1": 0.9,         # 1.8x -> under threshold, not flagged
-        "pipeline3": 8.9,  # 1.07x -> fine
-        "brand_new": 9.9,  # no pin -> never flagged
-    }
-    flags = query_diff(cur, pins)
-    assert [f["query"] for f in flags] == ["a6", "dd3"]
-    assert flags[1] == {"query": "dd3", "prev": 2.27, "cur": 5.0, "ratio": 2.2}
-    # sub-threshold growth floor: 2x+ but <0.5s absolute growth is noise
-    assert query_diff({"o1": 0.4}, {"o1": 0.1}) == []
-    assert query_diff({}, pins) == []
-
-
-def test_write_benchq_refuses_cross_sf_merge(tmp_path):
-    """r11 ADVICE #1: a rerun under a different SPARK_GRAFT_SF_DIR must
-    not element-wise-min into the canonical (the smaller sf would win
-    every pin); it keeps its raw rerun slot only."""
-    import json as _json
-
-    from bench import write_benchq
-
-    run_a = {"round": 12, "sf": 0.1, "queries": {"q1": 2.0}}
-    run_b = {"round": 12, "sf": 0.01, "queries": {"q1": 0.1, "q2": 0.2}}
-    write_benchq(str(tmp_path), 12, run_a)
-    out = write_benchq(str(tmp_path), 12, run_b)
-    assert out.endswith("_rerun.json")
-    canon = _json.load(open(tmp_path / "BENCHQ_r12.json"))
-    assert canon == run_a  # untouched
-    assert _json.load(open(out))["sf"] == 0.01
-
-
-def test_write_benchq_all_none_key_skipped(tmp_path):
-    """r11 ADVICE #2: a query whose value is null in BOTH the prior
-    canonical and the new run must be skipped, not crash min()."""
-    import json as _json
-
-    from bench import write_benchq
-
-    run_a = {"round": 12, "sf": 0.1, "queries": {"q1": 2.0, "qnull": None}}
-    run_b = {"round": 12, "sf": 0.1, "queries": {"q1": 1.5, "qnull": None}}
-    write_benchq(str(tmp_path), 12, run_a)
-    write_benchq(str(tmp_path), 12, run_b)
-    canon = _json.load(open(tmp_path / "BENCHQ_r12.json"))
-    assert canon["queries"] == {"q1": 1.5}
-
-
-def test_cost_table_rerun_ranks_below_own_canonical(tmp_path, monkeypatch):
-    """r11 ADVICE #3: when the newest round's canonical BENCHQ is
-    missing/corrupt but its rerun files exist, the rerun must beat an
-    OLDER round's canonical."""
-    import json as _json
-
-    import __spark_entry__ as entry
-
-    (tmp_path / "BENCHQ_r99.json").write_text(
-        _json.dumps({"round": 99, "queries": {"q": 99.0}})
-    )
-    (tmp_path / "BENCHQ_r100.json").write_text("corrupt{{{")
-    (tmp_path / "BENCHQ_r100_rerun.json").write_text(
-        _json.dumps({"round": 100, "queries": {"q": 100.5}})
-    )
-    import glob as _glob
-
-    real_glob = _glob.glob
-    monkeypatch.setattr(
-        _glob,
-        "glob",
-        lambda pat: real_glob(str(tmp_path / "BENCHQ_r*.json"))
-        if "BENCHQ_r*" in pat
-        else real_glob(pat),
-    )
-    assert entry._cost_table() == {"q": 100.5}
-
-
-def test_write_benchq_reset_drops_stale_impl_pins(tmp_path, monkeypatch):
-    """r12: a query whose implementation changed mid-round must not keep
-    its old-code observation through the min-merge — the run timing the
-    new code names it in SPARK_GRAFT_BENCHQ_RESET."""
-    import json as _json
-
-    from bench import write_benchq
-
-    run_a = {"round": 12, "sf": 0.1, "queries": {"k5": 4.1, "q1": 1.0}}
-    run_b = {"round": 12, "sf": 0.1, "queries": {"k5": 6.0, "q1": 0.9}}
-    write_benchq(str(tmp_path), 12, run_a)
-    monkeypatch.setenv("SPARK_GRAFT_BENCHQ_RESET", "k5")
-    write_benchq(str(tmp_path), 12, run_b)
-    canon = _json.load(open(tmp_path / "BENCHQ_r12.json"))
-    # k5's old-code 4.1 dropped; q1 still min-merged
-    assert canon["queries"] == {"k5": 6.0, "q1": 0.9}
+    assert family_subtotals(timings) == {"pipeline": 15.4, "skw": 2.1}

@@ -3,9 +3,10 @@ entry returns a DataFrame at sf0.001, and every oracle key has a query."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 
@@ -30,8 +31,7 @@ def test_recording_order_is_rolling_vintage():
     dead last) — computed from the CORRECTNESS trail, not
     hand-maintained sets."""
     qs, oras = E.queries(), E.oracle_sql()
-    vint = E._newest_green_round()
-    ever = E._first_seen_round()
+    vint, ever = E._trail_rounds()
     names = list(qs)
     oracled = [n for n in names if n in oras]
     rows_only = [n for n in names if n not in oras]
@@ -53,9 +53,10 @@ def test_recording_order_is_rolling_vintage():
         assert names == nevers + greens + tail_rows_only
 
 
-def test_every_query_builds_plan(spark, sf_dir):
+def test_every_query_builds_plan(registry_plans):
     """Building the DataFrame (analysis phase) must succeed for every
     query; execution is covered by scripts/check_oracle.py and bench."""
-    for name, fn in E.queries().items():
-        df = fn(spark, sf_dir)
-        assert df.columns, name
+    assert set(registry_plans) == set(E.queries())
+    errors = {n: r["error"] for n, r in registry_plans.items() if "error" in r}
+    assert not errors, f"queries that fail to build: {errors}"
+    assert not [n for n, r in registry_plans.items() if not r["columns"]]

@@ -4,6 +4,7 @@ the end-to-end ingest pipelines (§3.1 daily batch, §3.2 delisted sync)."""
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -246,3 +247,23 @@ def test_daily_update_pre_snapshot_rollback(spark, master, tmp_path):
     master.restore("pre_batch2")
     after = {tuple(map(str, r)) for r in master.read_current().collect()}
     assert after == before
+
+
+@pytest.fixture
+def new_york_tz(monkeypatch):
+    """The Python process runs in America/New_York for one test."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_audit_cols_naive_now_is_utc(spark, new_york_tz):
+    """A naive ``now`` is a UTC wall value, whatever the process's local
+    zone: update_dt must be the UTC epoch of ``now``, not its New York
+    reading (which would be 4 hours later on this date)."""
+    now = dt.datetime(2024, 3, 10, 12, 0)
+    df = PL.with_audit_cols(spark.range(1), now=now)
+    got = df.select(F.unix_timestamp("update_dt").alias("s")).first()["s"]
+    assert got == int(now.replace(tzinfo=dt.timezone.utc).timestamp()) == 1710072000

@@ -182,7 +182,7 @@ def test_tpch_q3_broadcasts_and_pushes(plans):
     assert facts["pushed_scans"] >= 3
 
 
-def test_no_query_plans_a_single_partition_exchange(spark):
+def test_no_query_plans_a_single_partition_exchange(registry_plans):
     """Global invariant: NO registered query may funnel UNBOUNDED data
     through an Exchange SinglePartition (the one-task global window/sort
     — the canonical scale-killer). Global total orders must use range
@@ -194,23 +194,14 @@ def test_no_query_plans_a_single_partition_exchange(spark):
     Streaming queries (which execute on build) and driver-side helpers
     are exercised by their own tests. The same loop checks that no
     registered query ends in a global Sort at its plan root."""
-    from market_data_pipeline_spark.plans.driver_queries import QUERIES as ALL_Q
-
-    offenders = {}
-    root_sorted = []
-    for name, fn in ALL_Q.items():
-        try:
-            df = fn(spark, SF_DIR)
-            # registered queries return rows in no defined order: a global
-            # Sort at the plan root is a presentation sort nobody reads
-            root = df._jdf.queryExecution().analyzed()
-            if root.getClass().getSimpleName() == "Sort" and getattr(root, "global")():
-                root_sorted.append(name)
-            facts = audit_plan(df)
-        except Exception:
-            continue  # streaming/memory-sink queries run on build
-        if facts["unbounded_single_partition"]:
-            offenders[name] = facts["unbounded_single_partition"]
+    offenders = {
+        name: rec["facts"]["unbounded_single_partition"]
+        for name, rec in registry_plans.items()
+        if rec.get("facts", {}).get("unbounded_single_partition")
+    }
+    # registered queries return rows in no defined order: a global Sort at
+    # the plan root is a presentation sort nobody reads
+    root_sorted = [n for n, rec in registry_plans.items() if rec.get("root_sort")]
     assert not offenders, f"unbounded single-partition exchanges in: {offenders}"
     assert not root_sorted, f"closing global sort at the plan root of: {root_sorted}"
 

@@ -86,19 +86,19 @@ def test_k9_label_centroids_scalar_shape_and_values(spark, sf_dir):
         assert r["component"] == ref["centroid"][r["dim"]]
 
 
-def test_oracled_queries_never_return_array_or_map(spark, sf_dir):
+def test_oracled_queries_never_return_array_or_map(registry_plans):
     """Registry-wide rule from r5 verdict #1: the driver's pandas
     canonicalizer cannot hash array/map cells, so every ORACLED query's
     schema must be scalar-only. (No-oracle queries may return anything —
     they are rows-only checked.)"""
-    from market_data_pipeline_spark.plans.driver_queries import ORACLES, QUERIES
+    from market_data_pipeline_spark.plans.driver_queries import ORACLES
 
     offenders = []
     for name in sorted(ORACLES):
-        df = QUERIES[name](spark, sf_dir)
-        for f in df.schema.fields:
-            if f.dataType.typeName() in ("array", "map", "struct"):
-                offenders.append((name, f.name, f.dataType.simpleString()))
+        rec = registry_plans[name]
+        for col, typ in zip(rec.get("columns", []), rec.get("types", [])):
+            if typ in ("array", "map", "struct"):
+                offenders.append((name, col, typ))
     assert offenders == []
 
 

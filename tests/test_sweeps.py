@@ -5,7 +5,7 @@ bit-rotting and re-pins the bugs they found (NaN state poisoning,
 unicode tokenization drift, >2^53 double rounding) at the query level.
 
 The full sweeps (all 355 queries, ~4-12 min each) stay manual:
-  python scripts/{empty,null,unicode,ties,extremes}_sweep.py
+  python scripts/{empty,null,unicode,ties,extremes,zerovec,skew}_sweep.py
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ CASES = [
     ("ties_sweep", ["iv7_gap_histogram", "e30_hourly_conversion"]),
     ("extremes_sweep", ["dp4_price_histogram", "f16_oof_target_encoding"]),
     ("zerovec_sweep", ["k1_knn_topk", "sd1_semantic_dedup", "k11_norm_stats"]),
+    ("skew_sweep", ["e11_rfm_scores", "ts9_rolling_corr", "j12_nation_top_customers"]),
 ]
 
 
