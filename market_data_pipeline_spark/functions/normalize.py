@@ -53,22 +53,6 @@ def parse_multiformat_date(c: Column) -> Column:
     )
 
 
-def null_fill(c: Column, default) -> Column:
-    """F11/F12 — coalesce to a literal default (reference:
-    scripts/daily_stock_master_update.py:235-242,
-    src/clickhouse/stock_master.py:67-73)."""
-    return F.coalesce(c, F.lit(default))
-
-
-def rename_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """F15 — rename by mapping (Korean -> English headers; reference:
-    src/crawlers/krx_delisted_crawler.py:209-220). Unmapped columns pass
-    through unchanged."""
-    return df.select(
-        *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
-    )
-
-
 def month_bucket(c: Column) -> Column:
     """F9 — yyyyMM partition bucket (reference:
     src/clickhouse/price_client.py:93 — toYYYYMM)."""

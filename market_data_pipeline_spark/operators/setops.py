@@ -68,12 +68,6 @@ def union_relaxed(dfs: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), [conform(df) for df in dfs])
 
 
-def union_by_name(dfs: list[DataFrame]) -> DataFrame:
-    """U2 — plain union by name, missing columns allowed as nulls
-    (reference: scripts/daily_stock_master_update.py:79)."""
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
-
-
 def key_difference(existing: DataFrame, incoming: DataFrame, key: str) -> DataFrame:
     """U3 — keys in ``incoming`` not in ``existing``, kept distributed
     (reference collects to a Python set at

@@ -953,31 +953,6 @@ def knn_ivf(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def _dot_pandas(a_col: Column, b_col: Column) -> Column:
-    """Vectorized dot product of two array<double> columns via an Arrow
-    pandas UDF (numpy einsum over the whole batch).
-
-    Used ONLY where the result feeds a threshold/rank, not an oracle
-    hash: numpy's accumulation order differs from the sequential
-    ``F.aggregate`` fold, so the last float bit can differ. For bulk
-    pair confirmation it is ~5-10x the interpreted higher-order-function
-    path (HOFs don't codegen; each element access is a JVM closure call).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    def dot(a, b):
-        am = np.vstack(a.to_numpy())
-        bm = np.vstack(b.to_numpy())
-        return pd.Series(np.einsum("ij,ij->i", am, bm))
-
-    # `from __future__ import annotations` stringifies hints, which
-    # pandas_udf can't resolve — attach real class annotations instead
-    dot.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf(dot, "double")(a_col, b_col)
-
-
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic Gaussian hyperplanes for sign-LSH."""
     rng = random.Random(seed)

@@ -39,10 +39,6 @@ def bpe_ish_token_count(text_col: Column) -> Column:
     return F.regexp_count(text_col, F.lit(TOKEN_PATTERN))
 
 
-def stopword_count(text_col: Column, stopwords: list[str]) -> Column:
-    return F.size(F.filter(tokens(text_col), lambda t: t.isin(*stopwords)))
-
-
 def exploded_words(
     df: DataFrame, text_col: str = "text", carry_cols: tuple[str, ...] = ("doc_id",)
 ) -> DataFrame:
@@ -404,7 +400,7 @@ def repetition_stats(
     text), so counts and integer-ratio fractions hash-match the oracle
     exactly. The explicit ``[ \t\n\x0B\f\r]`` class is load-bearing:
     Python ``\s`` is UNICODE whitespace (NBSP, U+2028, U+3000 split
-    there but nowhere else — found by scripts/unicode_sweep.py), and
+    there but nowhere else — found by `scripts/sweep.py unicode`), and
     RE2's ASCII ``\s`` lacks ``\x0B`` while Java's includes it (r9
     ADVICE #1), so every engine gets the same literal class.
     Returns (id, n_tokens, n_2grams, dup_2gram_frac, top_2gram_frac,

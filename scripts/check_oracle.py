@@ -4,6 +4,9 @@ count, column names, and order-insensitive values.
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 
+The loop itself is ``run``; the adversarial sweeps (scripts/sweep.py)
+call it over their clones on the caller's session.
+
 Degenerate-empty guard (r6 verdict #2): a PASS where BOTH sides return
 0 rows is vacuous — it proved only that two empty sets are equal, not
 that the query computes anything. Round 6 shipped two such drafts
@@ -17,11 +20,13 @@ on PASS. Rows-only queries get the same treatment (0 rows -> FAIL).
 from __future__ import annotations
 
 import math
+import os
 import sys
+from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from market_data_pipeline_spark.session import get_spark  # noqa: E402
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
@@ -74,46 +79,105 @@ def compare(name, spark_cols, srows, duck_cols, drows):
     return "PASS", f"{len(srows)} rows"
 
 
-def main():
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    spark = get_spark("oracle-check", shuffle_partitions=8)
+def within_rel_tol(spark_cols, srows, duck_cols, drows, rel_tol) -> bool:
+    """True iff the two row sets match exactly on non-floats and within
+    ``rel_tol`` RELATIVE on floats. Rows are aligned by their non-float
+    fields; ambiguous alignments (duplicate non-float keys) fall back to
+    sorted float tuples."""
+    if sorted(spark_cols) != sorted(duck_cols) or len(srows) != len(drows):
+        return False
+    cols = sorted(spark_cols)
+
+    def group(rows):
+        g = {}
+        for r in rows:
+            key = tuple(str(r[c]) for c in cols if not isinstance(r[c], float))
+            floats = [r[c] for c in cols if isinstance(r[c], float)]
+            g.setdefault(key, []).append(sorted(floats, key=lambda x: (math.isnan(x), x)))
+        return g
+
+    gs, gd = group(srows), group(drows)
+    if gs.keys() != gd.keys():
+        return False
+    for k in gs:
+        a, b = sorted(gs[k]), sorted(gd[k])
+        if len(a) != len(b):
+            return False
+        for fa, fb in zip(a, b):
+            if len(fa) != len(fb):
+                return False
+            for x, y in zip(fa, fb):
+                if not (math.isnan(x) and math.isnan(y)) and not math.isclose(
+                    x, y, rel_tol=rel_tol, abs_tol=rel_tol
+                ):
+                    return False
+    return True
+
+
+def run(spark, data_dir, only=(), *, adversarial=False, parity=True, rel_tol=0.0) -> Counter:
+    """Run every queries() entry (or those in ``only``) on ``spark`` over
+    the tables in ``data_dir``, compare each oracled one with its
+    oracle_sql() on DuckDB over the same files, print one line per query
+    and return the tally of outcomes: PASS, FAIL, rows-only, and for
+    adversarial runs WARN and ulp (the PASSes that needed ``rel_tol``).
+
+    The gate runs with the defaults. With ``adversarial`` a two-sided
+    0-row match is WARN rather than FAIL (the degenerate-empty guard is
+    for query authoring; an adversary may empty a result) and a rows-only
+    query need only not crash. ``parity=False`` runs every query that
+    way, crash-only. ``rel_tol`` re-checks a values-differ result float
+    by float at that relative tolerance. Crashes and DuckDB errors FAIL.
+    """
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data_dir}/{t}.parquet'")
 
-    qs, oras = queries(), oracle_sql()
-    failures = []
-    for name, fn in qs.items():
+    oras = oracle_sql() if parity else {}
+    tally = Counter()
+    for name, fn in queries().items():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf)
+            sdf = fn(spark, data_dir)
             spark_cols = list(sdf.columns)
             srows = [row.asDict() for row in sdf.collect()]
         except Exception as e:
-            failures.append((name, f"SPARK ERROR: {e}"))
+            tally["FAIL"] += 1
             print(f"FAIL {name}: spark error {e}")
             continue
         if name not in oras:
-            if not srows and name not in MAY_BE_EMPTY:
-                failures.append((name, "rows-only query returned 0 rows"))
+            if not srows and not adversarial and name not in MAY_BE_EMPTY:
+                tally["FAIL"] += 1
                 print(f"FAIL {name}: rows-only returned 0 rows (degenerate)")
             else:
+                tally["rows-only"] += 1
                 print(f"ok   {name}: rows-only ({len(srows)} rows, cols={sorted(spark_cols)})")
             continue
         try:
             ddf = con.execute(oras[name]).fetch_arrow_table()
         except Exception as e:
-            failures.append((name, f"DUCKDB ERROR: {e}"))
+            tally["FAIL"] += 1
             print(f"FAIL {name}: duckdb error {e}")
             continue
-        status, msg = compare(name, spark_cols, srows, ddf.column_names, ddf.to_pylist())
-        if status == "FAIL":
-            failures.append((name, msg))
-        print(f"{status} {name}: {msg}" if status == "FAIL" else f"PASS {name} ({msg})")
-    print(f"\n{len(failures)} failures" if failures else "\nALL PASS")
-    return 1 if failures else 0
+        drows = ddf.to_pylist()
+        status, msg = compare(name, spark_cols, srows, ddf.column_names, drows)
+        if status == "FAIL" and adversarial and "degenerate 0-row" in msg:
+            status, msg = "WARN", "two-sided empty"
+        elif status == "FAIL" and rel_tol and "values differ" in msg and within_rel_tol(
+            spark_cols, srows, ddf.column_names, drows, rel_tol
+        ):
+            tally["ulp"] += 1
+            status, msg = "PASS", f"{len(srows)} rows, within {rel_tol:g} relative"
+        tally[status] += 1
+        print(f"{status} {name}: {msg}" if status != "PASS" else f"PASS {name} ({msg})")
+    return tally
+
+
+def main():
+    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    tally = run(get_spark("oracle-check", shuffle_partitions=8), sf, set(sys.argv[2:]))
+    print(f"\n{tally['FAIL']} failures" if tally["FAIL"] else "\nALL PASS")
+    return 1 if tally["FAIL"] else 0
 
 
 if __name__ == "__main__":

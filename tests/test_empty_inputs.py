@@ -207,7 +207,7 @@ def test_round6_ops_empty(spark, empty):
 
 
 def test_round7_query_level_empty(spark, empty):
-    """Round-7 registry-wide empty sweep (scripts/empty_sweep.py) found
+    """Round-7 registry-wide empty sweep (`scripts/sweep.py empty`) found
     exactly four of 355 queries crashing on 0-row tables — the same
     collect()[0] / empty-fit / div-by-zero class as the r6 o2 advisor
     finding. Pin the operator-level fixes here."""

@@ -5,10 +5,12 @@ terminator-less corpus). These drive scripts/check_oracle.compare, the
 exact code path the gate runs."""
 
 import importlib.util
+import os
 import sys
 
 spec = importlib.util.spec_from_file_location(
-    "check_oracle", "/root/repo/scripts/check_oracle.py"
+    "check_oracle",
+    os.path.join(os.path.dirname(__file__), "..", "scripts", "check_oracle.py"),
 )
 check_oracle = importlib.util.module_from_spec(spec)
 sys.modules["check_oracle"] = check_oracle
