@@ -886,27 +886,23 @@ def connected_components(
     near-dup PAIRS (minhash/simhash/cosine candidates) into dedup GROUPS,
     from which one canonical document per cluster survives.
 
-    Iterative min-label propagation ("large-star" style, undirected):
-    each round every node takes the min label in its neighborhood
-    (including its own), via one groupBy over the symmetrized edge list;
-    stop when no label changed. Rounds needed is the graph diameter
-    (near-dup clusters are shallow — a handful of rounds), and each round
-    is one shuffle of |E| rows, nothing driver-side but the convergence
-    flag. Labels are checkpointed through ``localCheckpoint`` each round
-    to cut the exponentially deepening lineage (a plan-size, not
-    correctness, concern).
+    Synchronous min-label (Hash-Min) propagation over the undirected
+    graph: each round every node takes the min label in its neighborhood
+    (including its own); stop when no label changed. Rounds needed is the
+    graph diameter (near-dup clusters are shallow — a handful of rounds).
+    Each round is one ``graph._superstep``: every node sends its label
+    along its adjacency, one groupBy takes the min, and the eager
+    checkpoint observes the changed-label count, so nothing but that
+    count reaches the driver.
 
     Returns (node, component) — component = min node id in the cluster.
     Isolated nodes (absent from pairs) are by definition their own
     component and are not emitted; union them in from the corpus if a
     total labeling is needed.
 
-    The symmetrized edge list is ``localCheckpoint``-ed ONCE before the
-    loop: without it every round's neighbor-min join re-executes the
-    whole upstream pair pipeline (shingling → bucket shuffle → pair
-    explode) from the parquet scan — "re-shingle the corpus D times"
-    where D is the cluster diameter, the dominant cost at scale. After
-    the checkpoint each round shuffles |E| materialized rows only.
+    The pairs input is walked ONCE, into the initial state (node, label,
+    adjacency set); no round re-executes the upstream pair pipeline
+    (shingling → bucket shuffle → pair explode).
 
     Convergence audit: the per-round changed-label counts are recorded on
     the returned DataFrame's ``._cc_audit`` attribute as
@@ -917,61 +913,39 @@ def connected_components(
     """
     import logging
 
+    from market_data_pipeline_spark.operators.graph import _superstep
+
     a, b = F.col(left_col), F.col(right_col)
-    # Symmetrize via a map-side explode of both directions, NOT a union
-    # of two selects over ``pairs``: union branches are separate plan
-    # subtrees, so the whole upstream pair pipeline (shingling → bucket
-    # shuffle → pair explode) would execute TWICE inside the eager
-    # checkpoint's job (r12 opt session 3; guide §2.2 "shuffle fewer
-    # bytes" / §1.2 fixed costs). The explode emits the identical row
-    # multiset from ONE walk of the input.
-    edges = (
+    # Both directions come from a map-side explode of ONE walk of
+    # ``pairs``, not a union of two selects over it (union branches are
+    # separate plan subtrees: the upstream pair pipeline would run twice).
+    labels = (
         pairs.select(
-            F.explode(
+            F.inline(
                 F.array(
-                    F.struct(a.alias("src"), b.alias("dst")),
-                    F.struct(b.alias("src"), a.alias("dst")),
+                    F.struct(a.alias("node"), b.alias("nb")),
+                    F.struct(b.alias("node"), a.alias("nb")),
                 )
-            ).alias("_e")
+            )
         )
-        .select("_e.src", "_e.dst")
-        .distinct()
+        .groupBy("node")
+        .agg(F.collect_set("nb").alias("adj"))
+        .select("node", F.col("node").alias("value"), "adj")
         .localCheckpoint(eager=True)
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "component", F.col("node")
     )
     changed_per_round: list[int] = []
     converged = False
     for _ in range(max_iterations):
-        # candidate label per node: min over neighbors' current labels
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("component").alias("n_comp"))
+        # labels only fall, so "changed" is row-local: inbox < prev
+        labels, seen = _superstep(
+            labels,
+            F.expr("transform(adj, v -> named_struct('node', v, 'msg', value))"),
+            F.min("msg"),
+            F.least("prev", "inbox"),
+            F.count_if(F.col("inbox") < F.col("prev")).alias("changed"),
         )
-        # Labels are monotone non-increasing (least of own + neighbor
-        # min), so "changed" is computable ROW-LOCALLY as n_comp <
-        # component — carried as a flag on the checkpointed frame and
-        # counted from the materialized rows, instead of the old
-        # new-vs-old labels JOIN + count per round (r12 opt: one join
-        # and one shuffle fewer per round, identical labels and
-        # convergence behavior; guide §2.4).
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("n_comp"), F.col("component"))
-                ).alias("component"),
-                (F.col("n_comp") < F.col("component")).alias("_changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.filter(F.col("_changed")).count()
-        changed_per_round.append(changed)
-        labels = new_labels.select("node", "component")
-        if changed == 0:
+        changed_per_round.append(seen["changed"])
+        if seen["changed"] == 0:
             converged = True
             break
     if not converged:
@@ -985,6 +959,7 @@ def connected_components(
         if require_converged:
             raise RuntimeError(msg)
         logging.getLogger(__name__).warning(msg)
+    labels = labels.select("node", F.col("value").alias("component"))
     labels._cc_audit = {"rounds": changed_per_round, "converged": converged}
     return labels
 

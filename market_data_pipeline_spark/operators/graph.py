@@ -1,30 +1,140 @@
 """Iterative graph algorithms on DataFrames (extension family).
 
-The dedup module already runs one fixed-point algorithm (connected
-components, `operators/dedup.py`); this module adds the other canonical
-distributed iteration — PageRank — expressed the way iterative
-algorithms must be written on Spark to survive scale:
+PageRank here and connected components (`operators/dedup.py`) are both
+synchronous message passing, and both run on :func:`_superstep`: the
+state is one row per node, (node, value, adjacency array), and one
+round is
 
-- each iteration is ONE join + ONE aggregate (rank mass flows along
-  edges, partials map-combine before the shuffle);
-- the edge list is the loop invariant: normalized once, checkpointed
-  once, and reused every iteration (never recomputed through lineage);
-- ranks are localCheckpoint-ed every few iterations to cut the lineage
-  chain — without this, iteration N replans and re-executes all N-1
-  predecessors (the classic iterative-Spark failure mode);
-- dangling-node mass (nodes with no out-edges) is redistributed via a
-  single-row aggregate broadcast, not a driver loop.
+- ONE explode of each node's adjacency into (neighbour, message) rows,
+  unioned with the nodes' own rows, which carry value and adjacency
+  forward — no join against an edge list;
+- ONE groupBy(node) that combines the messages (map-combined before the
+  shuffle);
+- ONE eager localCheckpoint, which cuts the lineage every round (round N
+  never replans or re-executes rounds 1..N-1) and, through an
+  ``Observation``, returns the round's scalar (PageRank's dangling mass,
+  CC's changed-label count) without another job.
 
-The driver holds nothing but the iteration counter; all data stays
-distributed. Convergence is by fixed iteration count (the standard
-batch formulation); a delta-based stop would add one tiny aggregate per
-iteration.
+So a round costs two Spark jobs, the shuffle-map stage and the
+checkpoint's result stage, whatever the graph. The input plan is walked
+once, into the initial state; the driver holds the round counter and
+the observed scalars. Convergence is by fixed iteration count for
+PageRank (the standard batch formulation) and by "no label changed" for
+CC.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _superstep(
+    state: DataFrame, send: Column, combine: Column, update: Column, *observe: Column
+) -> tuple[DataFrame, dict]:
+    """One synchronous round over ``state`` = (node, value, adj), one row
+    per node. Returns the next state, checkpointed, and the observed
+    metrics.
+
+    - ``send`` (over value, adj): the array<struct<node, msg>> a node
+      sends along its adjacency. A message to a NULL node is dropped, as
+      an equi-join on NULL would drop it;
+    - ``combine`` (over msg): a node's inbox, NULL when nothing arrived;
+    - ``update`` (over prev = the node's value, inbox): its next value;
+    - ``observe``: named aggregates over the next rows (value, adj, prev,
+      inbox), delivered by the checkpoint's own jobs.
+    """
+    msgs = state.select(F.inline(send)).filter(F.col("node").isNotNull())
+    obs = Observation()
+    nxt = (
+        state.unionByName(msgs, allowMissingColumns=True)
+        .groupBy("node")
+        .agg(
+            F.first("value", ignorenulls=True).alias("prev"),
+            F.first("adj", ignorenulls=True).alias("adj"),
+            combine.alias("inbox"),
+        )
+        .select("node", update.alias("value"), "adj", "prev", "inbox")
+        .observe(obs, *observe)
+        .select("node", "value", "adj")
+        .localCheckpoint(eager=True)
+    )
+    return nxt, obs.get
+
+
+def _pagerank(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    iterations: int,
+    rank_type: str,
+    start,
+    send: str,
+    step,
+) -> DataFrame:
+    """The loop both PageRanks share; returns (node, rank).
+
+    The initial state is ONE aggregation pass over the raw edge plan: the
+    (src, dst) multiset, then one row per node with adj = its out-edges
+    as array<struct<node, m, d>> (m the multiplicity, d the out-degree;
+    empty for a dangling node). Its checkpoint observes the node count
+    and the dangling count. ``start(n)`` is the initial rank, ``send``
+    the SQL for the mass a node's rank ``value`` sends along edge ``e``,
+    and ``step(dang, n)`` the next rank from ``inbox`` (the summed
+    inflow) and the previous round's dangling mass ``dang``.
+    """
+    grouped = edges.groupBy(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).agg(F.count(F.lit(1)).alias("m"))
+    # a NULL source sends nothing and counts as dangling, as the
+    # oracle's equi-joins treat it
+    out_edge = F.when(
+        F.col("src").isNotNull(), F.struct(F.col("dst").alias("node"), "m")
+    )
+    obs = Observation()
+    state = (
+        grouped.select(
+            F.inline(
+                F.array(
+                    F.struct(F.col("src").alias("node"), out_edge.alias("e")),
+                    F.struct(F.col("dst").alias("node"), F.lit(None).alias("e")),
+                )
+            )
+        )
+        .groupBy("node")
+        .agg(F.collect_list("e").alias("adj"), F.sum("e.m").alias("d"))
+        .select(
+            "node",
+            F.expr(
+                "transform(adj, e -> named_struct('node', e.node, 'm', e.m, 'd', d))"
+            ).alias("adj"),
+        )
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.size("adj") == 0).alias("dangling"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    seen = obs.get
+    n = seen["n"]
+    if n == 0:
+        return state.select("node", F.lit(None).cast(rank_type).alias("rank"))
+    r0 = start(n)
+    state = state.select("node", F.lit(r0).cast(rank_type).alias("value"), "adj")
+    dang = seen["dangling"] * r0
+    for _ in range(iterations):
+        state, seen = _superstep(
+            state,
+            F.expr(f"transform(adj, e -> named_struct('node', e.node, 'msg', {send}))"),
+            F.sum("msg"),
+            step(dang, n).cast(rank_type),
+            F.coalesce(
+                F.sum(F.when(F.size("adj") == 0, F.col("value"))), F.lit(0)
+            ).alias("dang"),
+        )
+        dang = seen["dang"]
+    return state.select("node", F.col("value").alias("rank"))
 
 
 def pagerank(
@@ -33,79 +143,22 @@ def pagerank(
     dst_col: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """PageRank over a directed edge list (duplicate edges act as
     weights). Returns (node, rank) with ranks summing to ~1.
 
-    Cost per iteration: one hash join of ranks⋈edges on the source key
-    plus one map-combined aggregate on the destination — the minimal
-    shuffle pair for rank flow. The normalized edge frame (src, dst,
-    out-degree share) is computed once and checkpointed; rank frames are
-    checkpointed every ``checkpoint_every`` iterations so plan depth
-    stays bounded by the checkpoint interval, not the iteration count.
+    One :func:`_superstep` per iteration: every node sends rank * m / d
+    along each out-edge, the inflow sums in the one groupBy, and the rank
+    sitting on dangling nodes (no out-edges), observed by the previous
+    round, is redistributed uniformly.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    # ONE aggregation pass over the raw edge plan; nodes and out-degrees
-    # derive from the (small) grouped multiset, not from ``e`` — the old
-    # init walked the full upstream edge pipeline ~4x (nodes union x2,
-    # out_deg, the multiplicity groupBy) before anything was
-    # checkpointed (r12 opt session 3, guide §1.2/§5).
-    grouped = (
-        e.groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("_m"))
-        .localCheckpoint(eager=False)
+    return _pagerank(
+        edges, src_col, dst_col, iterations, "double",
+        start=lambda n: 1.0 / n,
+        send="value * (e.m / e.d)",
+        step=lambda dang, n: F.lit((1.0 - damping) / n)
+        + F.lit(damping) * (F.coalesce(F.col("inbox"), F.lit(0.0)) + F.lit(dang) / n),
     )
-    nodes = (
-        grouped.select(F.col("src").alias("node"))
-        .unionByName(grouped.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        return nodes.withColumn("rank", F.lit(None).cast("double"))
-    # per-(src, dst) edge weight = multiplicity / out-degree(src);
-    # out-degree = raw edge count per src = sum of multiplicities
-    out_deg = grouped.groupBy("src").agg(F.sum("_m").alias("_deg"))
-    norm_edges = (
-        grouped.join(out_deg, "src")
-        .select("src", "dst", (F.col("_m") / F.col("_deg")).alias("share"))
-        .localCheckpoint(eager=False)  # loop invariant: built exactly once
-    )
-    ranks = nodes.select(
-        F.col("node"), F.lit(1.0 / n_nodes).alias("rank")
-    ).localCheckpoint(eager=False)
-
-    base = (1.0 - damping) / n_nodes
-    for i in range(iterations):
-        flowed = (
-            ranks.join(norm_edges, ranks.node == norm_edges.src)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("share")).alias("_in"))
-        )
-        # dangling mass: rank sitting on nodes with no out-edges is
-        # redistributed uniformly — one scalar aggregate, broadcast
-        dangling = (
-            ranks.join(norm_edges.select("src").distinct(),
-                       ranks.node == F.col("src"), "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_d"))
-        )
-        ranks = (
-            nodes.join(flowed, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("_in"), F.lit(0.0)) + F.col("_d") / n_nodes)
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
 
 
 #: Fixed-point scale for :func:`pagerank_fixed` — rank mass carried as
@@ -122,15 +175,12 @@ def pagerank_fixed(
     src_col: str = "src",
     dst_col: str = "dst",
     iterations: int = 10,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """PageRank with damping 0.85 in EXACT integer fixed-point — the
     engine-reproducible variant of :func:`pagerank`.
 
-    Same plan shape per iteration (one join + one map-combined
-    aggregate, checkpointed edge invariant, broadcast dangling scalar),
-    but every quantity is a BIGINT multiple of 1e-15 and every division
-    is integral with floor semantics:
+    Same superstep loop, but every quantity is a BIGINT multiple of
+    1e-15 and every division is integral with floor semantics:
 
         contrib(src->dst) = (r div d) * m + ((r mod d) * m) div d
                           = floor(r * m / d)          (exact identity)
@@ -148,85 +198,13 @@ def pagerank_fixed(
 
     Returns (node, rank_fp BIGINT); rank = rank_fp / PAGERANK_SCALE.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    # Same one-pass init as :func:`pagerank`: the grouped multiset is
-    # the only walk of the raw edge plan; nodes/out-degrees derive from
-    # it (r12 opt session 3). out-degree = SUM of integer
-    # multiplicities = the old per-src row count, exactly.
-    grouped = (
-        e.groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("_m"))
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        grouped.select(F.col("src").alias("node"))
-        .unionByName(grouped.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        return nodes.withColumn("rank_fp", F.lit(None).cast("long"))
-    out_deg = grouped.groupBy("src").agg(F.sum("_m").alias("_deg"))
-    norm_edges = (
-        grouped.join(out_deg, "src")
-        .localCheckpoint(eager=False)  # loop invariant: built exactly once
-    )
-    # DANGLING membership (no out-edges) is a loop invariant: compute it
-    # ONCE as a boolean column carried on the node/rank frames, instead
-    # of re-deriving the set inside every iteration (the old loop ran a
-    # distinct + anti-join + aggregate per iteration for a set that
-    # never changes — r12 opt, guide §2.4 "remove shuffles outright").
-    # The per-iteration dangling mass is now a join-free map-combined
-    # conditional aggregate over the ranks frame.
-    nodes = nodes.join(
-        norm_edges.select("src").distinct(),
-        nodes.node == F.col("src"),
-        "left",
-    ).select(
-        "node", F.col("src").isNull().alias("_dang")
-    ).localCheckpoint(eager=False)
-
-    ranks = nodes.select(
-        F.col("node"),
-        F.lit(PAGERANK_SCALE // n_nodes).cast("long").alias("rank_fp"),
-        F.col("_dang"),
-    ).localCheckpoint(eager=False)
-
-    base_fp = (15 * PAGERANK_SCALE) // (100 * n_nodes)
-    for i in range(iterations):
-        flowed = (
-            ranks.join(norm_edges, ranks.node == norm_edges.src)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.sum(
-                    F.expr("rank_fp DIV _deg") * F.col("_m")
-                    + F.expr("(rank_fp % _deg) * _m DIV _deg")
-                ).alias("_in")
-            )
-        )
-        dangling = ranks.agg(
-            F.coalesce(
-                F.sum(F.when(F.col("_dang"), F.col("rank_fp"))), F.lit(0)
-            ).cast("long").alias("_d")
-        )
-        ranks = (
-            nodes.join(flowed, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(base_fp)
-                    + F.expr(
-                        f"17 * (coalesce(_in, 0) + _d DIV {n_nodes}) DIV 20"
-                    )
-                ).cast("long").alias("rank_fp"),
-                "_dang",
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks.select("node", "rank_fp")
+    return _pagerank(
+        edges, src_col, dst_col, iterations, "long",
+        start=lambda n: PAGERANK_SCALE // n,
+        send="(value DIV e.d) * e.m + ((value % e.d) * e.m) DIV e.d",
+        step=lambda dang, n: F.lit((15 * PAGERANK_SCALE) // (100 * n))
+        + F.expr(f"17 * (coalesce(inbox, 0) + {dang}L DIV {n}) DIV 20"),
+    ).withColumnRenamed("rank", "rank_fp")
 
 
 def session_follow_edges(

@@ -2351,6 +2351,23 @@ def r1_top3_per_market(spark, sf_dir):
     )
 
 
+def _with_sentinel(spark, frame):
+    """``frame`` plus one sentinel row (every column NULL, ``_s`` true),
+    so a ROLLUP/CUBE over it has a grand-total group even on empty input:
+    SQL defines that row (counts 0, sums NULL), while Spark's
+    expand+aggregate emits no group at all for 0 input rows. Aggregates
+    read their inputs through :func:`_real`; keep the groups with real
+    rows plus the grand total (``grouping_id()`` with every bit set)."""
+    return frame.withColumn("_s", F.lit(False)).unionByName(
+        spark.sql("VALUES (true) AS sentinel(_s)"), allowMissingColumns=True
+    )
+
+
+def _real(c):
+    """``c`` on real rows, NULL on :func:`_with_sentinel`'s row."""
+    return F.when(~F.col("_s"), c)
+
+
 @query(
     "r2_rollup_market_year",
     f"""WITH {PRICE_CTE}, {MASTER_CTE}
@@ -2364,15 +2381,21 @@ ORDER BY market NULLS FIRST, yr NULLS FIRST""",
 def r2_rollup_market_year(spark, sf_dir):
     """ROLLUP(market, year): per-(market, year), per-market, and grand
     totals in one pass — Spark plans it as a single expand+aggregate, no
-    per-level rescan."""
+    per-level rescan. The grand total is emitted on empty input too."""
     p = price_frame(spark, sf_dir)
     m = master_frame(spark, sf_dir)
     j = p.join(F.broadcast(m.select("symbol", "market")), "symbol").withColumn(
         "yr", F.year("trade_date").cast("long")
     )
     return (
-        j.rollup("market", "yr")
-        .agg(F.sum("volume").alias("total_volume"), F.count("*").alias("n_rows"))
+        _with_sentinel(spark, j).rollup("market", "yr")
+        .agg(
+            F.sum(_real(F.col("volume"))).alias("total_volume"),
+            F.count(_real(F.lit(1))).alias("n_rows"),
+            F.grouping_id().alias("_gid"),
+        )
+        .filter((F.col("n_rows") > 0) | (F.col("_gid") == 3))
+        .drop("_gid")
     )
 
 
@@ -2387,13 +2410,16 @@ ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
 def r3_cube_flag_status(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     return (
-        li.cube("l_returnflag", "l_linestatus")
+        _with_sentinel(spark, li).cube("l_returnflag", "l_linestatus")
         .agg(
-            F.count("*").alias("n_items"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
+            F.count(_real(F.lit(1))).alias("n_items"),
+            F.sum(_real(F.col("l_quantity").cast("decimal(18,2)")))
             .cast("double")
             .alias("total_qty"),
+            F.grouping_id().alias("_gid"),
         )
+        .filter((F.col("n_items") > 0) | (F.col("_gid") == 3))
+        .drop("_gid")
     )
 
 
@@ -2888,7 +2914,8 @@ def dd7_dup_clusters(spark, sf_dir):
     propagation (dedup.connected_components); the oracle computes the same
     components with a recursive-CTE transitive closure — affordable at
     sf0.01, quadratic-in-cluster at scale, which is exactly why the
-    engine side iterates a per-round shuffle instead."""
+    engine side iterates instead: one groupBy over the node rows, which
+    carry their adjacency, per round of cluster diameter."""
     sup = load_table(spark, sf_dir, "supplier")
     pairs = dedup.blocked_name_pairs(
         sup, block_col="s_nationkey", id_col="s_suppkey", name_col="s_name", max_dist=2
@@ -2933,7 +2960,7 @@ def dd10_dedup_keep_best(spark, sf_dir):
     convention. This is the real pipeline semantics: when near-dups
     collapse, keep the longest / highest-quality / most-recent document,
     not an arbitrary one. One window over the component partitioning on
-    top of the CC labels."""
+    top of the CC labels (the same min-label rounds as dd7)."""
     sup = load_table(spark, sf_dir, "supplier")
     pairs = dedup.blocked_name_pairs(
         sup, block_col="s_nationkey", id_col="s_suppkey", name_col="s_name", max_dist=2
@@ -8213,12 +8240,12 @@ def e24_event_pagerank(spark, sf_dir):
     """PageRank over the event-type follow graph (which event type
     accumulates attention mass under random-surfer dynamics) — the
     canonical distributed ITERATIVE algorithm done the scale-correct
-    way: one join + one map-combined aggregate per iteration, the
-    normalized edge list checkpointed once as the loop invariant, ranks
-    checkpointed every 3 iterations to bound plan depth, dangling mass
-    redistributed via a broadcast scalar. The type graph here is small;
-    the operator is node-count-agnostic (nothing driver-side but the
-    iteration counter).
+    way: each node row carries its out-edges, so an iteration is one
+    map-combined groupBy and one eager checkpoint (two jobs), and the
+    dangling mass the next iteration needs is observed by that
+    checkpoint. The type graph here is small; the operator is
+    node-count-agnostic (nothing driver-side but the iteration counter
+    and that scalar).
 
     Arithmetic is exact integer fixed-point (graph.pagerank_fixed), so
     the iterative fixed point IS oracle-checkable: a DuckDB recursive
@@ -11293,8 +11320,8 @@ def tx29_bpe_merges(spark, sf_dir):
     the full tokenizer-training LOOP (tx17 is one merge's counts): the
     corpus is scanned once into a word-frequency table; each iteration
     is a map-combined pair count over DISTINCT words + a one-row driver
-    argmax + an Arrow-batched merge application (PageRank loop
-    discipline: checkpoint every 3 iterations). No oracle (iterative
+    argmax + an Arrow-batched merge application (lineage checkpointed
+    every 3 iterations). No oracle (iterative
     argmax chain is not SQL-expressible); the merge sequence is pinned
     by pytest parity vs a sequential pure-python BPE
     (tests/test_round6.py). See operators.text.bpe_train."""

@@ -114,7 +114,7 @@ def within_rel_tol(spark_cols, srows, duck_cols, drows, rel_tol) -> bool:
     return True
 
 
-def run(spark, data_dir, only=(), *, adversarial=False, parity=True, rel_tol=0.0) -> Counter:
+def run(spark, data_dir, only=(), *, adversarial=False, rel_tol=0.0) -> Counter:
     """Run every queries() entry (or those in ``only``) on ``spark`` over
     the tables in ``data_dir``, compare each oracled one with its
     oracle_sql() on DuckDB over the same files, print one line per query
@@ -124,15 +124,15 @@ def run(spark, data_dir, only=(), *, adversarial=False, parity=True, rel_tol=0.0
     The gate runs with the defaults. With ``adversarial`` a two-sided
     0-row match is WARN rather than FAIL (the degenerate-empty guard is
     for query authoring; an adversary may empty a result) and a rows-only
-    query need only not crash. ``parity=False`` runs every query that
-    way, crash-only. ``rel_tol`` re-checks a values-differ result float
-    by float at that relative tolerance. Crashes and DuckDB errors FAIL.
+    query need only not crash. ``rel_tol`` re-checks a values-differ
+    result float by float at that relative tolerance. Crashes and DuckDB
+    errors FAIL.
     """
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{data_dir}/{t}.parquet'")
 
-    oras = oracle_sql() if parity else {}
+    oras = oracle_sql()
     tally = Counter()
     for name, fn in queries().items():
         if only and name not in only:

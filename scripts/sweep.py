@@ -9,7 +9,7 @@ clone keeps the source's rows, column names, column order and types.
 ``{src}`` in an expression is the table's own source file, for scalar
 subqueries. Tables an adversary does not name are copied unchanged.
 
-Every parity adversary runs every oracled query on Spark AND its oracle
+Every adversary runs every oracled query on Spark AND its oracle
 on DuckDB over the SAME clone, and crash-checks the rows-only queries.
 A two-sided 0-row match is WARN, not FAIL: the degenerate-empty policy
 guards query AUTHORING at sf0.01, and an adversary may legitimately
@@ -43,7 +43,6 @@ SCRATCH = os.path.join(REPO, ".scratch", "sweep")
 class Adversary:
     rewrites: dict[str, dict[str, str]]  # table -> {column: SQL expression}
     rows: str = ""  # clause closing each rewritten table's SELECT
-    parity: bool = True  # False: crash-check every query, compare none
     rel_tol: float = 0.0  # see extremes
 
 
@@ -101,11 +100,12 @@ ADVERSARIES: dict[str, Adversary] = {
     # literal, works at every bench scale and still crashes on the empty
     # partition a real pipeline feeds it on day one (r6 advisor,
     # o2_keyset_pagination). tests/test_empty_inputs.py covers the core
-    # OPERATORS; this sweeps the full registered query surface.
-    # Crash-only, not parity: on empty input r2_rollup_market_year and
-    # r3_cube_flag_status return 0 rows on Spark but the 1 grand-total
-    # row SQL's ROLLUP/CUBE defines on DuckDB (ROADMAP item 4).
-    "empty": Adversary({t: {} for t in TABLES}, rows="LIMIT 0", parity=False),
+    # OPERATORS; this sweeps the full registered query surface. Parity:
+    # almost every oracled query is two-sided empty (WARN), and the ones
+    # that are not must match DuckDB, e.g. the 1 grand-total row SQL's
+    # ROLLUP/CUBE defines on empty input (r2_rollup_market_year,
+    # r3_cube_flag_status).
+    "empty": Adversary({t: {} for t in TABLES}, rows="LIMIT 0"),
     # Deterministic NULLs (every 13th row by key, ~7.7%) in the
     # plausibly-nullable VALUE columns, never keys, never partition
     # columns. Spark windows ORDER BY NULLS FIRST, DuckDB NULLS LAST;
@@ -278,7 +278,7 @@ def sweep(spark, name: str, only=(), out: str | None = None):
     build(adversary, out)
     return run(
         spark, out, only,
-        adversarial=True, parity=adversary.parity, rel_tol=adversary.rel_tol,
+        adversarial=True, rel_tol=adversary.rel_tol,
     )
 
 

@@ -21,7 +21,8 @@ import sweep  # noqa: E402
 
 CASES = [
     # (adversary, representative queries — each a past finding or a cheap probe)
-    ("empty", ["dq7_orphan_rates", "k12_mmr_diverse"]),
+    ("empty", ["dq7_orphan_rates", "k12_mmr_diverse", "r2_rollup_market_year",
+               "r3_cube_flag_status"]),
     ("null", ["dq7_orphan_rates", "e25_cohort_ltv", "tx25_langid_confusion"]),
     ("unicode", ["tx5_vocabulary", "tx10_repetition_stats", "tx4_fingerprint"]),
     ("ties", ["iv7_gap_histogram", "e30_hourly_conversion"]),
