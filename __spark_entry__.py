@@ -5,9 +5,11 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash -> CORRECTNESS_r{N}.json).
 
-The actual query surface lives in
-``market_data_pipeline_spark.plans.driver_queries`` — one entry per
-operator family from SURVEY §2 plus the Phase-6 LLM-pipeline extensions.
+The query surface is the registry in
+``market_data_pipeline_spark.plans.driver_queries`` (``QUERIES``,
+``ORACLES``), filled by the subject modules under ``plans/`` — one entry
+per operator family from SURVEY §2 plus the Phase-6 LLM-pipeline
+extensions.
 """
 
 from __future__ import annotations
@@ -22,9 +24,7 @@ from market_data_pipeline_spark.plans.driver_queries import ORACLES, QUERIES
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the per-market daily
     summary (broadcast fact⋈dim join + grouped exact aggregation)."""
-    from market_data_pipeline_spark.plans.driver_queries import a6_daily_market_summary
-
-    return a6_daily_market_summary(spark, "/root/testdata/sf0.001")
+    return QUERIES["a6_daily_market_summary"](spark, "/root/testdata/sf0.001")
 
 
 # Recording order (rolling, machine-derived — r8 verdict #1). The

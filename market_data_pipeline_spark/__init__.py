@@ -13,6 +13,12 @@ Layout
 - ``storage``     Parquet-backed mutable-table emulation (upsert/update/
                   delete/compaction on immutable files).
 - ``streaming``   Structured Streaming variants of the event operators.
+- ``plans``       The registered queries and pipelines. ``driver_queries``
+                  holds the registry (``QUERIES``, ``ORACLES``) and the
+                  shared derived frames; the subject modules ``market``,
+                  ``timeseries``, ``events``, ``corpus``, ``similarity``,
+                  ``relational``, ``ingest`` and ``tpch`` register their
+                  queries into it; ``pipelines`` holds the batch pipelines.
 
 Everything here is built on the public PySpark DataFrame API; no custom
 Catalyst rules are needed (SURVEY §4).

@@ -17,6 +17,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from market_data_pipeline_spark.operators.util import (
+    col,
+    ensure_parallelism,
+    pairs_within_groups,
+)
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep the min-id row per exact text value; report group size.
@@ -64,14 +70,12 @@ def shingled(
     """(id, extra..., shingles: array<string>) with the tokenization staged
     through a materialized column (two select stages — see
     :func:`shingles_from_tokens` for why)."""
-    from market_data_pipeline_spark.operators.util import ensure_parallelism
-
     df = ensure_parallelism(df, id_col)
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"[ \t\n\x0B\f\r]+")
-    staged = df.select(F.col(id_col), *[F.col(c) for c in extra_cols], toks.alias("_toks"))
+    toks = F.split(F.lower(F.trim(col(text_col))), r"[ \t\n\x0B\f\r]+")
+    keep = [col(c) for c in (id_col, *extra_cols)]
+    staged = df.select(*keep, toks.alias("_toks"))
     return staged.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
+        *keep,
         shingles_from_tokens(F.col("_toks"), n).alias("shingles"),
     )
 
@@ -105,8 +109,6 @@ def ngram_jaccard_pairs(
     ``util.bucket_overflow_stats``. Default None = exact (oracle mode).
     Returns (doc_a, doc_b, common, jaccard).
     """
-    from market_data_pipeline_spark.operators.util import pairs_within_groups
-
     group = [group_col] if group_col else []
     # Plan-shape decisions that matter at scale:
     # - bucket on the 8-byte shingle hash, not the shingle string (same
@@ -121,24 +123,24 @@ def ngram_jaccard_pairs(
     # explode_outer + isNotNull, not explode: see pairs_within_groups for
     # why (the inferred non-empty filter re-evaluates the HOF shingle
     # expression row-by-row, interpreted)
+    keep = [col(c) for c in (id_col, *group)]
     sh = (
         shingled(df, id_col, text_col, n, extra_cols=tuple(group))
         .select(
-            F.col(id_col),
-            *group,
+            *keep,
             F.size("shingles").alias("sz"),
             F.explode_outer("shingles").alias("_s"),
         )
         .filter(F.col("_s").isNotNull())
-        .select(F.col(id_col), *group, F.col("sz"), F.xxhash64(F.col("_s")).alias("shingle"))
+        .select(*keep, F.col("sz"), F.xxhash64(F.col("_s")).alias("shingle"))
     )
     pairs = pairs_within_groups(
         sh, [*group, "shingle"], id_col, ["sz"], max_group_size=max_doc_freq
     )
     return (
         pairs.groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a")[id_col].alias("doc_a"),
+            F.col("b")[id_col].alias("doc_b"),
             F.col("a.sz").alias("sz_a"),
             F.col("b.sz").alias("sz_b"),
         )
@@ -179,8 +181,6 @@ def containment_pairs(
     Returns (doc_id, other_id, common, containment) — containment of
     doc_id's shingles inside other_id — in no defined order.
     """
-    from market_data_pipeline_spark.operators.util import pairs_within_groups
-
     group = [group_col] if group_col else []
     sh = (
         shingled(df, id_col, text_col, n, extra_cols=tuple(group))
@@ -197,8 +197,8 @@ def containment_pairs(
         sh, [*group, "shingle"], id_col, ["sz"], max_group_size=max_doc_freq
     )
     und = pairs.groupBy(
-        F.col(f"a.{id_col}").alias("_ida"),
-        F.col(f"b.{id_col}").alias("_idb"),
+        F.col("a")[id_col].alias("_ida"),
+        F.col("b")[id_col].alias("_idb"),
         F.col("a.sz").alias("_sza"),
         F.col("b.sz").alias("_szb"),
     ).agg(F.count("*").alias("common"))
@@ -302,8 +302,6 @@ def minhash_signatures(
     import numpy as np
     import pandas as pd
     from pyspark.sql.pandas.functions import pandas_udf
-
-    from market_data_pipeline_spark.operators.util import ensure_parallelism
 
     params = _minhash_params(num_hashes, seed)
     a_vec = np.asarray([a for a, _ in params], dtype=np.int64)[:, None]
@@ -449,8 +447,6 @@ def minhash_lsh_pairs(
     Returns (doc_a, doc_b, n_bands_matched) — verify candidates with
     :func:`ngram_jaccard_pairs` or estimate similarity from the signature.
     """
-    from market_data_pipeline_spark.operators.util import pairs_within_groups
-
     rows_per_band = num_hashes // bands
     # NULL sigs (empty docs) must not band: a hash of a null slice would
     # put every empty doc in one global bucket
@@ -493,8 +489,8 @@ def minhash_lsh_pairs(
         buckets, ["band_id", "band_hash"], id_col, max_group_size=max_bucket_size
     )
     return pairs.groupBy(
-        F.col(f"a.{id_col}").alias("doc_a"),
-        F.col(f"b.{id_col}").alias("doc_b"),
+        F.col("a")[id_col].alias("doc_a"),
+        F.col("b")[id_col].alias("doc_b"),
     ).agg(F.count("*").alias("n_bands_matched"))
 
 
@@ -536,8 +532,6 @@ def simhash(
     import numpy as np
     import pandas as pd
     from pyspark.sql.pandas.functions import pandas_udf
-
-    from market_data_pipeline_spark.operators.util import ensure_parallelism
 
     shifts = np.arange(64, dtype=np.uint64)[None, :]
 
@@ -601,8 +595,6 @@ def simhash_near_pairs(
 
     Returns (doc_a, doc_b, hamming).
     """
-    from market_data_pipeline_spark.operators.util import pairs_within_groups
-
     n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1
     # NULL fingerprints (no-shingle docs) must not band — see simhash.
@@ -634,8 +626,8 @@ def simhash_near_pairs(
     )
     return (
         pairs.select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col("a")[id_col].alias("doc_a"),
+            F.col("b")[id_col].alias("doc_b"),
             F.bit_count(
                 F.col("a.fingerprint").bitwiseXOR(F.col("b.fingerprint"))
             ).alias("hamming"),
@@ -740,8 +732,6 @@ def blocked_name_pairs(
     ``max_block_size`` window filter.
     Returns (block_col, id_a, id_b, edit_dist) with id_a < id_b.
     """
-    from market_data_pipeline_spark.operators.util import pairs_within_groups
-
     if regime not in ("auto", "deletion", "quadratic"):
         raise ValueError(f"unknown regime {regime!r}")
 
@@ -759,9 +749,9 @@ def blocked_name_pairs(
         return (
             pairs.select(
                 F.col(block_col),
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                F.levenshtein(F.col(f"a.{name_col}"), F.col(f"b.{name_col}"))
+                F.col("a")[id_col].alias("id_a"),
+                F.col("b")[id_col].alias("id_b"),
+                F.levenshtein(F.col("a")[name_col], F.col("b")[name_col])
                 .cast("long")
                 .alias("edit_dist"),
             )
@@ -848,10 +838,10 @@ def blocked_name_pairs(
     long_pairs = (
         cand.select(
             F.col(block_col),
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{name_col}").alias("_na"),
-            F.col(f"b.{name_col}").alias("_nb"),
+            F.col("a")[id_col].alias("id_a"),
+            F.col("b")[id_col].alias("id_b"),
+            F.col("a")[name_col].alias("_na"),
+            F.col("b")[name_col].alias("_nb"),
         )
         # short-short pairs already came from the quadratic sub-path;
         # a long-enough shared core can still surface them here, so

@@ -24,6 +24,9 @@ import random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from market_data_pipeline_spark.operators.util import col
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -691,31 +694,33 @@ def kmeans_centroids(
     The sample (and thus the index layout) is deterministic per seed.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     src = embeddings
     if sample_fraction is not None and sample_fraction < 1.0:
         src = embeddings.sample(fraction=sample_fraction, seed=seed)
     feats = src.select(
-        array_to_vector(F.transform(F.col(vec_col), lambda x: x.cast("double"))).alias(
+        array_to_vector(F.transform(col(vec_col), lambda x: x.cast("double"))).alias(
             "features"
         )
     )
     spark = embeddings.sparkSession
+    schema = T.StructType(
+        [
+            T.StructField(id_col, T.LongType()),
+            T.StructField(vec_col, T.ArrayType(T.DoubleType())),
+        ]
+    )
     # Empty-input guard (registry-wide empty sweep, r7): MLlib KMeans
     # aborts with "Nothing has been added to this summarizer" on a 0-row
     # fit. An empty centroid frame is the total answer — ivf_assign
     # already maps empty centroids to an empty assignment.
     if not feats.take(1):
-        return spark.createDataFrame(
-            [], f"{id_col} long, {vec_col} array<double>"
-        )
+        return spark.createDataFrame([], schema)
     model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(feats)
     centers = model.clusterCenters()
-    spark = embeddings.sparkSession
     return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        f"{id_col} long, {vec_col} array<double>",
+        [(i, [float(x) for x in c]) for i, c in enumerate(centers)], schema
     )
 
 
@@ -1371,10 +1376,13 @@ def pq_encode(
 
     # derive the id type from the input schema (like knn_graph) instead of
     # pinning long: a string/int id would otherwise silently miscast
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        encode, f"{id_col} {id_type}, codes array<int>"
+    schema = T.StructType(
+        [
+            T.StructField(id_col, embeddings.schema[id_col].dataType),
+            T.StructField("codes", T.ArrayType(T.IntegerType())),
+        ]
     )
+    return embeddings.select(col(id_col), col(vec_col)).mapInPandas(encode, schema)
 
 
 def knn_pq(
@@ -1689,16 +1697,16 @@ def mmr_select(
         raise ValueError("lam must be a multiple of 0.1 in (0, 1) for exact scoring")
     lam_n = int(round(lam * 10))
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    rel_col = F.round(cosine(F.col(vec_col), q), round_digits)
+    rel_col = F.round(cosine(col(vec_col), q), round_digits)
     cand = (
         embeddings.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("_v"),
+            col(id_col),
+            col(vec_col).cast("array<double>").alias("_v"),
             rel_col.alias("_rel"),
             # sequential sum of squares, same fold order as the oracle's
             # list_dot_product(ev, ev)
             F.aggregate(
-                F.col(vec_col).cast("array<double>"),
+                col(vec_col).cast("array<double>"),
                 F.lit(0.0),
                 lambda a, x: a + x * x,
             ).alias("_n2"),
@@ -1712,15 +1720,20 @@ def mmr_select(
         # the oracle (isfinite(list_dot_product)) so pool membership
         # stays engine-identical. inf < inf and NaN < x are both false.
         .filter(F.col("_n2") < F.lit(float("inf")))
-        .orderBy(F.desc("_rel"), id_col)
+        .orderBy(F.desc("_rel"), col(id_col))
         .limit(pool)
         .collect()  # bounded: exactly `pool` rows with their vectors
     )
+    schema = T.StructType(
+        [
+            T.StructField("rank", T.LongType()),
+            T.StructField(id_col, T.LongType()),
+            T.StructField("relevance", T.DoubleType()),
+            T.StructField("mmr_score", T.DoubleType()),
+        ]
+    )
     if not cand:
-        spark = embeddings.sparkSession
-        return spark.createDataFrame(
-            [], f"rank long, {id_col} long, relevance double, mmr_score double"
-        )
+        return embeddings.sparkSession.createDataFrame([], schema)
     scale = 10**round_digits
     ids = [r[id_col] for r in cand]
     rel_fp = [int(round(r["_rel"] * scale)) for r in cand]
@@ -1787,127 +1800,7 @@ def mmr_select(
                 best_score / (10 * scale),
             )
         )
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
-        out_rows, f"rank long, {id_col} long, relevance double, mmr_score double"
-    )
-
-
-def build_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """PERSIST an IVF index: corpus vectors written to parquet
-    hive-partitioned by their nearest centroid (one directory per
-    inverted list). Build once, probe many — the serving shape
-    :func:`knn_ivf` computes transiently.
-
-    At 100 TB this is the difference between an index and a scan: a
-    probe filters on ``centroid_id`` and Spark's partition pruning
-    reduces the FILE LISTING to the probed directories — the other
-    (n_centroids - n_probe)/n_centroids of the corpus is never opened,
-    not even its footers. Each list directory is internally one or few
-    files (repartitioned by centroid before the write, the
-    storage-layout discipline ParquetTable uses).
-    """
-    assigned = ivf_assign(embeddings, centroids, id_col, vec_col, keep_vec=True)
-    (
-        assigned.select(id_col, vec_col, "centroid_id")
-        .repartition(F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(path)
-    )
-
-
-def query_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    centroids: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_digits: int | None = 6,
-) -> DataFrame:
-    """Probe a persisted IVF index (:func:`build_ivf_index`): rank each
-    query's ``n_probe`` nearest centroids, read ONLY those inverted-list
-    partitions (the ``centroid_id`` IN-filter prunes at the file-listing
-    level), and rank exactly within the probed lists.
-
-    The probe set is collected driver-side — bounded by
-    |queries| x n_probe centroid IDS (integers, never vectors) — so the
-    partition filter is a literal IN-list the scan can prune on;
-    per-query assignment then re-filters the union of probed lists.
-    Returns (query_id, vec_id, cosine, rank) like :func:`knn_ivf`.
-    """
-    c = centroids.select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("_cvec")
-    )
-    qsim = cosine(F.col("_qvec"), F.col("_cvec"))
-    if round_digits is not None:
-        qsim = F.round(qsim, round_digits)
-    qw = Window.partitionBy(query_id_col).orderBy(
-        F.desc("_qcsim"), F.col("centroid_id")
-    )
-    probes = (
-        queries.select(F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec"))
-        .crossJoin(F.broadcast(c))
-        .select(
-            F.col(query_id_col),
-            F.col("_qvec"),
-            F.col("centroid_id"),
-            qsim.alias("_qcsim"),
-        )
-        .withColumn("_rn", F.row_number().over(qw))
-        .filter(F.col("_rn") <= n_probe)
-        .select(query_id_col, "_qvec", "centroid_id")
-    )
-    probed_ids = sorted(
-        {r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()}
-    )  # bounded: <= |queries| x n_probe integers
-    lists = spark.read.parquet(path).filter(F.col("centroid_id").isin(probed_ids))
-    sim = cosine(F.col(vec_col), F.col("_qvec"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    scored = (
-        lists.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(F.col(query_id_col), F.col(id_col), sim.alias("cosine"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def append_to_ivf_index(
-    new_vectors: DataFrame,
-    path: str,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incrementally extend a persisted IVF index
-    (:func:`build_ivf_index`): assign the new vectors against the SAME
-    centroids and append into the existing inverted-list partitions —
-    the continuous-ingest path (a full rebuild is only needed when the
-    centroids themselves are re-learned, i.e. on distribution drift, not
-    on every batch). Appends touch only the lists the new vectors land
-    in; existing files are never rewritten."""
-    assigned = ivf_assign(new_vectors, centroids, id_col, vec_col, keep_vec=True)
-    (
-        assigned.select(id_col, vec_col, "centroid_id")
-        .repartition(F.col("centroid_id"))
-        .write.mode("append")
-        .partitionBy("centroid_id")
-        .parquet(path)
-    )
+    return embeddings.sparkSession.createDataFrame(out_rows, schema)
 
 
 def pca_explained_variance(

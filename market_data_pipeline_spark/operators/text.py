@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Per-language stopword marker lists for the n-gram/stopword heuristic.
 STOPWORDS = {
@@ -411,7 +412,7 @@ def repetition_stats(
 
     import pandas as pd
 
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema[id_col].dataType
     ws = _re.compile(r"[ \t\n\x0B\f\r]+", _re.ASCII)
 
     def stats(pdf_iter):
@@ -438,8 +439,14 @@ def repetition_stats(
 
     return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
         stats,
-        f"{id_col} {id_type}, n_tokens long, n_2grams long, "
-        "dup_2gram_frac double, top_2gram_frac double, top_token_frac double",
+        T.StructType(
+            [T.StructField(id_col, id_type)]
+            + [T.StructField(c, T.LongType()) for c in ("n_tokens", "n_2grams")]
+            + [
+                T.StructField(c, T.DoubleType())
+                for c in ("dup_2gram_frac", "top_2gram_frac", "top_token_frac")
+            ]
+        ),
     )
 
 
@@ -943,9 +950,16 @@ def negative_sampling(
     n = ranks.count()
     if n < 2:
         # empty frame mirrors the input's id type (string/int ids included)
-        id_type = df.schema[key_col].dataType.simpleString()
+        id_type = df.schema[key_col].dataType
         return df.sparkSession.createDataFrame(
-            [], f"{key_col} {id_type}, neg_idx long, negative_id {id_type}"
+            [],
+            T.StructType(
+                [
+                    T.StructField(key_col, id_type),
+                    T.StructField("neg_idx", T.LongType()),
+                    T.StructField("negative_id", id_type),
+                ]
+            ),
         )
     draws = ranks.select(
         F.col(key_col), F.col("_rank").alias("_self"),

@@ -2,8 +2,15 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def col(name: str) -> Column:
+    """The column NAMED ``name``, backtick-quoted so that a dot, a space
+    or a backtick in it is part of the name (``F.col`` would parse a dot
+    as a struct path). For caller-supplied column names."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def pairs_within_groups(
@@ -43,14 +50,14 @@ def pairs_within_groups(
     """
     payload_cols = payload_cols or []
     if max_group_size is not None:
-        w = Window.partitionBy(*[F.col(k) for k in group_keys])
+        w = Window.partitionBy(*[col(k) for k in group_keys])
         df = (
             df.withColumn("_gsz", F.count(F.lit(1)).over(w))
             .filter(F.col("_gsz") <= max_group_size)
             .drop("_gsz")
         )
-    member = F.struct(F.col(id_col), *[F.col(c) for c in payload_cols])
-    grouped = df.groupBy(*[F.col(k) for k in group_keys]).agg(
+    member = F.struct(col(id_col), *[col(c) for c in payload_cols])
+    grouped = df.groupBy(*[col(k) for k in group_keys]).agg(
         # array_sort makes pair order deterministic regardless of
         # collect_list's arrival order (struct sort = lexicographic by
         # field, id first)
@@ -72,9 +79,9 @@ def pairs_within_groups(
     # explode_outer infers nothing; the null rows (empty groups) are
     # dropped by a cheap filter on the GENERATED column instead.
     return (
-        grouped.select(*[F.col(k) for k in group_keys], F.explode_outer(pairs).alias("_p"))
+        grouped.select(*[col(k) for k in group_keys], F.explode_outer(pairs).alias("_p"))
         .filter(F.col("_p").isNotNull())
-        .select(*group_keys, F.col("_p.a").alias("a"), F.col("_p.b").alias("b"))
+        .select(*[col(k) for k in group_keys], F.col("_p.a").alias("a"), F.col("_p.b").alias("b"))
     )
 
 
@@ -109,4 +116,4 @@ def ensure_parallelism(df: DataFrame, id_col: str | None = None) -> DataFrame:
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= max(2, target // 2):
         return df
-    return df.repartition(target, id_col) if id_col else df.repartition(target)
+    return df.repartition(target, col(id_col)) if id_col else df.repartition(target)

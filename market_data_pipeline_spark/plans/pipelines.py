@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from market_data_pipeline_spark.functions.normalize import (
@@ -26,6 +26,7 @@ from market_data_pipeline_spark.functions.normalize import (
     normalize_new_listings,
     to_canonical_master,
 )
+from market_data_pipeline_spark.operators import dedup, text as tx
 from market_data_pipeline_spark.operators.setops import union_relaxed
 from market_data_pipeline_spark.operators.upsert import apply_delistings
 from market_data_pipeline_spark.operators.validate import (
@@ -34,6 +35,7 @@ from market_data_pipeline_spark.operators.validate import (
     validate,
     validate_delisted,
 )
+from market_data_pipeline_spark.schemas import STOCK_MASTER
 from market_data_pipeline_spark.sources.krx import backup_parquet
 from market_data_pipeline_spark.storage.table import ParquetTable
 
@@ -172,8 +174,6 @@ def sync_delisted_stocks(
 
 
 def _empty_master(master: ParquetTable, like: DataFrame) -> DataFrame:
-    from market_data_pipeline_spark.schemas import STOCK_MASTER
-
     return like.sparkSession.createDataFrame([], STOCK_MASTER)
 
 
@@ -275,10 +275,6 @@ def prepare_corpus(
     sentence ratio (boilerplate floor). All three are map-only column
     expressions folded into the same quality scan.
     """
-    from pyspark.sql import functions as F
-
-    from market_data_pipeline_spark.operators import dedup, text as tx
-
     # ``audit_counts=False`` skips the five per-stage .count() actions —
     # the CLI wants the audit trail, the pipeline4 gate query does not.
     # Measured effect on a warm local[32] session: ~neutral (the final
@@ -329,7 +325,6 @@ def prepare_corpus(
     pairs = dedup.minhash_lsh_pairs(q2, bands=jaccard_bands, max_bucket_size=200)
     comp = dedup.connected_components(pairs)
     clustered = q2.join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-    from pyspark.sql import Window
 
     # Survivor pick partitions by a key that gives every NON-clustered doc
     # (component NULL — typically the vast majority of the corpus) its own

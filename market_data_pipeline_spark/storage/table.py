@@ -31,6 +31,15 @@ from pyspark.sql import functions as F
 from market_data_pipeline_spark.operators.upsert import dedup_latest, insert_if_absent
 
 
+def _link(src: str, dst: str) -> None:
+    """Hard-link ``src`` to ``dst`` (a metadata-only copy), or copy it
+    where the FS has no hard links or crosses devices."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
 class ParquetTable:
     """A keyed, optionally version-deduped, optionally partitioned parquet
     table."""
@@ -104,21 +113,28 @@ class ParquetTable:
         return df
 
     # -- mutations ------------------------------------------------------
-    def overwrite(self, df: DataFrame) -> None:
-        """Stage-and-swap: ``df``'s lineage may read from this table's own
-        path (read-modify-overwrite is the standard mutation idiom here),
-        and Spark cannot overwrite a directory it is still scanning. Local
-        FS rename is atomic; on an object store this would be a staged
-        prefix + pointer swap (or a table format like Delta/Iceberg)."""
-        tmp = self.path.rstrip("/") + ".stage.tmp"
+    def _swap(self, target: str, write) -> None:
+        """Stage-and-swap ``target``: ``write(tmp)`` fills a sibling staging
+        directory, which then replaces ``target``. The write may read
+        ``target`` itself (read-modify-overwrite is the standard mutation
+        idiom here), and Spark cannot overwrite a directory it is still
+        scanning. Local FS rename is atomic; on an object store this would
+        be a staged prefix + pointer swap (or a table format like
+        Delta/Iceberg)."""
+        tmp = target.rstrip("/") + ".stage.tmp"
         shutil.rmtree(tmp, ignore_errors=True)
-        self._write(df, "overwrite", path=tmp)
-        shutil.rmtree(self.path, ignore_errors=True)
-        os.rename(tmp, self.path)
+        write(tmp)
+        shutil.rmtree(target, ignore_errors=True)
+        os.rename(tmp, target)
         # drop Spark's cached file listing for this path — later reads in
         # the same session would otherwise reference the replaced part
         # files (FAILED_READ_FILE.FILE_NOT_EXIST)
         self.spark.catalog.refreshByPath(self.path)
+
+    def overwrite(self, df: DataFrame) -> None:
+        """Replace the table's contents with ``df`` (stage-and-swap, so
+        ``df`` may read from this table)."""
+        self._swap(self.path, lambda tmp: self._write(df, "overwrite", path=tmp))
 
     def append(self, df: DataFrame) -> None:
         self._write(df, "append")
@@ -216,17 +232,12 @@ class ParquetTable:
         """Stage-and-swap ONE hive partition directory through
         ``transform(df) -> df`` (df excludes the partition column)."""
         pdir = os.path.join(self.path, f"{self.partition_col}={value}")
-        out = transform(self.spark.read.parquet(pdir))
-        tmp = pdir + ".stage.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        out.sortWithinPartitions(*self.sort_cols).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(pdir)
-        os.rename(tmp, pdir)
-        self.spark.catalog.refreshByPath(self.path)
+        out = transform(self.spark.read.parquet(pdir)).sortWithinPartitions(
+            *self.sort_cols
+        )
+        self._swap(pdir, lambda tmp: out.write.mode("overwrite").parquet(tmp))
 
-    def compact(
-        self, partitions: list[str] | None = None, max_concurrency: int = 1
-    ) -> None:
+    def compact(self, partitions: list[str] | None = None) -> None:
         """OPTIMIZE TABLE ... FINAL — keep only latest versions
         (reference: src/clickhouse/client.py:237-251).
 
@@ -236,15 +247,6 @@ class ParquetTable:
         versions of a key never span partitions — and only the affected
         directories are rewritten, the 100 TB discipline the whole layout
         exists for. Unpartitioned (dim) tables rewrite whole.
-
-        ``max_concurrency`` overlaps the per-partition rewrite JOBS: the
-        r9 100x rehearsal (SCALE.md §A.2) measured a 115-partition full
-        compaction at ~0.44s of fixed job overhead per partition under
-        the sequential loop — at a 10k-partition production table that
-        loop IS the cost, not the bytes. Each partition's stage-and-swap
-        touches only its own directory and Spark schedules jobs from
-        concurrent driver threads natively, so rewrites are safely
-        parallel; exceptions propagate and abort remaining submissions.
         """
         if not self.version_col:
             return
@@ -258,14 +260,8 @@ class ParquetTable:
         def xform(df: DataFrame) -> DataFrame:
             return dedup_latest(df, self.key, self.version_col)
 
-        if max_concurrency <= 1 or len(values) <= 1:
-            for value in values:
-                self._rewrite_partition(value, xform)
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max_concurrency) as ex:
-            list(ex.map(lambda v: self._rewrite_partition(v, xform), values))
+        for value in values:
+            self._rewrite_partition(value, xform)
 
     def compact_files(
         self, target_bytes: int = 128 * 1024 * 1024, partitions: list[str] | None = None
@@ -346,13 +342,6 @@ class ParquetTable:
         if os.path.exists(dst):
             raise FileExistsError(f"snapshot {tag!r} already exists")
         os.makedirs(os.path.dirname(dst), exist_ok=True)
-
-        def _link(src: str, d: str) -> None:
-            try:
-                os.link(src, d)
-            except OSError:  # cross-device / FS without hard links
-                shutil.copy2(src, d)
-
         shutil.copytree(self.path, dst, copy_function=_link)
         return dst
 
@@ -382,19 +371,9 @@ class ParquetTable:
         dst = self._snapshot_dir(tag)
         if not os.path.isdir(dst):
             raise FileNotFoundError(f"no snapshot {tag!r} for {self.path}")
-        tmp = self.path.rstrip("/") + ".stage.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-
-        def _link(src: str, d: str) -> None:
-            try:
-                os.link(src, d)
-            except OSError:
-                shutil.copy2(src, d)
-
-        shutil.copytree(dst, tmp, copy_function=_link)
-        shutil.rmtree(self.path, ignore_errors=True)
-        os.rename(tmp, self.path)
-        self.spark.catalog.refreshByPath(self.path)
+        self._swap(
+            self.path, lambda tmp: shutil.copytree(dst, tmp, copy_function=_link)
+        )
 
     def drop_snapshot(self, tag: str) -> None:
         dst = self._snapshot_dir(tag)

@@ -1,5 +1,6 @@
 """Dump every registered query's optimized logical plan with run-specific
 ids masked, so the plans of two checkouts can be diffed line by line.
+Queries are dumped in name order, whatever order they registered in.
 
 Usage: python scripts/plan_dump.py SF_DIR [query ...] > plans.txt
        diff -u before.txt after.txt
@@ -38,11 +39,11 @@ def main() -> int:
     sf, only = sys.argv[1], set(sys.argv[2:])
     spark = get_spark("plan-dump", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    for name, fn in QUERIES.items():
+    for name in sorted(QUERIES):
         if only and name not in only:
             continue
         try:
-            plan = fn(spark, sf)._jdf.queryExecution().optimizedPlan().toString()
+            plan = QUERIES[name](spark, sf)._jdf.queryExecution().optimizedPlan().toString()
         except Exception as exc:
             plan = f"ERROR {str(exc).splitlines()[0]}"
         print(f"=== {name}\n{mask(plan)}", flush=True)

@@ -1,133 +1,12 @@
-"""Property-based test for the persisted IVF index round-trip
-(r5 verdict #5): build -> append -> query must equal an independent
-pure-Python replica of the IVF contract (assign to nearest centroid,
-probe n_probe lists, exact top-k within the probed lists) over
-hypothesis-generated vector sets — including empty appends, duplicate-id
-appends, and n_probe below/above the centroid count.
-
-Integer-valued components keep every dot product and squared norm
-exactly representable, so Spark's sequential JVM fold and the Python
-reference produce bit-identical cosines (sqrt/division are correctly
-rounded on identical inputs) — equality checks, no tolerances.
+"""Property-based tests against pure-Python references: directed
+shingle containment (``dedup.containment_pairs``) and SCD-2 intervals
+(``incremental.scd2_history``) over hypothesis-generated inputs.
 """
 
 from __future__ import annotations
 
-import math
-from decimal import ROUND_HALF_UP, Decimal
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-SET = settings(
-    max_examples=50,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-
-
-def _round6(x: float) -> float:
-    """Replicate Spark's ROUND(x, 6): BigDecimal.valueOf(double) (shortest
-    decimal repr, same as Python's repr) quantized HALF_UP."""
-    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
-
-
-def _cos(a, b) -> float:
-    dot = 0.0
-    for x, y in zip(a, b):
-        dot += float(x) * float(y)
-    na = 0.0
-    for x in a:
-        na += float(x) * float(x)
-    nb = 0.0
-    for y in b:
-        nb += float(y) * float(y)
-    return _round6(dot / (math.sqrt(na) * math.sqrt(nb)))
-
-
-def _ref_ivf(corpus, centroids, queries, k, n_probe):
-    """Pure-Python IVF: assign each corpus row to its nearest centroid
-    (max rounded cosine, lowest centroid id on ties), probe each query's
-    top-n_probe centroids (same ordering), exact top-k within the probed
-    lists (cosine desc, id asc), self-id excluded."""
-    def nearest(vec):
-        return min(
-            ((-_cos(vec, cv), cid) for cid, cv in centroids), key=lambda t: t
-        )[1]
-
-    assign = {i: nearest(v) for i, (_, v) in enumerate(corpus)}
-    out = []
-    for qid, qv in queries:
-        probe_order = sorted(
-            ((-_cos(qv, cv), cid) for cid, cv in centroids), key=lambda t: t
-        )
-        probed = {cid for _, cid in probe_order[:n_probe]}
-        cands = [
-            (vid, _cos(qv, vv))
-            for i, (vid, vv) in enumerate(corpus)
-            if assign[i] in probed and vid != qid
-        ]
-        cands.sort(key=lambda t: (-t[1], t[0]))
-        out.extend(
-            (qid, vid, c, r + 1) for r, (vid, c) in enumerate(cands[:k])
-        )
-    return sorted(out)
-
-
-@st.composite
-def ivf_case(draw):
-    dim = draw(st.integers(min_value=2, max_value=4))
-    nonzero_vec = st.lists(
-        st.integers(min_value=-3, max_value=3), min_size=dim, max_size=dim
-    ).filter(lambda v: any(x != 0 for x in v))
-    n_base = draw(st.integers(min_value=3, max_value=10))
-    base = [(i, draw(nonzero_vec)) for i in range(n_base)]
-    n_append = draw(st.integers(min_value=0, max_value=5))  # 0 = empty append
-    dup_ids = draw(st.booleans())
-    appended = []
-    for j in range(n_append):
-        vid = (j % n_base) if dup_ids else n_base + j
-        appended.append((vid, draw(nonzero_vec)))
-    n_centroids = draw(st.integers(min_value=1, max_value=3))
-    # centroids: distinct ids, drawn vectors (not necessarily corpus rows)
-    cents = [(c, draw(nonzero_vec)) for c in range(n_centroids)]
-    queries = [(1000 + q, draw(nonzero_vec)) for q in range(draw(st.integers(1, 2)))]
-    k = draw(st.integers(min_value=1, max_value=4))
-    n_probe = draw(st.integers(min_value=1, max_value=4))
-    return dim, base, appended, cents, queries, k, n_probe
-
-
-@SET
-@given(ivf_case())
-def test_ivf_build_append_query_matches_reference(spark, tmp_path_factory, case):
-    from market_data_pipeline_spark.operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-        query_ivf_index,
-    )
-
-    dim, base, appended, cents, queries, k, n_probe = case
-    path = str(tmp_path_factory.mktemp("ivf") / "index")
-    schema = "vec_id long, embedding array<double>"
-    to_df = lambda rows: spark.createDataFrame(  # noqa: E731
-        [(i, [float(x) for x in v]) for i, v in rows], schema
-    )
-    cdf = to_df(cents)
-
-    build_ivf_index(to_df(base), path, cdf)
-    append_to_ivf_index(to_df(appended), path, cdf)
-
-    got = sorted(
-        (r["query_id"], r["vec_id"], r["cosine"], r["rank"])
-        for r in query_ivf_index(
-            spark, path, to_df(queries), cdf, k=k, n_probe=n_probe
-        ).collect()
-    )
-    want = _ref_ivf(base + appended, cents, queries, k, n_probe)
-    # duplicate-id appends can tie exactly (same id, same cosine): the
-    # row_number order between IDENTICAL rows is arbitrary but the
-    # emitted tuples are interchangeable, so sorted-tuple equality holds
-    assert got == want
 
 
 # --- containment_pairs vs pure-python shingle reference ----------------------

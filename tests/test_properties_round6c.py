@@ -60,16 +60,14 @@ def _write_lineitem(spark, tmp_path, pts):
 def test_monthly_hhi_matches_python(spark, tmp_path, pts):
     """a27_monthly_hhi == the pure-Python cents/1e-12 fixed-point HHI
     over arbitrary (symbol, day, close) singleton-line frames."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        a27_monthly_hhi,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d0 = dt.date(2024, 1, 1)
     rows = [(s, d0 + dt.timedelta(days=off), c) for s, off, c in pts]
     _write_lineitem(spark, tmp_path, rows)
     got = {
         r["month"]: (r["n_symbols"], r["hhi"])
-        for r in a27_monthly_hhi(spark, str(tmp_path)).collect()
+        for r in QUERIES["a27_monthly_hhi"](spark, str(tmp_path)).collect()
     }
 
     # reference: amount = DECIMAL(18,2) day sum (one line -> cent-rounded
@@ -102,9 +100,7 @@ def test_monthly_hhi_matches_python(spark, tmp_path, pts):
 def test_doc_length_gini_matches_python(spark, tmp_path, docs):
     """tx35_doc_length_gini == the sorted-rank closed form computed in
     Python with identical (n_chars, doc_id) tie-breaking."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        tx35_doc_length_gini,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     rows = [(i, "t", "en", src, n) for i, (src, n) in enumerate(docs)]
     spark.createDataFrame(
@@ -113,7 +109,7 @@ def test_doc_length_gini_matches_python(spark, tmp_path, docs):
     ).write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
     got = {
         r["source"]: (r["n_docs"], r["total_chars"], r["length_gini"])
-        for r in tx35_doc_length_gini(spark, str(tmp_path)).collect()
+        for r in QUERIES["tx35_doc_length_gini"](spark, str(tmp_path)).collect()
     }
 
     expected = {}
@@ -146,15 +142,13 @@ def test_split_cosine_matches_python(spark, tmp_path, vecs):
     """k23_split_representativeness == the Python reference using the
     same 1e-6 fixed-point per-(parity, dim) means, when both parities
     are populated."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        k23_split_representativeness,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     rows = [(i, [float(x) for x in v], 7) for i, v in enumerate(vecs)]
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
-    out = k23_split_representativeness(spark, str(tmp_path)).collect()
+    out = QUERIES["k23_split_representativeness"](spark, str(tmp_path)).collect()
     assert len(out) == 1
     r = out[0]
 

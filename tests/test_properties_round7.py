@@ -91,9 +91,7 @@ def hurst_series(draw):
 @SET
 @given(hurst_series())
 def test_hurst_matches_python(spark, tmp_path, series):
-    from market_data_pipeline_spark.plans.driver_queries import (
-        ts45_hurst_exponent,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d0 = dt.date(2024, 1, 1)
     pts = [
@@ -104,7 +102,7 @@ def test_hurst_matches_python(spark, tmp_path, series):
     _write_lineitem(spark, tmp_path, pts)
     got = {
         r["symbol"]: (r["n_scales"], r["hurst"])
-        for r in ts45_hurst_exponent(spark, str(tmp_path)).collect()
+        for r in QUERIES["ts45_hurst_exponent"](spark, str(tmp_path)).collect()
     }
 
     want = {}
@@ -167,9 +165,7 @@ def vr_series(draw):
 @SET
 @given(vr_series())
 def test_variance_ratio_matches_python(spark, tmp_path, series):
-    from market_data_pipeline_spark.plans.driver_queries import (
-        ts49_variance_ratio,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d0 = dt.date(2024, 1, 1)
     pts = [
@@ -180,7 +176,7 @@ def test_variance_ratio_matches_python(spark, tmp_path, series):
     _write_lineitem(spark, tmp_path, pts)
     got = {
         r["symbol"]: (r["n_daily"], r["n_5d"], r["vr5"])
-        for r in ts49_variance_ratio(spark, str(tmp_path)).collect()
+        for r in QUERIES["ts49_variance_ratio"](spark, str(tmp_path)).collect()
     }
 
     want = {}
@@ -235,9 +231,7 @@ def _fold(key) -> int:
     )
 )
 def test_oof_target_encoding_matches_python(spark, tmp_path, rows):
-    from market_data_pipeline_spark.plans.driver_queries import (
-        f16_oof_target_encoding,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     orders = [
         (i + 1, 1, "O", cents / 100.0, dt.datetime(2024, 1, 1), prio)
@@ -251,7 +245,7 @@ def test_oof_target_encoding_matches_python(spark, tmp_path, rows):
 
     got = {
         (r["category"], r["fold"]): (r["n_in_fold"], r["oof_target_mean"])
-        for r in f16_oof_target_encoding(spark, str(tmp_path)).collect()
+        for r in QUERIES["f16_oof_target_encoding"](spark, str(tmp_path)).collect()
     }
 
     per = {}

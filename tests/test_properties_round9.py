@@ -158,46 +158,6 @@ def test_cap_hot_entities_drop_and_sample(spark):
         SK.cap_hot_entities(df, "user_id", 10, mode="bogus")
 
 
-def test_compact_concurrent_matches_sequential(spark, tmp_path):
-    """compact(max_concurrency>1) overlaps the per-partition rewrite
-    jobs (the r9 100x rehearsal measured the sequential loop's ~0.44s
-    fixed cost per partition dominating a 115-partition compaction) —
-    values must be identical to the sequential path."""
-    from pyspark.sql import functions as F
-
-    from market_data_pipeline_spark.storage.table import ParquetTable
-
-    def build(path):
-        t = ParquetTable(
-            spark,
-            str(path),
-            key=["k"],
-            version_col="ver",
-            partition_col="p",
-            partition_expr=(F.col("k") % 4).cast("string"),
-            sort_cols=["k"],
-        )
-        rows = [(k, 1, float(k)) for k in range(400)]
-        t.overwrite(spark.createDataFrame(rows, "k long, ver int, value double"))
-        t.append(
-            spark.createDataFrame(
-                [(k, 2, float(k) * 10) for k in range(0, 400, 3)],
-                "k long, ver int, value double",
-            )
-        )
-        return t
-
-    seq = build(tmp_path / "seq")
-    seq.compact()
-    par = build(tmp_path / "par")
-    par.compact(max_concurrency=4)
-    a = sorted(map(tuple, seq.read_raw().select("k", "ver", "value").collect()))
-    b = sorted(map(tuple, par.read_raw().select("k", "ver", "value").collect()))
-    assert a == b and len(b) == 400
-    # every updated key keeps only its latest version
-    assert all(v == 2 for k, v, _ in b if k % 3 == 0)
-
-
 def test_hot_entities_audit(spark):
     rows = [(1, float(i)) for i in range(20)] + [(2, 1.0), (3, 2.0)]
     df = spark.createDataFrame(rows, "user_id long, value double")

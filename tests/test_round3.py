@@ -74,13 +74,10 @@ def test_capped_dedup_corpus_superset_of_uncapped(spark, sf_dir):
     """max_doc_freq can only DROP candidate pairs, so capped components
     refine the uncapped ones and every uncapped survivor also survives
     capped (the cap trades recall for bounded buckets, never precision)."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        dd8_capped_dedup_corpus,
-        dd8_dedup_corpus,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
-    capped = {r.doc_id for r in dd8_capped_dedup_corpus(spark, sf_dir).collect()}
-    uncapped = {r.doc_id for r in dd8_dedup_corpus(spark, sf_dir).collect()}
+    capped = {r.doc_id for r in QUERIES["dd8_capped_dedup_corpus"](spark, sf_dir).collect()}
+    uncapped = {r.doc_id for r in QUERIES["dd8_dedup_corpus"](spark, sf_dir).collect()}
     assert uncapped <= capped
 
 

@@ -389,13 +389,11 @@ def test_bigram_lm_score_reference(spark):
 
 
 def test_last_touch_attribution_uses_latest_click(spark):
-    from market_data_pipeline_spark.plans.driver_queries import (
-        e8_last_touch_attribution,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     out = {
         r["purchase_id"]: r
-        for r in e8_last_touch_attribution(spark, "/root/testdata/sf0.001").collect()
+        for r in QUERIES["e8_last_touch_attribution"](spark, "/root/testdata/sf0.001").collect()
     }
     assert out  # purchases exist at sf0.001
     for r in out.values():

@@ -655,11 +655,9 @@ def test_top_session_paths(spark):
 
 
 def test_point_in_time_join_never_leaks_future(spark, sf_dir):
-    from market_data_pipeline_spark.plans.driver_queries import (
-        fx2_point_in_time_join,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
-    out = fx2_point_in_time_join(spark, sf_dir).collect()
+    out = QUERIES["fx2_point_in_time_join"](spark, sf_dir).collect()
     assert out, "expected label rows"
     for r in out:
         if r["feature_date"] is not None:
@@ -669,9 +667,9 @@ def test_point_in_time_join_never_leaks_future(spark, sf_dir):
 
 
 def test_purged_split_embargo_semantics(spark, sf_dir):
-    from market_data_pipeline_spark.plans.driver_queries import smp8_purged_split
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
-    rows = smp8_purged_split(spark, sf_dir).collect()
+    rows = QUERIES["smp8_purged_split"](spark, sf_dir).collect()
     assert rows
     import datetime as dtt
 

@@ -313,13 +313,11 @@ def test_hll_day_overlap_within_error(spark):
     day-over-day distinct-user intersection within combined HLL error
     (~3 sketches x 0.8% at lg_k=14 — use a generous 5% + small absolute
     floor at these cardinalities)."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        apx6_hll_day_overlap,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
     from market_data_pipeline_spark.sources.catalog import load_table
 
     sf = "/root/testdata/sf0.001"
-    est = {r["day"]: r for r in apx6_hll_day_overlap(spark, sf).collect()}
+    est = {r["day"]: r for r in QUERIES["apx6_hll_day_overlap"](spark, sf).collect()}
     events = load_table(spark, sf, "events")
     days = events.select(F.to_date("ts").alias("day"), "user_id").distinct()
     a = days.alias("a")
@@ -492,75 +490,6 @@ def test_es_weighted_sample_matches_reference(spark):
     )
     got2 = weighted_sample_without_replacement(df2, F.col("w"), k=3).collect()
     assert [r["doc_id"] for r in got2] == [3]
-
-
-def test_ivf_index_persisted_probe_matches_transient(spark, tmp_path):
-    """A persisted IVF index probed from disk returns exactly the
-    transient knn_ivf results, and the probe's scan prunes to the probed
-    centroid partitions (partition filter visible in the plan)."""
-    from market_data_pipeline_spark.operators.similarity import (
-        build_ivf_index,
-        knn_ivf,
-        query_ivf_index,
-    )
-    from market_data_pipeline_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings")
-    cents = emb.filter(F.col("vec_id") < 8)
-    queries = emb.filter(F.col("vec_id").isin([0, 1, 2]))
-    path = str(tmp_path / "ivf")
-    build_ivf_index(emb, path, cents)
-
-    got = query_ivf_index(spark, path, queries, cents, k=5, n_probe=3)
-    want = knn_ivf(
-        emb, queries, k=5, n_centroids=8, n_probe=3, centroids=cents
-    )
-    as_set = lambda df: {
-        (r["query_id"], r["vec_id"], r["cosine"], r["rank"]) for r in df.collect()
-    }
-    assert as_set(got) == as_set(want) and len(as_set(got)) > 0
-
-    # partition pruning: the index scan's partition filter names centroid_id
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "centroid_id" in plan
-    import os
-
-    dirs = [d for d in os.listdir(path) if d.startswith("centroid_id=")]
-    assert len(dirs) == 8  # one inverted-list directory per centroid
-
-
-def test_ivf_index_incremental_append(spark, tmp_path):
-    """Appending new vectors to a persisted index makes them probeable
-    without rebuilding, and the combined index equals a from-scratch
-    build over the union."""
-    from market_data_pipeline_spark.operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-        query_ivf_index,
-    )
-    from market_data_pipeline_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings")
-    cents = emb.filter(F.col("vec_id") < 8)
-    old = emb.filter(F.col("vec_id") < 300)
-    new = emb.filter(F.col("vec_id") >= 300)
-    queries = emb.filter(F.col("vec_id").isin([0, 1]))
-
-    inc_path = str(tmp_path / "ivf_inc")
-    build_ivf_index(old, inc_path, cents)
-    append_to_ivf_index(new, inc_path, cents)
-
-    full_path = str(tmp_path / "ivf_full")
-    build_ivf_index(emb, full_path, cents)
-
-    as_set = lambda df: {
-        (r["query_id"], r["vec_id"], r["cosine"], r["rank"]) for r in df.collect()
-    }
-    got = as_set(query_ivf_index(spark, inc_path, queries, cents, k=5, n_probe=3))
-    want = as_set(query_ivf_index(spark, full_path, queries, cents, k=5, n_probe=3))
-    assert got == want and len(got) > 0
 
 
 def test_hashed_embedding_properties(spark):

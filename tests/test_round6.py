@@ -23,9 +23,7 @@ def test_hll_day_overlap_skips_calendar_gaps(spark, tmp_path):
     not the previous DAY — the old implementation emitted
     overlap_estimate == prev_day_users for the post-gap day. The fixed
     query must emit ONLY days whose previous calendar day exists."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        apx6_hll_day_overlap,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     def ts(day, hour, minute=0):
         return dt.datetime(2024, 1, day, hour, minute)
@@ -45,7 +43,7 @@ def test_hll_day_overlap_skips_calendar_gaps(spark, tmp_path):
         rows.append((eid, u, "view", ts(4, 9)))
     _write_events(spark, str(tmp_path), rows)
 
-    out = {r["day"]: r for r in apx6_hll_day_overlap(spark, str(tmp_path)).collect()}
+    out = {r["day"]: r for r in QUERIES["apx6_hll_day_overlap"](spark, str(tmp_path)).collect()}
     assert set(out) == {dt.date(2024, 1, 2)}, (
         "post-gap day must not be emitted", sorted(out)
     )
@@ -61,12 +59,10 @@ def test_k9_label_centroids_scalar_shape_and_values(spark, sf_dir):
     component) — no array column — and the exploded components must equal
     the array-form group_centroids exactly."""
     from market_data_pipeline_spark.operators.similarity import group_centroids
-    from market_data_pipeline_spark.plans.driver_queries import (
-        k9_label_centroids,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
     from market_data_pipeline_spark.sources.catalog import load_table
 
-    out = k9_label_centroids(spark, sf_dir)
+    out = QUERIES["k9_label_centroids"](spark, sf_dir)
     assert [f.name for f in out.schema.fields] == [
         "label", "n_vectors", "dim", "component",
     ]
@@ -278,9 +274,7 @@ def test_peak_concurrency_sweep(spark, tmp_path):
     peak at 3 concurrent; a lone event peaks at 1."""
     import datetime as dt
 
-    from market_data_pipeline_spark.plans.driver_queries import (
-        iv8_peak_concurrency,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     rows = [
@@ -295,7 +289,7 @@ def test_peak_concurrency_sweep(spark, tmp_path):
     )
     df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
     got = {r["event_type"]: r["peak_concurrency"] for r in
-           iv8_peak_concurrency(spark, str(tmp_path)).collect()}
+           QUERIES["iv8_peak_concurrency"](spark, str(tmp_path)).collect()}
     assert got == {"a": 3, "b": 1}
 
 
@@ -303,14 +297,12 @@ def test_keyset_pagination_is_contiguous(spark, sf_dir):
     """Page 3 via keyset must equal rows 101-150 of the global
     (o_totalprice DESC, o_orderkey) order — the seek method loses no row
     and duplicates no row at the cursor boundary."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        o2_keyset_pagination,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
     from market_data_pipeline_spark.sources.catalog import load_table
 
     got = [
         (r["o_orderkey"], r["o_totalprice"])
-        for r in o2_keyset_pagination(spark, sf_dir).collect()
+        for r in QUERIES["o2_keyset_pagination"](spark, sf_dir).collect()
     ]
     full = (
         load_table(spark, sf_dir, "orders")

@@ -167,11 +167,9 @@ def test_dq10_reconciliation_edges(spark, tmp_path):
     orders.write.parquet(f"{tmp_path}/orders.parquet")
     lineitem.write.parquet(f"{tmp_path}/lineitem.parquet")
 
-    from market_data_pipeline_spark.plans.driver_queries import (
-        dq10_order_price_reconciliation,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
-    out = {r["order_status"]: r for r in dq10_order_price_reconciliation(spark, str(tmp_path)).collect()}
+    out = {r["order_status"]: r for r in QUERIES["dq10_order_price_reconciliation"](spark, str(tmp_path)).collect()}
     assert out["O"]["n_reconciled"] == 1 and out["O"]["total_abs_diff"] == 0.0
     assert out["F"]["n_mismatched"] == 1
     assert out["F"]["total_abs_diff"] == pytest.approx(989.99, abs=1e-9)
@@ -231,14 +229,14 @@ def test_quantization_error_excludes_zero_vectors(spark):
 
 def test_doc_entropy_hand_computed(spark, tmp_path):
     """'a a b b' -> 2 bits? No: p=.5/.5 -> entropy 1.0; 'a a a a' -> 0."""
-    from market_data_pipeline_spark.plans.driver_queries import tx30_doc_entropy
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     docs = spark.createDataFrame(
         [(1, "a a b b", "en", "s1", 7), (2, "a a a a", "en", "s1", 7)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     docs.write.parquet(f"{tmp_path}/documents.parquet")
-    out = {r["doc_id"]: r for r in tx30_doc_entropy(spark, str(tmp_path)).collect()}
+    out = {r["doc_id"]: r for r in QUERIES["tx30_doc_entropy"](spark, str(tmp_path)).collect()}
     assert out[1]["n_tokens"] == 4 and out[1]["n_distinct"] == 2
     assert out[1]["entropy"] == 1.0
     assert out[2]["entropy"] == 0.0
@@ -248,7 +246,7 @@ def test_kaufman_er_straight_trend_is_one(spark, tmp_path):
     """Monotone series: net displacement == path length -> ER = 1.0;
     a perfect round trip -> ER = 0.0."""
     from market_data_pipeline_spark.operators import timeseries as _ts  # noqa: F401
-    from market_data_pipeline_spark.plans.driver_queries import ts48_kaufman_er
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     rows = []
     # symbol 1 trends 100 -> 104; symbol 2 goes 100 -> 102 -> 100
@@ -263,14 +261,14 @@ def test_kaufman_er_straight_trend_is_one(spark, tmp_path):
         "l_tax double, l_returnflag string, l_linestatus string, l_shipdate date",
     )
     li.write.parquet(f"{tmp_path}/lineitem.parquet")
-    out = {r["symbol"]: r for r in ts48_kaufman_er(spark, str(tmp_path)).collect()}
+    out = {r["symbol"]: r for r in QUERIES["ts48_kaufman_er"](spark, str(tmp_path)).collect()}
     assert out["1"]["efficiency_ratio"] == 1.0
     assert out["2"]["efficiency_ratio"] == 0.0
 
 
 def test_power_users_shares_sum_to_one(spark):
     from market_data_pipeline_spark.operators import events as _ev  # noqa: F401
-    from market_data_pipeline_spark.plans.driver_queries import e39_power_users
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
     import tempfile
 
     t = dt.datetime(2024, 1, 1, 9)
@@ -283,7 +281,7 @@ def test_power_users_shares_sum_to_one(spark):
             rows.append((eid, u, "x", t))
     path = tempfile.mkdtemp(prefix="e39_")
     _events(spark, rows).write.parquet(f"{path}/events.parquet")
-    out = e39_power_users(spark, path).orderBy("decile").collect()
+    out = QUERIES["e39_power_users"](spark, path).orderBy("decile").collect()
     assert len(out) == 10 and sum(r["n_users"] for r in out) == 20
     assert sum(r["events"] for r in out) == 210
     assert abs(sum(r["event_share"] for r in out) - 1.0) < 1e-5
@@ -294,9 +292,7 @@ def test_power_users_shares_sum_to_one(spark):
 def test_jaccard_histogram_buckets_partition_pairs(spark, tmp_path):
     """Histogram over threshold-0 candidates must cover every dd2-style
     pair exactly once, including the identical-doc pair in bucket 20."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        dd22_jaccard_histogram,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     docs = spark.createDataFrame(
         [
@@ -308,7 +304,7 @@ def test_jaccard_histogram_buckets_partition_pairs(spark, tmp_path):
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     docs.write.parquet(f"{tmp_path}/documents.parquet")
-    out = {r["bucket"]: r["n_pairs"] for r in dd22_jaccard_histogram(spark, str(tmp_path)).collect()}
+    out = {r["bucket"]: r["n_pairs"] for r in QUERIES["dd22_jaccard_histogram"](spark, str(tmp_path)).collect()}
     assert sum(out.values()) == 3  # (1,2) (1,3) (2,3); doc 4 never pairs
     assert out[20] == 1  # the identical pair at jaccard == 1.0
 
@@ -319,9 +315,7 @@ def test_jaccard_histogram_buckets_partition_pairs(spark, tmp_path):
 def test_oof_encoding_excludes_own_fold(spark, tmp_path):
     """Each (category, fold) mean must be computable from the other
     folds only: reconstruct from raw sums and compare."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        f16_oof_target_encoding,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
     from market_data_pipeline_spark.operators.text import kfold_assign
 
     rows = [
@@ -334,7 +328,7 @@ def test_oof_encoding_excludes_own_fold(spark, tmp_path):
         "o_totalprice double, o_orderdate date, o_orderpriority string",
     )
     orders.write.parquet(f"{tmp_path}/orders.parquet")
-    out = f16_oof_target_encoding(spark, str(tmp_path)).collect()
+    out = QUERIES["f16_oof_target_encoding"](spark, str(tmp_path)).collect()
 
     folds = {
         r["o_orderkey"]: r["fold"]
@@ -352,7 +346,7 @@ def test_oof_encoding_excludes_own_fold(spark, tmp_path):
 
 def test_variance_ratio_random_walk_near_one(spark, tmp_path):
     """An iid-increment log price: VR(5) ~ 1 (within sampling noise)."""
-    from market_data_pipeline_spark.plans.driver_queries import ts49_variance_ratio
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     rng = np.random.RandomState(3)
     logp = np.cumsum(rng.standard_normal(400) * 0.01) + 5
@@ -368,14 +362,14 @@ def test_variance_ratio_random_walk_near_one(spark, tmp_path):
         "l_tax double, l_returnflag string, l_linestatus string, l_shipdate date",
     )
     li.write.parquet(f"{tmp_path}/lineitem.parquet")
-    out = ts49_variance_ratio(spark, str(tmp_path)).collect()
+    out = QUERIES["ts49_variance_ratio"](spark, str(tmp_path)).collect()
     assert len(out) == 1
     assert 0.6 < out[0]["vr5"] < 1.5  # random walk: VR(5) concentrated near 1
 
 
 def test_ks_drift_identical_halves_is_zero(spark, tmp_path):
     """Same distribution in both periods -> binned KS exactly 0."""
-    from market_data_pipeline_spark.plans.driver_queries import dp6_ks_drift
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     rows = []
     k = 0
@@ -391,7 +385,7 @@ def test_ks_drift_identical_halves_is_zero(spark, tmp_path):
         "l_tax double, l_returnflag string, l_linestatus string, l_shipdate date",
     )
     li.write.parquet(f"{tmp_path}/lineitem.parquet")
-    out = dp6_ks_drift(spark, str(tmp_path)).collect()
+    out = QUERIES["dp6_ks_drift"](spark, str(tmp_path)).collect()
     assert len(out) == 1
     assert out[0]["ks_stat"] == 0.0
     assert out[0]["n_baseline"] == out[0]["n_current"] == 50
@@ -400,9 +394,7 @@ def test_ks_drift_identical_halves_is_zero(spark, tmp_path):
 def test_log_index_compounds_mean_returns(spark, tmp_path):
     """Two symbols with identical +1%/day returns -> mean ret 0.01/day,
     log level after d days = ln(100) + d*ln(1.01) (to fixed-point)."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        a24_equal_weight_index,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     rows = []
     for sym in (1, 2):
@@ -418,7 +410,7 @@ def test_log_index_compounds_mean_returns(spark, tmp_path):
         "l_tax double, l_returnflag string, l_linestatus string, l_shipdate date",
     )
     li.write.parquet(f"{tmp_path}/lineitem.parquet")
-    out = a24_equal_weight_index(spark, str(tmp_path)).collect()
+    out = QUERIES["a24_equal_weight_index"](spark, str(tmp_path)).collect()
     assert [r["n_symbols"] for r in out] == [2, 2, 2]
     for d, r in enumerate(out, start=1):
         mret = round(round(0.01000000000000001 * 1e9) + 0) / 1e9  # fp of the data's ret
@@ -450,9 +442,7 @@ def _li_frame(spark, tmp_path, series):
 def test_sortino_all_positive_is_null_and_sign(spark, tmp_path):
     """Monotone-up series (no downside) -> NULL sortino; a series with
     losses -> finite value with the sign of the mean return."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        ts50_sortino,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d0 = dt.date(2024, 1, 1)
     up = [(d0 + dt.timedelta(days=i), 100 * (1.01 ** i)) for i in range(40)]
@@ -461,22 +451,20 @@ def test_sortino_all_positive_is_null_and_sign(spark, tmp_path):
         for i in range(40)
     ]
     _li_frame(spark, tmp_path, {1: up, 2: mixed})
-    out = {r["symbol"]: r for r in ts50_sortino(spark, str(tmp_path)).collect()}
+    out = {r["symbol"]: r for r in QUERIES["ts50_sortino"](spark, str(tmp_path)).collect()}
     assert out["1"]["sortino"] is None
     assert out["2"]["sortino"] is not None
 
 
 def test_vocab_coverage_curve_monotone_and_complete(spark, tmp_path):
-    from market_data_pipeline_spark.plans.driver_queries import (
-        tx32_vocab_coverage_curve,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     docs = spark.createDataFrame(
         [(1, "a a a a b b c d", "en", "s", 1), (2, "a b b e", "en", "s", 1)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     docs.write.parquet(f"{tmp_path}/documents.parquet")
-    out = tx32_vocab_coverage_curve(spark, str(tmp_path)).collect()
+    out = QUERIES["tx32_vocab_coverage_curve"](spark, str(tmp_path)).collect()
     # vocab = {a:5, b:4, c:1, d:1, e:1}, total 12; checkpoints 1, 2, 5(=vocab)
     assert [r["vocab_size"] for r in out] == [1, 2, 5]
     assert [r["covered_tokens"] for r in out] == [5, 9, 12]
@@ -486,9 +474,7 @@ def test_vocab_coverage_curve_monotone_and_complete(spark, tmp_path):
 
 
 def test_status_change_rate_hand_computed(spark, tmp_path):
-    from market_data_pipeline_spark.plans.driver_queries import (
-        cdc5_status_change_rate,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     rows = []
     # cust 1: O O F O -> 2 changes; cust 2: F F -> 0 changes
@@ -501,7 +487,7 @@ def test_status_change_rate_hand_computed(spark, tmp_path):
         "o_orderkey long, o_custkey long, o_orderstatus string, "
         "o_totalprice double, o_orderdate date, o_orderpriority string",
     ).write.parquet(f"{tmp_path}/orders.parquet")
-    out = {r["n_changes"]: r["n_customers"] for r in cdc5_status_change_rate(spark, str(tmp_path)).collect()}
+    out = {r["n_changes"]: r["n_customers"] for r in QUERIES["cdc5_status_change_rate"](spark, str(tmp_path)).collect()}
     assert out == {0: 1, 2: 1}
 
 
@@ -510,9 +496,7 @@ def test_downside_beta_scaled_series_is_one(spark, tmp_path):
     equal-weight index is the same path up to scale, so every return
     matches the market return and downside beta is exactly 1.0. Prices
     are whole integers so the DECIMAL(18,2) index average is exact."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        ts51_downside_beta,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d0 = dt.date(2024, 1, 1)
     a, path = 200, []
@@ -527,7 +511,7 @@ def test_downside_beta_scaled_series_is_one(spark, tmp_path):
     )
     out = {
         r["symbol"]: r
-        for r in ts51_downside_beta(spark, str(tmp_path)).collect()
+        for r in QUERIES["ts51_downside_beta"](spark, str(tmp_path)).collect()
     }
     assert set(out) == {"1", "2"}
     # odd i (1,3,...,29) are the down steps -> 15 market down days
@@ -542,15 +526,13 @@ def test_new_highs_lows_monotone_paths(spark, tmp_path):
     only the 6 dates with a full 20-observation window emit rows, and
     each shows exactly one new high (the ascender) and one new low
     (the descender)."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        a26_new_highs_lows,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d0 = dt.date(2024, 1, 1)
     up = [(d0 + dt.timedelta(days=i), 100 + i) for i in range(25)]
     dn = [(d0 + dt.timedelta(days=i), 1000 - i) for i in range(25)]
     _li_frame(spark, tmp_path, {1: up, 2: dn})
-    out = a26_new_highs_lows(spark, str(tmp_path)).orderBy("trade_date").collect()
+    out = QUERIES["a26_new_highs_lows"](spark, str(tmp_path)).orderBy("trade_date").collect()
     assert len(out) == 6
     assert [r["trade_date"] for r in out] == [
         d0 + dt.timedelta(days=i) for i in range(19, 25)
@@ -560,9 +542,7 @@ def test_new_highs_lows_monotone_paths(spark, tmp_path):
 
 
 def test_hapax_by_source_hand_computed(spark, tmp_path):
-    from market_data_pipeline_spark.plans.driver_queries import (
-        tx33_hapax_by_source,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     docs = spark.createDataFrame(
         [
@@ -575,7 +555,7 @@ def test_hapax_by_source_hand_computed(spark, tmp_path):
     docs.write.parquet(f"{tmp_path}/documents.parquet")
     out = {
         r["source"]: r
-        for r in tx33_hapax_by_source(spark, str(tmp_path)).collect()
+        for r in QUERIES["tx33_hapax_by_source"](spark, str(tmp_path)).collect()
     }
     # s1: {a:2, b:1, c:1} -> vocab 3, total 4, hapax 2
     assert (
@@ -599,9 +579,7 @@ def test_hapax_by_source_hand_computed(spark, tmp_path):
 def test_doc_length_gini_known_values(spark, tmp_path):
     """Equal lengths -> gini 0 exactly; lengths 1,1,1,97 -> closed form
     2*(1+2+3+388)/(4*100) - 5/4 = 0.72."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        tx35_doc_length_gini,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     rows = (
         [(i, "t", "en", "even", 50) for i in range(4)]
@@ -614,7 +592,7 @@ def test_doc_length_gini_known_values(spark, tmp_path):
     ).write.parquet(f"{tmp_path}/documents.parquet")
     out = {
         r["source"]: r
-        for r in tx35_doc_length_gini(spark, str(tmp_path)).collect()
+        for r in QUERIES["tx35_doc_length_gini"](spark, str(tmp_path)).collect()
     }
     assert (out["even"]["n_docs"], out["even"]["total_chars"]) == (4, 200)
     assert out["even"]["length_gini"] == 0.0
@@ -624,9 +602,7 @@ def test_doc_length_gini_known_values(spark, tmp_path):
 
 def test_monthly_hhi_two_months(spark, tmp_path):
     """Jan: shares 75/25 -> HHI 0.625; Feb: 50/50 -> HHI 0.5 exactly."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        a27_monthly_hhi,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     jan, feb = dt.date(2024, 1, 10), dt.date(2024, 2, 10)
     _li_frame(
@@ -634,7 +610,7 @@ def test_monthly_hhi_two_months(spark, tmp_path):
         tmp_path,
         {1: [(jan, 75.0), (feb, 40.0)], 2: [(jan, 25.0), (feb, 40.0)]},
     )
-    out = {r["month"]: r for r in a27_monthly_hhi(spark, str(tmp_path)).collect()}
+    out = {r["month"]: r for r in QUERIES["a27_monthly_hhi"](spark, str(tmp_path)).collect()}
     assert (out["2024-01"]["n_symbols"], out["2024-01"]["hhi"]) == (2, 0.625)
     assert (out["2024-02"]["n_symbols"], out["2024-02"]["hhi"]) == (2, 0.5)
 
@@ -643,9 +619,7 @@ def test_readability_hand_computed(spark, tmp_path):
     """'The table runs. It works well!': 6 tokens, 2 sentences, 7 vowel
     groups -> FRE = 206.835 - 1.015*3 - 84.6*(7/6); a terminator-less
     doc scores as ONE sentence (3 words, 7 vowel groups)."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        tx36_readability,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     docs = spark.createDataFrame(
         [
@@ -655,7 +629,7 @@ def test_readability_hand_computed(spark, tmp_path):
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     docs.write.parquet(f"{tmp_path}/documents.parquet")
-    out = tx36_readability(spark, str(tmp_path)).collect()
+    out = QUERIES["tx36_readability"](spark, str(tmp_path)).collect()
     assert len(out) == 1 and out[0]["n_docs_scored"] == 2
     f1 = 206.835 - 1.015 * (6 / 2) - 84.6 * (7 / 6)
     f2 = 206.835 - 1.015 * (3 / 1) - 84.6 * (7 / 3)
@@ -667,9 +641,7 @@ def test_daily_error_rate_hand_computed(spark, tmp_path):
     """Day 1: 4 events (1 error) across users 1,2 with only user 1
     erroring -> rate 0.25, affected 1 of 2; day 2: no errors -> 0.0
     and affected 0."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        e42_daily_error_rate,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d1, d2 = dt.datetime(2024, 1, 1, 9), dt.datetime(2024, 1, 2, 9)
     rows = [
@@ -678,7 +650,7 @@ def test_daily_error_rate_hand_computed(spark, tmp_path):
         (5, 1, "view", d2), (6, 2, "purchase", d2),
     ]
     _events(spark, rows).write.parquet(f"{tmp_path}/events.parquet")
-    out = {r["day"]: r for r in e42_daily_error_rate(spark, str(tmp_path)).collect()}
+    out = {r["day"]: r for r in QUERIES["e42_daily_error_rate"](spark, str(tmp_path)).collect()}
     r1 = out[dt.date(2024, 1, 1)]
     assert (r1["n_events"], r1["n_errors"], r1["n_users"], r1["n_affected_users"]) == (4, 1, 2, 1)
     assert r1["error_rate"] == 0.25
@@ -689,9 +661,7 @@ def test_daily_error_rate_hand_computed(spark, tmp_path):
 def test_price_elasticity_exact_loglog_line(spark, tmp_path):
     """Quantities chosen so ln(q) = -2*ln(unit_price) + c exactly ->
     slope -2; a flat-demand brand (same q at all prices) -> slope 0."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        j13_price_elasticity,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     rows, k = [], 0
     # brand A: unit prices 2,4,8; q = 64/p^2 -> 16, 4, 1 (exact line)
@@ -712,7 +682,7 @@ def test_price_elasticity_exact_loglog_line(spark, tmp_path):
         [(1, "n1", "BRAND#A"), (2, "n2", "BRAND#B")],
         "p_partkey long, p_name string, p_brand string",
     ).write.parquet(f"{tmp_path}/part.parquet")
-    out = {r["brand"]: r for r in j13_price_elasticity(spark, str(tmp_path)).collect()}
+    out = {r["brand"]: r for r in QUERIES["j13_price_elasticity"](spark, str(tmp_path)).collect()}
     assert out["BRAND#A"]["n_lines"] == 3
     assert out["BRAND#A"]["elasticity"] == pytest.approx(-2.0, abs=1e-6)
     assert out["BRAND#B"]["elasticity"] == pytest.approx(0.0, abs=1e-6)
@@ -721,9 +691,7 @@ def test_price_elasticity_exact_loglog_line(spark, tmp_path):
 def test_sourcing_entropy_hand_computed(spark, tmp_path):
     """Customer 1 splits 50/50 across two nations -> entropy ln(2);
     customer 2 single-sources -> 0. Both in one segment -> avg."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        j14_sourcing_entropy,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d = dt.date(2024, 1, 1)
     spark.createDataFrame(
@@ -750,7 +718,7 @@ def test_sourcing_entropy_hand_computed(spark, tmp_path):
         [(1, "BUILDING"), (2, "BUILDING")],
         "c_custkey long, c_mktsegment string",
     ).write.parquet(f"{tmp_path}/customer.parquet")
-    out = j14_sourcing_entropy(spark, str(tmp_path)).collect()
+    out = QUERIES["j14_sourcing_entropy"](spark, str(tmp_path)).collect()
     assert len(out) == 1 and out[0]["n_customers"] == 2
     expected = (round(math.log(2) * 1e6) + 0) / 1e6 / 2
     assert out[0]["avg_sourcing_entropy"] == pytest.approx(expected, abs=1e-9)
@@ -759,9 +727,7 @@ def test_sourcing_entropy_hand_computed(spark, tmp_path):
 def test_price_dispersion_hand_computed(spark, tmp_path):
     """Part 1 sells at unit prices 10 and 20 -> ln(2); part 2 has one
     line (dropped); part 3 sells at one price twice -> ln(1) = 0."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        a28_price_dispersion,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d = dt.date(2024, 1, 1)
     spark.createDataFrame(
@@ -780,7 +746,7 @@ def test_price_dispersion_hand_computed(spark, tmp_path):
         [(1, "n", "B#A"), (2, "n", "B#A"), (3, "n", "B#B")],
         "p_partkey long, p_name string, p_brand string",
     ).write.parquet(f"{tmp_path}/part.parquet")
-    out = {r["brand"]: r for r in a28_price_dispersion(spark, str(tmp_path)).collect()}
+    out = {r["brand"]: r for r in QUERIES["a28_price_dispersion"](spark, str(tmp_path)).collect()}
     assert out["B#A"]["n_parts"] == 1  # part 2's single line dropped
     assert out["B#A"]["avg_log_price_range"] == pytest.approx(
         round(math.log(2) * 1e6) / 1e6, abs=1e-9
@@ -792,9 +758,7 @@ def test_return_rates_revenue_weighting(spark, tmp_path):
     """Brand A: the returned line carries 90 of 100 revenue cents ->
     line rate 0.5 but revenue rate 0.9 — the weighting the query
     exists to expose."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        a29_return_rates,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d = dt.date(2024, 1, 1)
     spark.createDataFrame(
@@ -809,7 +773,7 @@ def test_return_rates_revenue_weighting(spark, tmp_path):
     spark.createDataFrame(
         [(1, "n", "B#A")], "p_partkey long, p_name string, p_brand string"
     ).write.parquet(f"{tmp_path}/part.parquet")
-    out = a29_return_rates(spark, str(tmp_path)).collect()
+    out = QUERIES["a29_return_rates"](spark, str(tmp_path)).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["n_lines"], r["n_returned"], r["line_return_rate"]) == (2, 1, 0.5)
@@ -819,9 +783,7 @@ def test_return_rates_revenue_weighting(spark, tmp_path):
 def test_split_representativeness_identical_halves(spark, tmp_path):
     """Even and odd ids carry the SAME two vectors -> centroids equal ->
     cosine exactly 1.0; a label whose halves are orthogonal -> 0.0."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        k23_split_representativeness,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     rows = [
         # label 1: both parities average to (0.5, 0.5)
@@ -836,7 +798,7 @@ def test_split_representativeness_identical_halves(spark, tmp_path):
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
     out = {
         r["label"]: r
-        for r in k23_split_representativeness(spark, str(tmp_path)).collect()
+        for r in QUERIES["k23_split_representativeness"](spark, str(tmp_path)).collect()
     }
     assert (out[1]["n_even"], out[1]["n_odd"]) == (2, 2)
     assert out[1]["split_cosine"] == 1.0
@@ -846,9 +808,7 @@ def test_split_representativeness_identical_halves(spark, tmp_path):
 def test_supplier_risk_exposure_tiers(spark, tmp_path):
     """Supplier 1 (negative bal) carries 30 of 100 revenue cents;
     supplier 2 (healthy) carries 70 -> shares 0.3 / 0.7 exactly."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        j15_supplier_risk_exposure,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d = dt.date(2024, 1, 1)
     spark.createDataFrame(
@@ -865,7 +825,7 @@ def test_supplier_risk_exposure_tiers(spark, tmp_path):
     ).write.parquet(f"{tmp_path}/supplier.parquet")
     out = {
         r["tier"]: r
-        for r in j15_supplier_risk_exposure(spark, str(tmp_path)).collect()
+        for r in QUERIES["j15_supplier_risk_exposure"](spark, str(tmp_path)).collect()
     }
     assert set(out) == {"negative", "healthy"}
     assert (out["negative"]["n_suppliers"], out["negative"]["revenue_share"]) == (1, 0.3)
@@ -875,9 +835,7 @@ def test_supplier_risk_exposure_tiers(spark, tmp_path):
 def test_status_invariant_detects_violation(spark, tmp_path):
     """Order 1: declared F, all lines F -> consistent. Order 2:
     declared O but one line F (mixed) -> derived P, a violation."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        dq12_status_invariant,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d = dt.date(2024, 1, 1)
     # lines 1-2 -> order 1 (all F); lines 3-4 -> order 2 (mixed F/O)
@@ -896,7 +854,7 @@ def test_status_invariant_detects_violation(spark, tmp_path):
         [(1, 1, "F"), (2, 1, "O")],
         "o_orderkey long, o_custkey long, o_orderstatus string",
     ).write.parquet(f"{tmp_path}/orders.parquet")
-    out = {r["status"]: r for r in dq12_status_invariant(spark, str(tmp_path)).collect()}
+    out = {r["status"]: r for r in QUERIES["dq12_status_invariant"](spark, str(tmp_path)).collect()}
     assert (out["F"]["n_consistent"], out["F"]["n_violations"]) == (1, 0)
     assert (out["O"]["n_consistent"], out["O"]["n_violations"]) == (0, 1)
 
@@ -904,9 +862,7 @@ def test_status_invariant_detects_violation(spark, tmp_path):
 def test_margin_health_hand_computed(spark, tmp_path):
     """Retail 10: one line at unit 8 (below, markup -0.2), one at 15
     (above, +0.5) -> share 0.5, avg markup 0.15."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        a30_margin_health,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d = dt.date(2024, 1, 1)
     spark.createDataFrame(
@@ -923,7 +879,7 @@ def test_margin_health_hand_computed(spark, tmp_path):
         "p_partkey long, p_name string, p_brand string, p_type string, "
         "p_size int, p_retailprice double",
     ).write.parquet(f"{tmp_path}/part.parquet")
-    out = a30_margin_health(spark, str(tmp_path)).collect()
+    out = QUERIES["a30_margin_health"](spark, str(tmp_path)).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["n_lines"], r["n_below_retail"], r["below_retail_share"]) == (2, 1, 0.5)
@@ -934,9 +890,7 @@ def test_vol_regimes_tercile_split(spark, tmp_path):
     """Six months with strictly increasing |return| levels -> terciles
     of exactly 2 months each, regime_abs_ret strictly increasing and
     all up-shares 1.0 (monotone-up paths)."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        ts55_vol_regimes,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     series = []
     c = 100.0
@@ -946,7 +900,7 @@ def test_vol_regimes_tercile_split(spark, tmp_path):
             series.append((dt.date(2024, k, day), c))
             c *= 1 + 0.01 * k
     _li_frame(spark, tmp_path, {1: series})
-    out = ts55_vol_regimes(spark, str(tmp_path)).collect()
+    out = QUERIES["ts55_vol_regimes"](spark, str(tmp_path)).collect()
     assert [r["regime"] for r in out] == ["calm", "normal", "turbulent"]
     assert all(r["n_months"] == 2 for r in out)
     vals = [r["regime_abs_ret"] for r in out]
@@ -957,9 +911,7 @@ def test_vol_regimes_tercile_split(spark, tmp_path):
 def test_activity_streaks_islands(spark, tmp_path):
     """User 1: days 1,2,3 then 5,6 -> best 3; user 2: day 1 only ->
     best 1; multiple events in one day count once."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        e43_activity_streaks,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     def at(day, hour=9):
         return dt.datetime(2024, 1, day, hour)
@@ -973,7 +925,7 @@ def test_activity_streaks_islands(spark, tmp_path):
     _events(spark, rows).write.parquet(f"{tmp_path}/events.parquet")
     out = {
         r["streak_days"]: r["n_users"]
-        for r in e43_activity_streaks(spark, str(tmp_path)).collect()
+        for r in QUERIES["e43_activity_streaks"](spark, str(tmp_path)).collect()
     }
     assert out == {1: 1, 3: 1}
 
@@ -981,9 +933,7 @@ def test_activity_streaks_islands(spark, tmp_path):
 def test_new_vs_repeat_revenue_split(spark, tmp_path):
     """Customer 1 first orders in Jan (2 orders) and repeats in Feb;
     customer 2 is new in Feb -> Jan 100% new; Feb share = 30/(30+20)."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        a31_new_vs_repeat_revenue,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     spark.createDataFrame(
         [
@@ -997,7 +947,7 @@ def test_new_vs_repeat_revenue_split(spark, tmp_path):
     ).write.parquet(f"{tmp_path}/orders.parquet")
     out = {
         r["month"]: r
-        for r in a31_new_vs_repeat_revenue(spark, str(tmp_path)).collect()
+        for r in QUERIES["a31_new_vs_repeat_revenue"](spark, str(tmp_path)).collect()
     }
     jan, feb = out["2024-01"], out["2024-02"]
     assert (jan["n_orders"], jan["n_new_customer_orders"]) == (2, 2)
@@ -1011,9 +961,7 @@ def test_last_digit_bias_hand_computed(spark, tmp_path):
     """Totals 10,20,35,47: last digits 0,0,5,7 -> digit 0 share 0.5,
     deviation 2*10/4 - 1 = 4.0; digits 5 and 7 share 0.25 each,
     deviation 10/4 - 1 = 1.5."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        dq13_last_digit_bias,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     spark.createDataFrame(
         [
@@ -1025,7 +973,7 @@ def test_last_digit_bias_hand_computed(spark, tmp_path):
         "o_orderkey long, o_custkey long, o_orderstatus string, "
         "o_totalprice double, o_orderdate date, o_orderpriority string",
     ).write.parquet(f"{tmp_path}/orders.parquet")
-    out = {r["digit"]: r for r in dq13_last_digit_bias(spark, str(tmp_path)).collect()}
+    out = {r["digit"]: r for r in QUERIES["dq13_last_digit_bias"](spark, str(tmp_path)).collect()}
     assert set(out) == {0, 5, 7}
     assert (out[0]["n"], out[0]["observed_share"]) == (2, 0.5)
     assert out[0]["uniform_deviation"] == 4.0
@@ -1035,9 +983,7 @@ def test_last_digit_bias_hand_computed(spark, tmp_path):
 def test_listing_age_vol_buckets(spark, tmp_path):
     """Two symbols with constant |ret| 0.01 and 0.03; partkeys chosen
     so master assigns listing ages in different year buckets."""
-    from market_data_pipeline_spark.plans.driver_queries import (
-        a32_listing_age_vol,
-    )
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
 
     d0 = dt.date(2024, 1, 1)
     # master: listing_date = 1994-01-01 + (pk % 1000) days for pk % 5 != 0
@@ -1051,7 +997,7 @@ def test_listing_age_vol_buckets(spark, tmp_path):
     ).write.parquet(f"{tmp_path}/part.parquet")
     out = {
         r["age_years"]: r
-        for r in a32_listing_age_vol(spark, str(tmp_path)).collect()
+        for r in QUERIES["a32_listing_age_vol"](spark, str(tmp_path)).collect()
     }
     assert len(out) == 2
     ages = sorted(out)
