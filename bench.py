@@ -4,8 +4,12 @@
 Each query is forced end-to-end with a noop-format write (computes the
 full plan, no driver collect and no disk I/O in the measurement) and
 timed best-of-2. stdout gets two JSON lines: the full record
-{"metric", "value", "unit", "sf", "n_queries", "families", "queries"},
-then a short summary {"bench_total_sec", "n_queries", "sf"}.
+{"metric", "value", "unit", "sf", "n_queries", "compiles", "compile_s",
+"families", "queries"}, then a short summary {"bench_total_sec",
+"n_queries", "sf"}. Each ``queries`` entry is {"wall_s", "compiles",
+"compile_s"}: the best rep's wall time, and the Janino compiles (and
+their seconds) over all of the query's reps, i.e. its generated-code
+cache misses. ``compiles``/``compile_s`` at the top are the run totals.
 
     python bench.py 2>/dev/null | tail -1
 """
@@ -38,6 +42,15 @@ def family_subtotals(timings: dict[str, float]) -> dict[str, float]:
         fam = re.match(r"[a-z]+", name).group(0)
         fams[fam] = round(fams.get(fam, 0.0) + t, 2)
     return fams
+
+
+def codegen_counters(spark) -> tuple[int, float]:
+    """(Janino compiles, compile seconds) since the driver JVM started:
+    each compile is a miss of Spark's generated-class cache."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return compiles.getCount(), codegen.compileTime() / 1e9
 
 
 def main() -> None:
@@ -76,7 +89,9 @@ def main() -> None:
     import gc
 
     timings: dict[str, float] = {}
+    records: dict[str, dict] = {}
     for name, fn in QUERIES.items():
+        c0, s0 = codegen_counters(spark)
         reps = []
         for _ in range(2):
             t0 = time.perf_counter()
@@ -87,6 +102,12 @@ def main() -> None:
             fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
             reps.append(time.perf_counter() - t0)
         timings[name] = round(min(reps), 2)
+        c1, s1 = codegen_counters(spark)
+        records[name] = {
+            "wall_s": timings[name],
+            "compiles": c1 - c0,
+            "compile_s": round(s1 - s0, 3),
+        }
         # drop python-side DataFrame refs so the ContextCleaner can free
         # localCheckpoint blocks between queries — without this the block
         # manager grows monotonically over the 100+-query session and GC
@@ -112,8 +133,10 @@ def main() -> None:
             "unit": "sec",
             "sf": sf,
             "n_queries": len(timings),
+            "compiles": sum(r["compiles"] for r in records.values()),
+            "compile_s": round(sum(r["compile_s"] for r in records.values()), 2),
             "families": family_subtotals(timings),
-            "queries": timings,
+            "queries": records,
         },
         separators=(",", ":"),
     )

@@ -346,7 +346,7 @@ def cosine_near_dup_pairs(
     id_type = embeddings.schema[id_col].dataType.simpleString()
     thr, rd = float(threshold), round_digits
 
-    def confirm(key, pdf: "pd.DataFrame"):
+    def confirm(key, pdf):
         a_rows = pdf[pdf["_side"] == "a"]
         b_rows = pdf[pdf["_side"] == "b"]
         if a_rows.empty or b_rows.empty:
@@ -778,16 +778,21 @@ def kmeans_lloyd_exact(
     ``knn_ivf(..., centroids=...)`` unchanged.
     """
     spark = embeddings.sparkSession
-    # vec_col is a column NAME: quoted (backticks doubled) wherever it is
-    # parsed — as a column reference, in the schema, in the SQL text
+    # id_col and vec_col are column NAMES: quoted (backticks doubled)
+    # wherever they are parsed — as a column reference, in the SQL text
     vc = "`" + vec_col.replace("`", "``") + "`"
-    schema = f"{id_col} long, {vc} array<double>"
-    draw = F.md5(F.concat(F.lit(f"{seed}-"), F.col(id_col).cast("string")))
+    schema = T.StructType(
+        [
+            T.StructField(id_col, T.LongType()),
+            T.StructField(vec_col, T.ArrayType(T.DoubleType())),
+        ]
+    )
+    draw = F.md5(F.concat(F.lit(f"{seed}-"), col(id_col).cast("string")))
     src = embeddings.filter(
-        F.col(vc).isNotNull() & (F.size(F.col(vc)) > 0)
+        col(vec_col).isNotNull() & (F.size(col(vec_col)) > 0)
     ).select(
-        F.col(id_col),
-        F.transform(F.col(vc), lambda x: x.cast("double")).alias(vec_col),
+        col(id_col),
+        F.transform(col(vec_col), lambda x: x.cast("double")).alias(vec_col),
     )
     if sample_hex is not None and sample_hex < 16:
         hexdigits = [format(i, "x") for i in range(sample_hex)]
@@ -801,7 +806,7 @@ def kmeans_lloyd_exact(
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     exploded = None
     try:
-        seed_rows = src.orderBy(draw, F.col(id_col)).limit(k).collect()
+        seed_rows = src.orderBy(draw, col(id_col)).limit(k).collect()
         if not seed_rows:
             return spark.createDataFrame([], schema)
         cents: list[tuple[int, list]] = [
@@ -1212,7 +1217,7 @@ def knn_graph(
     id_type = embeddings.schema[id_col].dataType.simpleString()
     rd, kk = round_digits, k
 
-    def topk_block(key, pdf: "pd.DataFrame"):
+    def topk_block(key, pdf):
         a_rows = pdf[pdf["_side"] == "a"]
         b_rows = pdf[pdf["_side"] == "b"]
         if a_rows.empty or b_rows.empty:

@@ -38,3 +38,18 @@ def test_hostile_names_through_dedup_and_similarity(spark):
     )
     assert got.columns == ["rank", HOSTILE_ID, "relevance", "mmr_score"]
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_kmeans_lloyd_exact_dotted_id(spark):
+    """The k5 centroid fit reads, orders by and returns a dotted id
+    column as that column, and fits the same centroids as under a plain
+    name."""
+    vecs = [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(20)]
+    plain = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    dotted = plain.withColumnRenamed("vec_id", "v.id")
+    want = similarity.kmeans_lloyd_exact(plain, k=3, max_iter=2, sample_hex=None)
+    got = similarity.kmeans_lloyd_exact(
+        dotted, k=3, max_iter=2, id_col="v.id", sample_hex=None
+    )
+    assert got.columns == ["v.id", "embedding"]
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

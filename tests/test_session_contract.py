@@ -63,3 +63,34 @@ def test_repins_utc_on_frame_cache_hit(spark, sf_dir):
             assert spark.conf.get("spark.sql.session.timeZone") == "UTC", name
         finally:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+# perfbench's analytics_mix workload: six lazy queries served warm.
+WARM_MIX = [
+    "ts12_linear_trend",
+    "ts33_weekly_atr",
+    "ts15_calendar_fill",
+    "e13_bounce_rate",
+    "e9_markov_transitions",
+    "tx9_redact_pii",
+]
+
+
+def test_warm_pass_reuses_generated_code(spark, sf_dir):
+    """A pass of the same queries needs ~103 generated classes, more than
+    Spark's default generated-class cache holds (100): at that size every
+    warm pass evicted what the next one needed and recompiled ~58 classes
+    with Janino. get_spark sizes the cache to the registry, so a second
+    pass compiles (next to) nothing."""
+    from bench import codegen_counters
+    from market_data_pipeline_spark.plans.driver_queries import QUERIES
+
+    def run_pass():
+        for name in WARM_MIX:
+            QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+
+    run_pass()
+    before, _ = codegen_counters(spark)
+    run_pass()
+    after, _ = codegen_counters(spark)
+    assert after - before <= 2, f"{after - before} classes recompiled on a warm pass"
