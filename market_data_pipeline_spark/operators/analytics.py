@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from market_data_pipeline_spark.operators.util import ensure_parallelism
+
 
 def exact_sum(c: Column) -> Column:
     """Order-independent money sum: accumulate in DECIMAL(18,2), emit
@@ -1128,8 +1130,6 @@ def order_price_reconciliation(orders: DataFrame, lineitem: DataFrame) -> DataFr
     # exchange on the grouping key spreads it and is REUSED by the
     # groupBy (same key), so the exchange count is unchanged. No-op on
     # many-partition inputs; decimal sums are accumulation-order-free.
-    from market_data_pipeline_spark.operators.util import ensure_parallelism
-
     computed = ensure_parallelism(lineitem, "l_orderkey").groupBy("l_orderkey").agg(
         F.sum(
             F.col("l_extendedprice").cast("decimal(18,2)")

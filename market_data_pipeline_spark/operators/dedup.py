@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from market_data_pipeline_spark.operators.graph import _superstep
+from market_data_pipeline_spark.operators.text import tokens, words
 from market_data_pipeline_spark.operators.util import (
     col,
     ensure_parallelism,
@@ -71,9 +73,8 @@ def shingled(
     through a materialized column (two select stages — see
     :func:`shingles_from_tokens` for why)."""
     df = ensure_parallelism(df, id_col)
-    toks = F.split(F.lower(F.trim(col(text_col))), r"[ \t\n\x0B\f\r]+")
     keep = [col(c) for c in (id_col, *extra_cols)]
-    staged = df.select(*keep, toks.alias("_toks"))
+    staged = df.select(*keep, tokens(col(text_col)).alias("_toks"))
     return staged.select(
         *keep,
         shingles_from_tokens(F.col("_toks"), n).alias("shingles"),
@@ -354,9 +355,7 @@ def minhash_signatures(
     # empty tokens a leading/trailing non-space whitespace run produces.
     staged = ensure_parallelism(df, id_col).select(
         F.col(id_col),
-        F.array_remove(
-            F.split(F.lower(F.trim(F.col(text_col))), r"[ \t\n\x0B\f\r]+"), ""
-        ).alias("_toks"),
+        F.array_remove(tokens(F.col(text_col)), "").alias("_toks"),
     )
     return staged.select(F.col(id_col), sig_udf(F.col("_toks")).alias("sig"))
 
@@ -374,11 +373,9 @@ def distinct_ngrams(
     (dd16, dd18; r9 verdict #6 extraction). Grams stay raw strings
     because these consumers aggregate over the gram itself.
     Returns (carry_col, g)."""
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"[ \t\n\x0B\f\r]+"),
-        lambda x: x != "",
+    staged = df.select(carry_col, words(F.col(text_col)).alias("_t")).filter(
+        F.size("_t") >= n
     )
-    staged = df.select(carry_col, toks.alias("_t")).filter(F.size("_t") >= n)
     grams = F.transform(
         F.sequence(F.lit(0), F.size("_t") - n),
         lambda i: F.concat_ws(
@@ -575,9 +572,7 @@ def simhash(
 
     staged = ensure_parallelism(df, id_col).select(
         F.col(id_col),
-        F.array_remove(
-            F.split(F.lower(F.trim(F.col(text_col))), r"[ \t\n\x0B\f\r]+"), ""
-        ).alias("_toks"),
+        F.array_remove(tokens(F.col(text_col)), "").alias("_toks"),
     )
     return staged.select(F.col(id_col), fp_udf(F.col("_toks")).alias("fingerprint"))
 
@@ -903,8 +898,6 @@ def connected_components(
     """
     import logging
 
-    from market_data_pipeline_spark.operators.graph import _superstep
-
     a, b = F.col(left_col), F.col(right_col)
     # Both directions come from a map-side explode of ONE walk of
     # ``pairs``, not a union of two selects over it (union branches are
@@ -1101,11 +1094,8 @@ def remove_duplicate_spans(
     Returns (id_col, n_tokens, n_removed, cleaned_text) per doc with
     >= 1 token.
     """
-    from market_data_pipeline_spark.operators.text import tokens as _tokens
-
-    toks = F.filter(_tokens(F.col(text_col)), lambda t: t != "")
     staged = (
-        df.select(F.col(id_col), toks.alias("_toks"))
+        df.select(F.col(id_col), words(F.col(text_col)).alias("_toks"))
         .filter(F.size("_toks") >= 1)
         .localCheckpoint(eager=False)  # feeds occurrences AND the token
         # frame; one tokenize pass

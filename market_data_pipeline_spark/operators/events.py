@@ -12,10 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _exact_sum(c: Column) -> Column:
-    """Order-independent money sum: decimal accumulate, double out."""
-    return F.sum(c.cast("decimal(18,2)")).cast("double")
+from market_data_pipeline_spark.operators.analytics import exact_sum, global_ntile
 
 
 def tumbling_window(
@@ -38,7 +35,7 @@ def tumbling_window(
         )
         .agg(
             F.count("*").alias("n_events"),
-            _exact_sum(F.col(value_col)).alias("total_value"),
+            exact_sum(F.col(value_col)).alias("total_value"),
             F.min(value_col).alias("min_value"),
             F.max(value_col).alias("max_value"),
         )
@@ -64,7 +61,7 @@ def sliding_window(
         df.groupBy(win.alias("w"), *[F.col(k) for k in keys])
         .agg(
             F.count("*").alias("n_events"),
-            _exact_sum(F.col(value_col)).alias("total_value"),
+            exact_sum(F.col(value_col)).alias("total_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -118,7 +115,7 @@ def sessionize(
             F.min(ts_col).alias("session_start"),
             F.max(ts_col).alias("session_end"),
             F.count("*").alias("n_events"),
-            _exact_sum(F.col("value")).alias("total_value"),
+            exact_sum(F.col("value")).alias("total_value"),
         )
     )
 
@@ -613,8 +610,6 @@ def rfm_scores(
     Returns (key, recency_days, frequency, monetary, r_score, f_score,
     m_score).
     """
-    from market_data_pipeline_spark.operators.analytics import global_ntile
-
     # ONE walk of the event stream: the corpus-max anchor is the max of
     # the per-user maxes, so it derives from the (tiny, |users|-row)
     # per-user aggregate instead of a second full scan (r12 opt

@@ -26,7 +26,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from market_data_pipeline_spark.operators.util import col
+from market_data_pipeline_spark.operators.util import col, ensure_parallelism
+
+
+def _as_doubles(v: Column) -> Column:
+    """The array ``v`` with every component cast to double."""
+    return F.transform(v, lambda x: x.cast("double"))
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -105,14 +110,6 @@ def exact_sq_fold(terms: Column, scale: float) -> Column:
 _LITERAL_ARGMAX_TERMS = 200_000
 
 
-def _vec_lit(x) -> Column:
-    """One literal vector component; a None component becomes a NULL
-    double instead of crashing float() driver-side (the ivf_assign
-    NULL-centroid class, r7 ADVICE #1) — the cosine then folds to NULL,
-    which both engines rank NULLS LAST."""
-    return F.lit(float(x)) if x is not None else F.lit(None).cast("double")
-
-
 def _sql_dlit(x) -> str:
     """One double literal as SQL text, bit-exact.
 
@@ -120,7 +117,10 @@ def _sql_dlit(x) -> str:
     double in Python, and Java's ``Double.parseDouble`` is correctly
     rounded, so the JVM recovers the identical bits. The ``D`` suffix
     forces DOUBLE — a bare ``0.1`` literal is DECIMAL(1,1) in Spark SQL.
-    Non-finite values have no bare-literal spelling; CAST from string."""
+    Non-finite values have no bare-literal spelling; CAST from string.
+    A None component becomes a NULL double (the ivf_assign NULL-centroid
+    class, r7 ADVICE #1): the cosine then folds to NULL, which both
+    engines rank NULLS LAST."""
     if x is None:
         return "CAST(NULL AS DOUBLE)"
     x = float(x)
@@ -175,7 +175,7 @@ def knn_bruteforce(
     and golden hashes are stable across engines.
     Returns (id_col, cosine) ordered by (cosine desc, id).
     """
-    q = F.array(*[_vec_lit(x) for x in query_vec])
+    q = _vec_expr(query_vec)
     sim = cosine(F.col(vec_col), q)
     if round_digits is not None:
         sim = F.round(sim, round_digits)
@@ -210,7 +210,7 @@ def grouped_knn(
     BY cosine DESC NULLS LAST.
     Returns (group_col, id_col, cosine, rank 1..k).
     """
-    q = F.array(*[_vec_lit(x) for x in query_vec])
+    q = _vec_expr(query_vec)
     sim = cosine(F.col(vec_col), q)
     if round_digits is not None:
         sim = F.round(sim, round_digits)
@@ -271,9 +271,7 @@ def normalized(
     plain dot product. Materializing through a projection stops Catalyst
     from inlining (and so recomputing) the normalization into each use.
     """
-    from market_data_pipeline_spark.operators.util import ensure_parallelism
-
-    dd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    dd = _as_doubles(F.col(vec_col))
     staged = ensure_parallelism(df, id_col).select(
         F.col(id_col), *[F.col(c) for c in extra_cols], dd.alias("_dvec")
     )
@@ -289,6 +287,66 @@ def normalized(
         # components propagate to NULL similarities (filtered by any
         # threshold) instead of an ANSI DIVIDE_BY_ZERO crash
         F.transform(F.col("_dvec"), lambda x: F.try_divide(x, n)).alias("_nvec"),
+    )
+
+
+def _block_pair_cosines(
+    embeddings: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_blocks: int,
+    round_digits: int | None,
+    emit,
+    out_ids: tuple[str, str],
+) -> DataFrame:
+    """The blocked exact all-pairs harness of :func:`cosine_near_dup_pairs`
+    and :func:`knn_graph`. Vectors hash into ``n_blocks`` blocks; each of
+    the B(B+1)/2 block pairs (ba <= bb) is one shuffle group holding its
+    ``a`` rows (block ba) and ``b`` rows (block bb). Per group, one numpy
+    matmul ``A @ B.T / outer(|a|, |b|)``, rounded to ``round_digits``,
+    gives the cosine matrix C, and ``emit(key, C, ia, ib)`` turns it into
+    rows of (out_ids[0], out_ids[1], cosine) with the ids' type; ``key``
+    is (ba, bb) and ia/ib are the a/b ids. ``emit``'s name is the UDF
+    name in the plan."""
+    import numpy as np
+    import pandas as pd
+
+    staged = embeddings.select(
+        col(id_col).alias("_id"), _as_doubles(col(vec_col)).alias("_dvec")
+    ).withColumn("_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(n_blocks)).cast("int"))
+    block_pairs = embeddings.sparkSession.createDataFrame(
+        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
+        "ba int, bb int",
+    )
+    sa, sb = (
+        staged.join(F.broadcast(block_pairs), F.col("_blk") == F.col(blk)).select(
+            "ba", "bb", F.lit(side).alias("_side"), "_id", "_dvec"
+        )
+        for side, blk in (("a", "ba"), ("b", "bb"))
+    )
+    id_type = embeddings.schema[id_col].dataType.simpleString()
+
+    def group(key, pdf):
+        a_rows = pdf[pdf["_side"] == "a"]
+        b_rows = pdf[pdf["_side"] == "b"]
+        if a_rows.empty or b_rows.empty:
+            return pd.DataFrame({out_ids[0]: [], out_ids[1]: [], "cosine": []})
+        A = np.vstack(a_rows["_dvec"].to_numpy())
+        B = np.vstack(b_rows["_dvec"].to_numpy())
+        na = np.sqrt((A * A).sum(axis=1))
+        nb = np.sqrt((B * B).sum(axis=1))
+        C = (A @ B.T) / np.outer(na, nb)
+        if round_digits is not None:
+            C = np.round(C, round_digits)
+        return emit(key, C, a_rows["_id"].to_numpy(), b_rows["_id"].to_numpy())
+
+    group.__name__ = emit.__name__
+    return (
+        sa.unionByName(sb)
+        .groupBy("ba", "bb")
+        .applyInPandas(
+            group, f"{out_ids[0]} {id_type}, {out_ids[1]} {id_type}, cosine double"
+        )
     )
 
 
@@ -326,40 +384,9 @@ def cosine_near_dup_pairs(
     import numpy as np
     import pandas as pd
 
-    spark = embeddings.sparkSession
-    dd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    staged = embeddings.select(F.col(id_col).alias("_id"), dd.alias("_dvec")).withColumn(
-        "_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(n_blocks)).cast("int")
-    )
-    block_pairs = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "ba int, bb int",
-    )
-    sa = staged.join(F.broadcast(block_pairs), F.col("_blk") == F.col("ba")).select(
-        "ba", "bb", F.lit("a").alias("_side"), "_id", "_dvec"
-    )
-    sb = staged.join(F.broadcast(block_pairs), F.col("_blk") == F.col("bb")).select(
-        "ba", "bb", F.lit("b").alias("_side"), "_id", "_dvec"
-    )
-    both = sa.unionByName(sb)
+    thr = float(threshold)
 
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    thr, rd = float(threshold), round_digits
-
-    def confirm(key, pdf):
-        a_rows = pdf[pdf["_side"] == "a"]
-        b_rows = pdf[pdf["_side"] == "b"]
-        if a_rows.empty or b_rows.empty:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-        A = np.vstack(a_rows["_dvec"].to_numpy())
-        B = np.vstack(b_rows["_dvec"].to_numpy())
-        na = np.sqrt((A * A).sum(axis=1))
-        nb = np.sqrt((B * B).sum(axis=1))
-        C = (A @ B.T) / np.outer(na, nb)
-        if rd is not None:
-            C = np.round(C, rd)
-        ia = a_rows["_id"].to_numpy()
-        ib = b_rows["_id"].to_numpy()
+    def confirm(key, C, ia, ib):
         mask = C >= thr
         if key[0] == key[1]:
             # diagonal group: both sides hold the same block; keep each
@@ -372,9 +399,8 @@ def cosine_near_dup_pairs(
         hi = np.maximum(id_a, id_b)
         return pd.DataFrame({"vec_a": lo, "vec_b": hi, "cosine": C[ii, jj]})
 
-    return (
-        both.groupBy("ba", "bb")
-        .applyInPandas(confirm, f"vec_a {id_type}, vec_b {id_type}, cosine double")
+    return _block_pair_cosines(
+        embeddings, id_col, vec_col, n_blocks, round_digits, confirm, ("vec_a", "vec_b")
     )
 
 
@@ -700,7 +726,7 @@ def kmeans_centroids(
     if sample_fraction is not None and sample_fraction < 1.0:
         src = embeddings.sample(fraction=sample_fraction, seed=seed)
     feats = src.select(
-        array_to_vector(F.transform(col(vec_col), lambda x: x.cast("double"))).alias(
+        array_to_vector(_as_doubles(col(vec_col))).alias(
             "features"
         )
     )
@@ -792,7 +818,7 @@ def kmeans_lloyd_exact(
         col(vec_col).isNotNull() & (F.size(col(vec_col)) > 0)
     ).select(
         col(id_col),
-        F.transform(col(vec_col), lambda x: x.cast("double")).alias(vec_col),
+        _as_doubles(col(vec_col)).alias(vec_col),
     )
     if sample_hex is not None and sample_hex < 16:
         hexdigits = [format(i, "x") for i in range(sample_hex)]
@@ -1073,7 +1099,7 @@ def semantic_dedup(
 
     if centroids is None:
         centroids = embeddings.filter(F.col(id_col) < n_clusters)
-    dd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    dd = _as_doubles(F.col(vec_col))
     # assignment argmax inlined (same semantics as ivf_assign: rounded
     # cosine, lowest-centroid-id tiebreak) with the vector CARRIED through
     # the window — calling ivf_assign and re-joining embeddings for the
@@ -1183,54 +1209,19 @@ def knn_graph(
     import numpy as np
     import pandas as pd
 
-    spark = embeddings.sparkSession
-    dd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     # The graph is DEFINED over nonzero-norm vectors: a zero vector has
     # no direction, and its NaN cosines otherwise scramble the numpy
     # top-k while the SQL oracle emits NULL-cosine rows — neither is a
     # neighbor list (r7 zero-vector sweep). Oracles filter identically.
     nonzero = (
         F.aggregate(
-            F.transform(F.col(vec_col), lambda x: x.cast("double") * x.cast("double")),
+            F.transform(col(vec_col), lambda x: x.cast("double") * x.cast("double")),
             F.lit(0.0),
             lambda a, x: a + x,
         )
         > 0
     )
-    staged = embeddings.filter(nonzero).select(
-        F.col(id_col).alias("_id"), dd.alias("_dvec")
-    ).withColumn(
-        "_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(n_blocks)).cast("int")
-    )
-    block_pairs = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "ba int, bb int",
-    )
-    sa = staged.join(F.broadcast(block_pairs), F.col("_blk") == F.col("ba")).select(
-        "ba", "bb", F.lit("a").alias("_side"), "_id", "_dvec"
-    )
-    sb = staged.join(F.broadcast(block_pairs), F.col("_blk") == F.col("bb")).select(
-        "ba", "bb", F.lit("b").alias("_side"), "_id", "_dvec"
-    )
-    both = sa.unionByName(sb)
-
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    rd, kk = round_digits, k
-
-    def topk_block(key, pdf):
-        a_rows = pdf[pdf["_side"] == "a"]
-        b_rows = pdf[pdf["_side"] == "b"]
-        if a_rows.empty or b_rows.empty:
-            return pd.DataFrame({"src_id": [], "nbr_id": [], "cosine": []})
-        A = np.vstack(a_rows["_dvec"].to_numpy())
-        B = np.vstack(b_rows["_dvec"].to_numpy())
-        na = np.sqrt((A * A).sum(axis=1))
-        nb = np.sqrt((B * B).sum(axis=1))
-        C = (A @ B.T) / np.outer(na, nb)
-        if rd is not None:
-            C = np.round(C, rd)
-        ia = a_rows["_id"].to_numpy()
-        ib = b_rows["_id"].to_numpy()
+    def topk_block(key, C, ia, ib):
         frames = []
         # per-group top-k for BOTH directions (a rows see b candidates,
         # b rows see a candidates); the diagonal group covers one side
@@ -1249,7 +1240,7 @@ def knn_graph(
                 # the wrong cells — self-pairs with cosine 1.0 would
                 # survive and genuine pairs would be wrongly masked.
                 Mm[src[:, None] == nbr[None, :]] = -np.inf
-            take = min(kk, Mm.shape[1])
+            take = min(k, Mm.shape[1])
             idx = np.argpartition(-Mm, take - 1, axis=1)[:, :take]
             rows = np.repeat(np.arange(Mm.shape[0]), take)
             cols = idx.ravel()
@@ -1266,8 +1257,14 @@ def knn_graph(
             )
         return pd.concat(frames, ignore_index=True)
 
-    candidates = both.groupBy("ba", "bb").applyInPandas(
-        topk_block, f"src_id {id_type}, nbr_id {id_type}, cosine double"
+    candidates = _block_pair_cosines(
+        embeddings.filter(nonzero),
+        id_col,
+        vec_col,
+        n_blocks,
+        round_digits,
+        topk_block,
+        ("src_id", "nbr_id"),
     )
     w = Window.partitionBy("src_id").orderBy(F.desc("cosine"), F.col("nbr_id"))
     return (
@@ -1501,7 +1498,7 @@ def group_centroids(
     exploded = embeddings.select(
         F.col(group_col),
         F.posexplode(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
+            _as_doubles(F.col(vec_col))
         ).alias("_dim", "_v"),
     )
     per_dim = exploded.groupBy(group_col, "_dim").agg(
@@ -1859,7 +1856,7 @@ def pca_explained_variance(
 
     rows = (
         embeddings.select(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(vec_col)
+            _as_doubles(F.col(vec_col)).alias(vec_col)
         )
         .mapInPandas(partials, "n long, s array<double>, ss array<double>")
         .collect()
@@ -1930,7 +1927,7 @@ def quantization_error_stats(
     Returns (group_col, n_vectors, avg_l2_err, avg_rel_err).
     """
     dec = "decimal(38,0)"
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = _as_doubles(F.col(vec_col))
     vmx = embeddings.select(
         F.col(group_col), v.alias("_v")
     ).select(

@@ -11,6 +11,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from market_data_pipeline_spark.operators.analytics import global_ntile, global_rank
+from market_data_pipeline_spark.operators.util import ensure_parallelism
+
 # Per-language stopword marker lists for the n-gram/stopword heuristic.
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "in", "to", "is"],
@@ -26,6 +29,21 @@ TOKEN_PATTERN = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \t\n\x0B\f\r]"
 def tokens(text_col: Column) -> Column:
     """Whitespace tokens of trimmed, lowercased text."""
     return F.split(F.lower(F.trim(text_col)), r"[ \t\n\x0B\f\r]+")
+
+
+def words(text_col: Column) -> Column:
+    """:func:`tokens` without the empty strings that blank text and
+    leading non-space whitespace (trim strips spaces only) leave."""
+    return F.filter(tokens(text_col), lambda x: x != "")
+
+
+def sentences(text_col: Column) -> Column:
+    """Sentences of space-trimmed text: split on runs of ``.``, ``!`` and
+    ``?``, each piece trimmed, empty pieces dropped; case is kept."""
+    return F.filter(
+        F.transform(F.split(F.trim(text_col), r"[.!?]+"), lambda s: F.trim(s)),
+        lambda s: s != "",
+    )
 
 
 def token_count(text_col: Column) -> Column:
@@ -51,7 +69,7 @@ def exploded_words(
     return df.select(
         *carry_cols,
         F.explode_outer(
-            F.filter(tokens(F.col(text_col)), lambda t: t != "")
+            words(F.col(text_col))
         ).alias("word"),
     ).filter(F.col("word").isNotNull())
 
@@ -230,8 +248,6 @@ def tfidf_top_terms(
             ),
         )
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), "term")
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -303,8 +319,6 @@ def pack_sequences(
     greedy-concat semantics, not bin packing.
     Returns (id_col, shard, n_tokens, pack_no).
     """
-    from pyspark.sql import Window
-
     shard = F.substring(F.md5(F.col(id_col).cast("string").cast("binary")), 1, 1)
     staged = df.select(
         F.col(id_col),
@@ -470,10 +484,6 @@ def shuffle_shards(
     emitting rows in pos order).
     Returns (key, shard 1..n_shards, pos 1..shard_size).
     """
-    from pyspark.sql import Window
-
-    from market_data_pipeline_spark.operators.analytics import global_ntile
-
     h = F.md5(
         F.concat(F.lit(seed), F.lit(":"), F.col(key_col).cast("string")).cast("binary")
     )
@@ -531,8 +541,6 @@ def domain_quota_sample(
     selects byte-identical documents.
     Returns (key, group, size, cum_size) for kept rows.
     """
-    from pyspark.sql import Window
-
     h = F.md5(
         F.concat(F.lit(seed), F.lit(":"), F.col(key_col).cast("string")).cast("binary")
     )
@@ -621,7 +629,7 @@ def bm25_rank(
     """
     staged = df.select(
         F.col(id_col),
-        F.filter(tokens(F.col(text_col)), lambda t: t != "").alias("_toks"),
+        words(F.col(text_col)).alias("_toks"),
     )
     stats = staged.select(F.size("_toks").cast("long").alias("_dl")).agg(
         F.count(F.lit(1)).alias("_n_docs"),
@@ -708,7 +716,7 @@ def crossdoc_ngram_stats(
     Returns (id_col, n_grams, n_dup_grams, dup_frac) one row per doc with
     at least one n-gram.
     """
-    toks = F.filter(tokens(F.col(text_col)), lambda t: t != "")
+    toks = words(F.col(text_col))
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.size("_toks") - n + 1, F.lit(0))),
@@ -835,7 +843,7 @@ def bigram_lm_score(
     per-doc aggregate. Strings never shuffle, only 64-bit hashes.
     Returns (id_col, n_bigrams, avg_logprob rounded 6dp).
     """
-    toks = F.filter(tokens(F.col(text_col)), lambda t: t != "")
+    toks = words(F.col(text_col))
     exploded = (
         df.select(F.col(id_col), toks.alias("_toks"))
         .filter(F.size("_toks") >= 2)
@@ -896,10 +904,6 @@ def interleave_sources(
     is integer-ratio, so the key is engine-exact.
     Returns (key, group, shard 1..n_shards, pos within shard).
     """
-    from pyspark.sql import Window
-
-    from market_data_pipeline_spark.operators.analytics import global_ntile
-
     h = F.md5(
         F.concat(F.lit(seed), F.lit(":"), F.col(key_col).cast("string")).cast("binary")
     )
@@ -942,8 +946,6 @@ def negative_sampling(
     sampled rank.
     Returns (key, neg_idx 1..k, negative_id != key).
     """
-    from market_data_pipeline_spark.operators.analytics import global_rank
-
     ranks = global_rank(
         df.select(F.col(key_col)), [F.col(key_col)], out_col="_rank"
     ).localCheckpoint(eager=False)
@@ -1003,15 +1005,9 @@ def sentence_stats(
     Returns (id_col, n_sentences, avg_sentence_tokens,
     max_sentence_tokens) for docs with >= 1 sentence.
     """
-    sents = F.filter(
-        F.transform(
-            F.split(F.trim(F.col(text_col)), r"[.!?]+"), lambda s: F.trim(s)
-        ),
-        lambda s: s != "",
-    )
-    staged = df.select(F.col(id_col), sents.alias("_sents")).filter(
-        F.size("_sents") >= 1
-    )
+    staged = df.select(
+        F.col(id_col), sentences(F.col(text_col)).alias("_sents")
+    ).filter(F.size("_sents") >= 1)
     tok_counts = F.transform(
         F.col("_sents"), lambda s: F.size(F.split(s, r"[ \t\n\x0B\f\r]+"))
     )
@@ -1049,7 +1045,7 @@ def zipf_slope(
     string for a total order.
     Returns (group_col, n_tokens_fit, zipf_slope).
     """
-    toks = F.filter(tokens(F.col(text_col)), lambda t: t != "")
+    toks = words(F.col(text_col))
     freqs = (
         df.select(F.col(group_col), F.explode(toks).alias("_t"))
         .groupBy(group_col, "_t")
@@ -1152,8 +1148,6 @@ def bucketed_batches(
     sum distributed (no single-task window) and are md5-deterministic.
     Returns (id_col, length_bucket, shard, n_tokens, batch_no).
     """
-    from pyspark.sql import Window
-
     n_toks = token_count(F.col(text_col))
     bucket = F.lit(boundaries[-1])
     for b in reversed(boundaries):
@@ -1255,7 +1249,7 @@ def bpe_pair_counts(
     Returns (pair, n) the ``top_k`` most frequent, ordered (n desc,
     pair).
     """
-    toks = F.filter(tokens(F.col(text_col)), lambda t: t != "")
+    toks = words(F.col(text_col))
     pairs = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size("_toks") - 1, F.lit(0))),
         lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, 2)),
@@ -1392,8 +1386,6 @@ def hashed_embedding(
     import pandas as pd
     from pyspark.sql.pandas.functions import pandas_udf
 
-    from market_data_pipeline_spark.operators.util import ensure_parallelism
-
     def emb(tok_lists: pd.Series) -> pd.Series:
         memo: dict[str, tuple[int, int]] = {}
 
@@ -1433,9 +1425,7 @@ def hashed_embedding(
 
     staged = ensure_parallelism(docs, id_col).select(
         F.col(id_col),
-        F.array_remove(
-            F.split(F.lower(F.trim(F.col(text_col))), r"[ \t\n\x0B\f\r]+"), ""
-        ).alias("_toks"),
+        F.array_remove(tokens(F.col(text_col)), "").alias("_toks"),
     )
     return staged.select(
         F.col(id_col), emb_udf(F.col("_toks")).alias("embedding")
@@ -1528,12 +1518,8 @@ def bpe_train(
     import pandas as pd
     from pyspark.sql.pandas.functions import pandas_udf
 
-    words = (
-        df.select(
-            F.explode_outer(
-                F.filter(tokens(F.col(text_col)), lambda t: t != "")
-            ).alias("_w")
-        )
+    vocab = (
+        df.select(F.explode_outer(words(F.col(text_col))).alias("_w"))
         .filter(F.col("_w").isNotNull())
         .groupBy("_w")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -1547,7 +1533,7 @@ def bpe_train(
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
         pairs = (
-            words.select(
+            vocab.select(
                 F.posexplode(
                     F.expr(
                         "transform(slice(_syms, 1, size(_syms) - 1), "
@@ -1586,9 +1572,9 @@ def bpe_train(
 
         apply_merge.__annotations__ = {"col": pd.Series, "return": pd.Series}
         merge_udf = pandas_udf(apply_merge, "array<string>").asNondeterministic()
-        words = words.select(merge_udf(F.col("_syms")).alias("_syms"), "_n")
+        vocab = vocab.select(merge_udf(F.col("_syms")).alias("_syms"), "_n")
         if (rank + 1) % checkpoint_every == 0:
-            words = words.localCheckpoint()
+            vocab = vocab.localCheckpoint()
 
     return spark.createDataFrame(
         merges, "merge_rank long, left string, right string, pair_count long"
@@ -1602,13 +1588,9 @@ def vocab_coverage(docs: DataFrame, top_k: int = 100) -> DataFrame:
     (count-ordered, term tiebreak) broadcast against the exploded
     tokens — one corpus aggregate + one map-side membership join.
     Returns (doc_id, n_tokens, n_in_vocab, vocab_coverage)."""
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+"),
-        lambda x: x != "",
-    )
-    ex = docs.select("doc_id", F.explode_outer(toks).alias("term")).filter(
-        F.col("term").isNotNull()
-    )
+    ex = docs.select(
+        "doc_id", F.explode_outer(words(F.col("text"))).alias("term")
+    ).filter(F.col("term").isNotNull())
     top = (
         ex.groupBy("term")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -1699,6 +1681,7 @@ def doc_feature_matrix(docs: DataFrame) -> DataFrame:
     exact-integer ratios throughout.
     Returns (doc_id, lang, source, n_chars, n_tokens, mean_word_len,
     stop_ratio, novelty)."""
+    # dedup imports this module at its top, so this import stays local
     from market_data_pipeline_spark.operators.dedup import shingle_hash_docfreq
 
     toks = exploded_words(docs, carry_cols=("doc_id", "lang")).select(

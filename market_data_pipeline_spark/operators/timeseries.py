@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from market_data_pipeline_spark.operators.analytics import exact_avg, fp_sum
+
 
 def _series_window(partition_col: str, order_col: str) -> Window:
     return Window.partitionBy(partition_col).orderBy(order_col)
@@ -778,10 +780,7 @@ def seasonal_baseline(
     dow = F.dayofweek(F.col(order_col))
     staged = df.withColumn("dow", dow)
     base = staged.groupBy(partition_col, "dow").agg(
-        (
-            F.sum(F.col(value_col).cast("decimal(18,2)")).cast("double")
-            / F.count(value_col)
-        ).alias("dow_avg")
+        exact_avg(F.col(value_col)).alias("dow_avg")
     )
     return staged.join(base, [partition_col, "dow"]).withColumn(
         "seasonal_ratio",
@@ -1377,8 +1376,6 @@ def equal_weight_index(
     edge). Returns (date, n_symbols, log_index_level)."""
     import math
 
-    from market_data_pipeline_spark.operators.analytics import fp_sum
-
     d = returns.filter(F.col(ret_col).isNotNull()).groupBy(date_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_symbols"),
         (fp_sum(F.col(ret_col)) / F.count(F.lit(1))).alias("mret"),
@@ -1469,8 +1466,6 @@ def vol_regimes(
     through 1e-9 fixed-point sums.
     Returns (regime, n_months, regime_abs_ret, regime_up_share),
     ordered by tercile when sorted on the internal tercile upstream."""
-    from market_data_pipeline_spark.operators.analytics import fp_sum
-
     r = returns.filter(F.col(ret_col).isNotNull())
     d = r.groupBy(date_col).agg(
         F.count(F.lit(1)).alias("n"),
@@ -1520,8 +1515,6 @@ def listing_age_vol(
     means, broadcast master join, integer datediff bucketing, then one
     bucket aggregate re-fixed-pointing the per-symbol means — every
     float is fenced. Returns (age_years, n_symbols, avg_abs_ret)."""
-    from market_data_pipeline_spark.operators.analytics import fp_sum
-
     r = returns.filter(F.col(ret_col).isNotNull())
     sym = (
         r.groupBy("symbol")

@@ -9,39 +9,35 @@ with conditional aggregation instead of one count() action per rule.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from market_data_pipeline_spark.operators.quality import Expectation
 
 SYMBOL_RE = r"^\d{6}$"
 MIN_DATE = "1990-01-01"
 
 
-@dataclass(frozen=True)
-class Rule:
-    name: str
-    predicate: Column
-
-
-def symbol_rule(col: str = "symbol") -> Rule:
+def symbol_rule(col: str = "symbol") -> Expectation:
     """P2 — symbol is exactly 6 digits (reference:
     scripts/sync_delisted_stocks.py:63-67)."""
-    return Rule("valid_symbol", F.col(col).rlike(SYMBOL_RE))
+    return Expectation("valid_symbol", F.col(col).rlike(SYMBOL_RE))
 
 
-def name_rule(col: str = "name") -> Rule:
+def name_rule(col: str = "name") -> Expectation:
     """P4 — non-null, non-empty after trim (reference:
     scripts/sync_delisted_stocks.py:69-74)."""
     c = F.col(col)
-    return Rule("valid_name", c.isNotNull() & (F.length(F.trim(c)) > 0))
+    return Expectation("valid_name", c.isNotNull() & (F.length(F.trim(c)) > 0))
 
 
-def date_range_rule(col: str = "delisting_date") -> Rule:
+def date_range_rule(col: str = "delisting_date") -> Expectation:
     """P5 — 1990-01-01 <= d <= today (reference:
     scripts/sync_delisted_stocks.py:76-82)."""
     c = F.col(col)
-    return Rule("valid_date", c.isNotNull() & c.between(F.lit(MIN_DATE), F.current_date()))
+    return Expectation(
+        "valid_date", c.isNotNull() & c.between(F.lit(MIN_DATE), F.current_date())
+    )
 
 
 def required_columns(df: DataFrame, cols: list[str]) -> list[str]:
@@ -52,7 +48,7 @@ def required_columns(df: DataFrame, cols: list[str]) -> list[str]:
 
 def validate(
     df: DataFrame,
-    rules: list[Rule],
+    rules: list[Expectation],
     dedup_keys: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Apply all rules conjunctively; optionally dedup survivors by key

@@ -145,7 +145,7 @@ def tx5_vocabulary(spark, sf_dir):
     hash-agg shuffle with map-side partial aggregation, TakeOrdered."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode_outer(F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+")).alias("token")
+        F.explode_outer(tx.tokens(F.col("text"))).alias("token")
     ).filter(F.col("token").isNotNull() & (F.col("token") != ""))
     return (
         toks.groupBy("token")
@@ -232,7 +232,7 @@ def tx7_clean_corpus(spark, sf_dir):
     exact-dedup (keep lowest id per text) -> thresholds. One pipeline;
     the feature computation stays in one projection pass."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+")
+    toks = tx.tokens(F.col("text"))
     feat = docs.select(
         "doc_id",
         "lang",
@@ -1138,12 +1138,7 @@ def tx19_dup_sentences(spark, sf_dir):
     segmentation convention as tx14; all higher-order array expressions,
     map-only, no shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    sents = F.filter(
-        F.transform(
-            F.split(F.trim(F.col("text")), r"[.!?]+"), lambda s: F.trim(s)
-        ),
-        lambda s: s != "",
-    )
+    sents = tx.sentences(F.col("text"))
     staged = docs.select("doc_id", sents.alias("_s"))
     return staged.select(
         "doc_id",
@@ -1198,9 +1193,7 @@ def tx20_lexical_diversity(spark, sf_dir):
     sentence signal). Same whitespace tokenization as tx2/tx5; map-only
     higher-order array expressions, no shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+"), lambda x: x != ""
-    )
+    toks = tx.words(F.col("text"))
     staged = docs.select("doc_id", toks.alias("_t"))
     return staged.select(
         "doc_id",
@@ -1272,9 +1265,7 @@ def tx21_bigram_entropy(spark, sf_dir):
     is engine-identical despite ln()'s last-ulp drift; one (doc, gram)
     aggregate + one per-doc reduction."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+"), lambda x: x != ""
-    )
+    toks = tx.words(F.col("text"))
     staged = docs.select("doc_id", toks.alias("_t")).filter(F.size("_t") >= 2)
     grams = F.transform(
         F.sequence(F.lit(0), F.size("_t") - 2),
@@ -1319,9 +1310,7 @@ def tx22_keyword_in_context(spark, sf_dir):
     slice, map-only HOFs, one scan; 1-based positions match between
     engines by construction."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+"), lambda x: x != ""
-    )
+    toks = tx.words(F.col("text"))
     staged = docs.select("doc_id", toks.alias("_t")).select(
         "doc_id", "_t", F.array_position("_t", "customer").alias("pos")
     )
@@ -2007,11 +1996,7 @@ def tx36_readability(spark, sf_dir):
     degenerately (the a26 hazard, checked by inspection per
     BENCHNOTES); wordless docs are excluded via n_docs_scored."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.size(
-        F.filter(
-            F.split(F.lower(F.trim("text")), r"[ \t\n\x0B\f\r]+"), lambda x: x != ""
-        )
-    )
+    words = F.size(tx.words(F.col("text")))
     sentences = F.greatest(
         F.regexp_count("text", F.lit(r"[.!?]+")), F.lit(1)
     )

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from market_data_pipeline_spark.operators import dedup
-from market_data_pipeline_spark.operators.analytics import exact_avg
+from market_data_pipeline_spark.operators.analytics import exact_avg, exact_sum
 from market_data_pipeline_spark.operators.util import ensure_parallelism
 from market_data_pipeline_spark.sources.catalog import load_table, staged_frame
 
@@ -112,9 +112,7 @@ def _price_agg(li: DataFrame, symbols: list[str] | None) -> DataFrame:
     ).agg(
         F.max("l_extendedprice").alias("close_price"),
         F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("long").alias("volume"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("amount"),
+        exact_sum(F.col("l_extendedprice")).alias("amount"),
     )
 
 
@@ -274,9 +272,7 @@ def _symbol_totals(spark, sf_dir):
         p.join(F.broadcast(m.select("symbol", "market")), "symbol")
         .groupBy("market", "symbol")
         .agg(
-            F.sum(F.col("amount").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_amount")
+            exact_sum(F.col("amount")).alias("total_amount")
         )
     )
 

@@ -114,7 +114,7 @@ def e4_json_props(spark, sf_dir):
         (F.get_json_object("props", "$.k").cast("long") % 10).alias("k_bucket")
     ).agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
+        analytics.exact_sum(F.col("value")).alias("total_value"),
     )
 
 
@@ -1444,9 +1444,7 @@ def e33_daypart_rollup(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.countDistinct("user_id").cast("long").alias("n_users"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_value"),
+            analytics.exact_sum(F.col("value")).alias("total_value"),
         )
     )
 

@@ -15,7 +15,7 @@ import tempfile
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from market_data_pipeline_spark.operators import dedup
+from market_data_pipeline_spark.operators import dedup, text as tx
 from market_data_pipeline_spark.plans import pipelines as PL
 from market_data_pipeline_spark.plans.driver_queries import (
     SESSION_CTE,
@@ -213,7 +213,7 @@ def st7_streaming_ingest_dedup(spark, sf_dir):
         F.col("doc_id") % 5 == 0
     )
     seen = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 != 0)
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+")
+    toks = tx.tokens(F.col("text"))
     head_fp = F.md5(F.array_join(F.slice(toks, 1, 10), " ").cast("binary"))
     survivors = dedup.incremental_dedup(
         docs_stream, seen, fingerprint_col=head_fp

@@ -779,9 +779,7 @@ def j9_salted_join(spark, sf_dir):
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            analytics.exact_sum(F.col("o_totalprice")).alias("total_price"),
         )
     )
 
@@ -883,9 +881,7 @@ def j10_bloom_semi_join(spark, sf_dir):
         joined.groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
+            analytics.exact_sum(F.col("l_quantity")).alias("sum_qty"),
         )
     )
 
@@ -947,9 +943,7 @@ def j11_band_range_join(spark, sf_dir):
         joined.groupBy("band")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("revenue"),
+            analytics.exact_sum(F.col("l_extendedprice")).alias("revenue"),
         )
     )
 
@@ -1507,9 +1501,7 @@ def a16_monthly_momentum(spark, sf_dir):
     line every exchange report leads with."""
     p = price_frame(spark, sf_dir)
     m = p.groupBy(F.date_format("trade_date", "yyyy-MM").alias("month")).agg(
-        F.sum(F.col("amount").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("turnover")
+        analytics.exact_sum(F.col("amount")).alias("turnover")
     )
     w = Window.orderBy("month")
     return m.select(

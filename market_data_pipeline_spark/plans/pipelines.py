@@ -289,19 +289,12 @@ def prepare_corpus(
         kept = F.length(F.regexp_replace(F.col("text"), r"[^\x20-\x7E]", ""))
         q = q.filter(kept >= min_ascii_ratio * F.length(F.col("text")))
     if min_ttr is not None:
-        toks = F.filter(
-            F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+"), lambda x: x != ""
-        )
+        toks = tx.words(F.col("text"))
         q = q.filter(
             F.size(F.array_distinct(toks)) >= min_ttr * F.size(toks)
         )
     if max_dup_sentence_ratio is not None:
-        sents = F.filter(
-            F.transform(
-                F.split(F.trim(F.col("text")), r"[.!?]+"), lambda s: F.trim(s)
-            ),
-            lambda s: s != "",
-        )
+        sents = tx.sentences(F.col("text"))
         q = q.filter(
             (F.size(sents) == 0)
             | (

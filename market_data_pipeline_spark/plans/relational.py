@@ -156,9 +156,7 @@ def r7_grouping_sets(spark, sf_dir):
         )
         .agg(
             F.count("*").alias("n_items"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_qty"),
+            analytics.exact_sum(F.col("l_quantity")).alias("total_qty"),
         )
     )
 
@@ -190,7 +188,7 @@ def r4_pivot_market_year(spark, sf_dir):
     return (
         j.groupBy("market")
         .pivot("yr", [1995, 1996, 1997, 1998])
-        .agg(F.sum(F.col("amount").cast("decimal(18,2)")).cast("double"))
+        .agg(analytics.exact_sum(F.col("amount")))
     )
 
 
@@ -774,12 +772,7 @@ def apx4_heavy_hitters(spark, sf_dir):
     the 100 TB hot path, pinned by pytest against exact counts."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode_outer(
-            F.filter(
-                F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+"),
-                lambda t: t != "",
-            )
-        ).alias("token")
+        F.explode_outer(tx.words(F.col("text"))).alias("token")
     ).filter(F.col("token").isNotNull())
     # k == the summary's structural maximum (capacity x shards): asking
     # for more would silently return fewer rows than the contract names

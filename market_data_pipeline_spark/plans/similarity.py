@@ -876,7 +876,7 @@ def dd11_incremental_dedup(spark, sf_dir):
     corpus. Left anti on the hash via the fingerprint-store pattern; text
     never shuffles."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"[ \t\n\x0B\f\r]+")
+    toks = tx.tokens(F.col("text"))
     head_fp = F.md5(F.array_join(F.slice(toks, 1, 10), " ").cast("binary"))
     new_batch = docs.filter(F.col("doc_id") % 5 == 0)
     seen = docs.filter(F.col("doc_id") % 5 != 0)
@@ -1735,7 +1735,7 @@ def k19_dim_variance(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     ex = emb.select(
         F.posexplode(
-            F.transform(F.col("embedding"), lambda x: x.cast("double"))
+            similarity._as_doubles(F.col("embedding"))
         ).alias("dim", "v")
     ).select(
         F.col("dim").cast("long").alias("dim"),
@@ -1804,12 +1804,7 @@ def dd21_dup_provenance(spark, sf_dir):
     shuffle, text does not; the sentence-hash group table is the only
     join side and it is aggregated before joining."""
     docs = load_table(spark, sf_dir, "documents")
-    sents = F.filter(
-        F.transform(
-            F.split(F.trim(F.col("text")), r"[.!?]+"), lambda x: F.trim(x)
-        ),
-        lambda x: x != "",
-    )
+    sents = tx.sentences(F.col("text"))
     s = (
         docs.select("doc_id", "source", F.explode_outer(sents).alias("_s"))
         .filter(F.col("_s").isNotNull())
@@ -2080,7 +2075,7 @@ def k24_stratified_knn(spark, sf_dir):
         ).filter(F.lit(False))
     raw = qrow["embedding"]
     # NULL components (or a fully NULL embedding) pass through as None:
-    # grouped_knn's _vec_lit folds them to NULL cosines, which both
+    # grouped_knn's _vec_expr folds them to NULL cosines, which both
     # engines rank NULLS LAST — the oracle still emits rank<=3 rows per
     # label in that degenerate class (r8 ADVICE #1).
     qvec = (

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from market_data_pipeline_spark.operators.upsert import dedup_latest, insert_if_absent
+from market_data_pipeline_spark.sources.catalog import read_parquet_cached_schema
 
 
 def _link(src: str, dst: str) -> None:
@@ -97,10 +98,6 @@ class ParquetTable:
         repeated reads BETWEEN mutations — the upsert/validate/report
         chains read the same state several times per batch — skip the
         ~100ms per-call footer/listing work (r12, guide §1.2)."""
-        from market_data_pipeline_spark.sources.catalog import (
-            read_parquet_cached_schema,
-        )
-
         df = read_parquet_cached_schema(self.spark, self.path)
         return df.drop(self.partition_col) if self.partition_col else df
 

@@ -35,7 +35,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from market_data_pipeline_spark.operators.events import _exact_sum
+from market_data_pipeline_spark.operators.analytics import exact_sum
+from market_data_pipeline_spark.sources.catalog import (
+    ensure_session_defaults,
+    normalize_event_ts,
+    read_parquet_cached_schema,
+)
 
 
 def read_events_stream(
@@ -53,12 +58,6 @@ def read_events_stream(
     ``max_files_per_trigger`` splits the backfill into multiple
     micro-batches (used by tests to prove cross-batch state).
     """
-    from market_data_pipeline_spark.sources.catalog import (
-        ensure_session_defaults,
-        normalize_event_ts,
-        read_parquet_cached_schema,
-    )
-
     ensure_session_defaults(spark)
     path = os.path.join(sf_dir, "events.parquet")
     schema = read_parquet_cached_schema(spark, path).schema
@@ -82,10 +81,6 @@ def read_documents_stream(
     Batch-built operators that are stream-safe (map-only projections,
     stream-static joins like ``dedup.incremental_dedup``) compose onto
     this frame unchanged."""
-    from market_data_pipeline_spark.sources.catalog import (
-        read_parquet_cached_schema,
-    )
-
     path = os.path.join(sf_dir, "documents.parquet")
     schema = read_parquet_cached_schema(spark, path).schema
     reader = spark.readStream.schema(schema).option(
@@ -116,7 +111,7 @@ def streaming_tumbling(
         )
         .agg(
             F.count("*").alias("n_events"),
-            _exact_sum(F.col(value_col)).alias("total_value"),
+            exact_sum(F.col(value_col)).alias("total_value"),
             F.min(value_col).alias("min_value"),
             F.max(value_col).alias("max_value"),
         )
@@ -146,7 +141,7 @@ def streaming_sliding(
         .groupBy(F.window(F.col(ts_col), window_duration, slide_duration).alias("w"))
         .agg(
             F.count("*").alias("n_events"),
-            _exact_sum(F.col(value_col)).alias("total_value"),
+            exact_sum(F.col(value_col)).alias("total_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -182,7 +177,7 @@ def streaming_sessionize(
             F.min(ts_col).alias("session_start"),
             F.max(ts_col).alias("session_end"),
             F.count("*").alias("n_events"),
-            _exact_sum(F.col(value_col)).alias("total_value"),
+            exact_sum(F.col(value_col)).alias("total_value"),
         )
         .select(
             user_col, "session_start", "session_end", "n_events", "total_value"
@@ -759,7 +754,7 @@ def streaming_ingest_pipeline(
         )
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
-            _exact_sum(F.col("value")).alias("total_value"),
+            exact_sum(F.col("value")).alias("total_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),

@@ -6,7 +6,9 @@ Usage: python scripts/plan_dump.py SF_DIR [query ...] > plans.txt
        diff -u before.txt after.txt
 
 Masked: expression ids (``#123``, ``#123L``), RDD ids (``[12]`` after an
-RDD class name) and the random suffix of scratch directories.
+RDD class name), the random suffix of scratch directories, and the counter
+of lambda variables (``x_1#2`` -> ``x_N``). That counter is JVM-global, so
+without the mask one extra lambda in any query renumbers every later one.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ MASKS = (
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"(RDD)\[\d+\]"), r"\1[N]"),
     (re.compile(r"(/tmp/[A-Za-z0-9]+_)[A-Za-z0-9_]+"), r"\1X"),
+    (re.compile(r"\b([xyz])_\d+#N"), r"\1_N"),
 )
 
 

@@ -1,6 +1,6 @@
 """Column names are names: a caller's id or vector column whose name holds
-a backtick, a dot and a space reaches a dedup pair operator and a
-similarity operator as that literal column, never as a struct path or a
+a backtick, a dot and a space reaches a dedup pair operator and the
+similarity operators as that literal column, never as a struct path or a
 parse error, and the answers equal those under a plain name."""
 
 from __future__ import annotations
@@ -38,6 +38,14 @@ def test_hostile_names_through_dedup_and_similarity(spark):
     )
     assert got.columns == ["rank", HOSTILE_ID, "relevance", "mmr_score"]
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    for op, kw in (
+        (similarity.cosine_near_dup_pairs, {"threshold": 0.9}),
+        (similarity.knn_graph, {"k": 3}),
+    ):
+        want = sorted(map(tuple, op(plain, **kw).collect()))
+        got = op(hostile, id_col=HOSTILE_ID, vec_col=HOSTILE_VEC, **kw)
+        assert want and sorted(map(tuple, got.collect())) == want
 
 
 def test_kmeans_lloyd_exact_dotted_id(spark):

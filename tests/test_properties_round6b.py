@@ -8,25 +8,19 @@ from __future__ import annotations
 
 import datetime as dt
 import math
-from decimal import ROUND_HALF_UP, Decimal
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from market_data_pipeline_spark.operators import events as ev
 from market_data_pipeline_spark.operators import timeseries as tseries
+from prop_helpers import rhu as _rhu
 
 SET = settings(
     max_examples=30,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-
-
-def _rhu(x: float, digits: int = 0) -> float:
-    """Spark ROUND: shortest-repr decimal quantized HALF_UP."""
-    q = Decimal(1).scaleb(-digits)
-    return float(Decimal(repr(x)).quantize(q, ROUND_HALF_UP))
 
 
 # --- retention survival: exact integer contract -----------------------------

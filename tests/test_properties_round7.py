@@ -17,6 +17,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from prop_helpers import rhu as _rhu, write_lineitem as _write_lineitem
+
 SET = settings(
     max_examples=10,
     deadline=None,
@@ -25,12 +27,6 @@ SET = settings(
         HealthCheck.too_slow,
     ],
 )
-
-
-def _rhu(x: float, digits: int = 0) -> float:
-    """Spark ROUND on double: shortest-repr decimal quantized HALF_UP."""
-    q = Decimal(1).scaleb(-digits)
-    return float(Decimal(repr(x)).quantize(q, ROUND_HALF_UP))
 
 
 def _fp(x: float) -> int:
@@ -48,20 +44,6 @@ def _var_samp(xs: list[float]) -> float | None:
         return None
     m = sum(xs) / len(xs)
     return sum((x - m) ** 2 for x in xs) / (len(xs) - 1)
-
-
-def _write_lineitem(spark, tmp_path, pts):
-    """pts: list of (symbol:int, date, close:float) single-line days."""
-    rows = [
-        (i + 1, sym, 1, 1, 1.0, float(c), 0.0, 0.0, "N", "O", d)
-        for i, (sym, d, c) in enumerate(pts)
-    ]
-    spark.createDataFrame(
-        rows,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber long, "
-        "l_quantity double, l_extendedprice double, l_discount double, "
-        "l_tax double, l_returnflag string, l_linestatus string, l_shipdate date",
-    ).write.mode("overwrite").parquet(f"{tmp_path}/lineitem.parquet")
 
 
 # --- ts45_hurst_exponent -----------------------------------------------------
